@@ -6729,17 +6729,10 @@ def llm_clean_gate_fold(spark, sf_dir):
     against what the corpus kept). Every stage of the streaming gate's
     decision procedure is value-hash-checked end to end."""
 
-    from etl_tool_spark.llm.text import language_id, quality_features, tokens
-    from etl_tool_spark.streaming.dedup import land_clean_batch
+    from etl_tool_spark.streaming.dedup import _quality_filter, land_clean_batch
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    base = d.select("*", tokens(F.col("text")).alias("_toks"))
-    feats = quality_features(F.col("text"), toks=F.col("_toks"))
-    kept = (base.select("*", feats["quality_score"].alias("_q"),
-                        language_id(F.col("text"),
-                                    toks=F.col("_toks")).alias("_lang"))
-                .filter((F.col("_q") >= 0.5) & (F.col("_lang") != "und"))
-                .drop("_toks", "_q", "_lang"))
+    kept = _quality_filter(_docs(spark, sf_dir).select("doc_id", "text"),
+                           "text", 0.5)
     basedir = _scratch("etl_clean_gate_fold_")
     store, out = f"{basedir}/store", f"{basedir}/landed"
     land_clean_batch(kept.filter(F.col("doc_id") % 2 == 0), 0, store, out)

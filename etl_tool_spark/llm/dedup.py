@@ -512,111 +512,26 @@ def _jaccard_verify(hs_frame: DataFrame, cands: DataFrame, id_col: str,
                  .select("a", "b", F.round(jac, 6).alias("jaccard")))
 
 
-def _migrate_legacy_flat_store(spark, store_dir: str, id_col: str,
-                               num_hashes: int, bands: int) -> None:
-    """Migrate a store written by the pre-two-table revision (signature
-    part files directly under ``store_dir``) into the sig/ + bands/
-    layout. Without this, a legacy store was silently read as EMPTY
-    (first_batch=True) — duplicates against the previously ingested
-    corpus went undetected with no error. Migration rebuilds bands/ from
-    the legacy signatures with the CALLER's (num_hashes, bands), which
-    must match the parameters the legacy store was written with — the
-    same same-hash-family contract appends already require.
-
-    CRASH-IDEMPOTENT (round-4 advice): the round-4 form appended into
-    sig/ before removing the legacy parts, so a crash between the two
-    let a retry re-append the same signatures — silently doubled rows.
-    Now both tables are staged to temp paths and promoted with atomic
-    directory renames; legacy parts are removed only after both
-    promotions. A retry at ANY interruption point either redoes the
-    overwrite-mode staging (nothing promoted yet) or resumes the
-    remaining promotions/cleanup (sig/ present alongside legacy parts
-    can only mean an interrupted migration — the legacy writer predates
-    the sig/ layout)."""
-    import glob as _glob
+def _check_store_layout(store_dir: str) -> int:
+    """Refuse a minhash store of another layout before anything reads
+    or writes it, and return its pinned band-shard count. Flat part
+    files in the root are signatures of an earlier layout, or another
+    kind of store (an exact-dedup fingerprint store is flat): read as a
+    sig/ + bands/ store they would look EMPTY, and every duplicate of
+    their corpus would pass unflagged. An unpinned bands/ table is
+    refused by store.store_shards. One listing per call."""
     import os as _os
-    import shutil as _shutil
 
+    from etl_tool_spark.llm import store as _st
     from etl_tool_spark.util import require_local_store
 
     require_local_store(store_dir, "minhash signature store")
-    legacy = sorted(_glob.glob(_os.path.join(store_dir, "*.parquet")))
-    if not legacy:
-        return
-    sig_dir = _os.path.join(store_dir, "sig")
-    bands_dir = _os.path.join(store_dir, "bands")
-    stage_sig = _os.path.join(store_dir, "_migrate_sig")
-    stage_bands = _os.path.join(store_dir, "_migrate_bands")
-
-    def _finish() -> None:
-        if not _os.path.isdir(bands_dir) and _os.path.isdir(stage_bands):
-            _os.rename(stage_bands, bands_dir)
-        if not _os.path.isdir(bands_dir):
-            # staged bands lost mid-crash: rebuild from the promoted
-            # sig/ (atomic rename ⇒ it holds exactly the migrated rows)
-            from etl_tool_spark.llm import store as _st
-            _st.append_bands(
-                _band_frame(spark.read.parquet(sig_dir), id_col,
-                            num_hashes, bands),
-                bands_dir, ["_band", "_bucket"])
-        for part in legacy:
-            _os.remove(part)
-        for stale in (stage_sig, stage_bands):
-            _shutil.rmtree(stale, ignore_errors=True)
-
-    if _os.path.isdir(sig_dir):
-        _finish()   # interrupted earlier migration: resume after sig/
-        return
-    hs = spark.read.parquet(*legacy)
-    if set(hs.columns) != {id_col, "_hs"}:
+    if _st.flat_files(store_dir):
         raise ValueError(
-            f"incremental minhash store layout changed: {store_dir} holds "
-            f"flat part files with columns {sorted(hs.columns)} that are "
-            f"not a legacy ({id_col}, _hs) signature table — refusing to "
-            "guess; rebuild the store or migrate it manually")
-    hs.write.mode("overwrite").parquet(stage_sig)
-    from etl_tool_spark.llm import store as _st
-    _band_frame(spark.read.parquet(stage_sig), id_col, num_hashes, bands) \
-        .withColumn("_shard", _st.shard_col("_band", "_bucket")) \
-        .repartition(_st.band_shards(), F.col("_shard")) \
-        .write.mode("overwrite").partitionBy("_shard").parquet(stage_bands)
-    _os.rename(stage_sig, sig_dir)
-    _finish()
-
-
-def _append_and_pin(hs: DataFrame, store_dir: str, id_col: str,
-                    num_hashes: int, bands: int):
-    """Append a signature frame to the two-table store (sig/ + SHARDED
-    bands/, see llm/store.py) and return both sides re-read PINNED to
-    the just-written part files — hashing and banding execute exactly
-    once (during the writes); every later consumer scans parquet."""
-    import glob as _glob
-    import os as _os
-
-    from etl_tool_spark.llm import store as _st
-
-    spark = hs.sparkSession
-    sig_dir = _os.path.join(store_dir, "sig")
-    bands_dir = _os.path.join(store_dir, "bands")
-    _st.finish_pending_compaction(sig_dir)
-    pre_sig = set(_glob.glob(_os.path.join(sig_dir, "*.parquet")))
-    pre_band = set(_st.sharded_files(bands_dir))
-    hs.write.mode("append").parquet(sig_dir)
-    new_sig = sorted(set(_glob.glob(_os.path.join(sig_dir, "*.parquet")))
-                     - pre_sig)
-    hs = spark.read.parquet(*new_sig)
-    banded = _band_frame(hs, id_col, num_hashes, bands)
-    # the probe (shard set + row count) rides the bands append — the
-    # update-store incremental path previously paid it as its own job
-    probe = _st.append_bands(banded, bands_dir, ["_band", "_bucket"],
-                             probe=True)
-    new_band = sorted(set(_st.sharded_files(bands_dir)) - pre_band)
-    # a partitioned write of an EMPTY frame creates no shard dirs at
-    # all (unlike the flat layout's schema-only part file) — pin the
-    # schema, not a schema-less read
-    banded = (spark.read.parquet(*new_band) if new_band
-              else spark.createDataFrame([], banded.schema))
-    return hs, banded, probe
+            f"{store_dir} holds flat part files, not the sig/ + bands/ "
+            "minhash store layout (an earlier layout, or another kind of "
+            "store); rebuild the store")
+    return _st.store_shards(_os.path.join(store_dir, "bands"))
 
 
 def append_signatures(df: DataFrame, store_dir: str,
@@ -644,19 +559,17 @@ def append_signatures(df: DataFrame, store_dir: str,
     from etl_tool_spark.llm import store as _st
 
     spark = df.sparkSession
-    _migrate_legacy_flat_store(spark, store_dir, id_col, num_hashes, bands)
+    _check_store_layout(store_dir)
     sig_dir = _os.path.join(store_dir, "sig")
     bands_dir = _os.path.join(store_dir, "bands")
-    _st.ensure_sharded(
-        spark, bands_dir, ["_band", "_bucket"],
-        lambda: _band_frame(spark.read.parquet(sig_dir), id_col,
-                            num_hashes, bands))
     hs = (df.select(F.col(id_col), "_hs") if prehashed
           else df.select(F.col(id_col),
                          shingle_hashes(F.col(text_col), shingle_n)
                          .alias("_hs")))
     if banded is None:
-        _append_and_pin(hs, store_dir, id_col, num_hashes, bands)
+        _st.append_and_pin(hs, store_dir, "sig",
+                           lambda t: _band_frame(t, id_col, num_hashes, bands),
+                           ["_band", "_bucket"])
         return
     _st.finish_pending_compaction(sig_dir)
     _st.overlap_writes(
@@ -674,7 +587,6 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
                               max_bucket: int | None = None,
                               update_store: bool = True,
                               prehashed: bool = False,
-                              staging_dir: str | None = None,
                               banded_frame: DataFrame | None = None,
                               probe: tuple[list[int], int] | None = None
                               ) -> DataFrame:
@@ -734,15 +646,9 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
 
     from etl_tool_spark.llm import store as _st
 
-    _migrate_legacy_flat_store(spark, store_dir, id_col, num_hashes, bands)
+    n_shards = _check_store_layout(store_dir)
     sig_dir = _os.path.join(store_dir, "sig")
     bands_dir = _os.path.join(store_dir, "bands")
-    # flat two-table stores (pre-round-8, or a bands/ compacted without
-    # partition_by=['_shard']) reshard from the signature table once
-    _st.ensure_sharded(
-        spark, bands_dir, ["_band", "_bucket"],
-        lambda: _band_frame(spark.read.parquet(sig_dir), id_col,
-                            num_hashes, bands))
     _st.finish_pending_compaction(sig_dir)
     sig_files = sorted(_glob.glob(_os.path.join(sig_dir, "*.parquet")))
     band_files = _st.sharded_files(bands_dir)
@@ -761,8 +667,10 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
         # result all scan the store parquet instead of recomputing (the
         # same signatures-are-a-table shape minhash_dedup_pairs uses
         # via staging_dir).
-        hs_new, banded_new, staged_probe = _append_and_pin(
-            hs_new, store_dir, id_col, num_hashes, bands)
+        hs_new, banded_new, staged_probe = _st.append_and_pin(
+            hs_new, store_dir, "sig",
+            lambda t: _band_frame(t, id_col, num_hashes, bands),
+            ["_band", "_bucket"])
     elif banded_frame is not None:
         # FUSED gate staging: the caller wrote ONE staged table carrying
         # (id, _hs, _bands array) and passes the exploded band view plus
@@ -774,15 +682,6 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
         # every re-execution would re-run the minhash banding.
         staged_probe = probe
         banded_new = banded_frame
-    elif staging_dir:
-        # gate path: the batch's band keys feed the shard probe, the
-        # broadcast row gate, and the candidate join — staged once so
-        # none of those re-runs the minhash banding; the probe rides
-        # the staging write (store.stage_banded), zero extra jobs
-        staged_probe = _st.stage_banded(
-            _band_frame(hs_new, id_col, num_hashes, bands), staging_dir,
-            ["_band", "_bucket"])
-        banded_new = spark.read.parquet(staging_dir)
     else:
         banded_new = _band_frame(hs_new, id_col, num_hashes, bands)
         new_file_backed = False
@@ -794,9 +693,9 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
     else:
         # the store's banded table, pinned pre-append and PRUNED to the
         # shards the batch probes — old docs are never re-banded, and
-        # non-matching shard directories are never read (band_files can
-        # only be absent here if the store predates the bands/ table;
-        # rebuild from signatures then). The shard probe doubles as the
+        # non-matching shard directories are never read (band_files is
+        # empty only when every stored batch was empty; band the stored
+        # signatures then). The shard probe doubles as the
         # broadcast row gate's count — observed during the band write
         # when one ran (zero jobs), one aggregate job otherwise
         # (§1.2) — counted BEFORE any hot-bucket filtering, i.e. an
@@ -805,7 +704,8 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
         if band_files:
             shards, n_probe = (staged_probe if staged_probe is not None
                                else _st.probe_shards_and_count(
-                                   banded_new, ["_band", "_bucket"]))
+                                   banded_new, ["_band", "_bucket"],
+                                   n_shards))
             banded_old = _st.prune_to_shards(
                 _st.read_pinned(spark, bands_dir, band_files), shards)
         else:

@@ -544,45 +544,6 @@ def ivf_cell_stats(spark, index_dir: str) -> DataFrame:
                  .groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors")))
 
 
-def _append_and_pin_vec(vf: DataFrame, store_dir: str, id_col: str,
-                        vec_col: str, dim: int, bands: int,
-                        rows_per_band: int):
-    """Append a (id, vec, _norm) frame to the two-table embedding store
-    (vec/ + bands/) and return both sides re-read PINNED to the
-    just-written part files — the sign projection and norms execute
-    exactly once (during the writes); every later consumer scans
-    parquet. Same shape as llm/dedup.py's minhash store."""
-    import glob as _glob
-    import os as _os
-
-    from etl_tool_spark.util import require_local_store
-
-    require_local_store(store_dir, "embedding signature store")
-
-    from etl_tool_spark.llm import store as _st
-
-    spark = vf.sparkSession
-    vec_dir = _os.path.join(store_dir, "vec")
-    bands_dir = _os.path.join(store_dir, "bands")
-    _st.finish_pending_compaction(vec_dir)
-    pre_vec = set(_glob.glob(_os.path.join(vec_dir, "*.parquet")))
-    pre_band = set(_st.sharded_files(bands_dir))
-    vf.write.mode("append").parquet(vec_dir)
-    new_vec = sorted(set(_glob.glob(_os.path.join(vec_dir, "*.parquet")))
-                     - pre_vec)
-    vf = spark.read.parquet(*new_vec)
-    banded = _banded_keys(vf, id_col, vec_col, dim, bands, rows_per_band)
-    # the probe (shard set + row count) rides the bands append — the
-    # update-store incremental path previously paid it as its own job
-    probe = _st.append_bands(banded, bands_dir, ["_bkt"], probe=True)
-    new_band = sorted(set(_st.sharded_files(bands_dir)) - pre_band)
-    # empty partitioned writes create no shard dirs — pin the schema,
-    # not a schema-less read (llm/dedup.py _append_and_pin rationale)
-    banded = (spark.read.parquet(*new_band) if new_band
-              else spark.createDataFrame([], banded.schema))
-    return vf, banded, probe
-
-
 def _norm_frame(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return df.select(F.col(id_col), F.col(vec_col),
                      norm(F.col(vec_col)).alias("_norm"))
@@ -605,15 +566,20 @@ def append_embedding_signatures(df: DataFrame, store_dir: str,
     recompute."""
     import os as _os
 
+    from etl_tool_spark.llm import store as _st
     from etl_tool_spark.util import require_local_store
 
+    require_local_store(store_dir, "embedding signature store")
+    # refuse an unpinned bands/ table before the first write
+    _st.store_shards(_os.path.join(store_dir, "bands"))
     vf = df if prenormed else _norm_frame(df, id_col, vec_col)
     if banded is None:
-        _append_and_pin_vec(vf, store_dir, id_col, vec_col, dim, bands,
-                            rows_per_band)
+        _st.append_and_pin(
+            vf, store_dir, "vec",
+            lambda t: _banded_keys(t, id_col, vec_col, dim, bands,
+                                   rows_per_band),
+            ["_bkt"])
         return
-    require_local_store(store_dir, "embedding signature store")
-    from etl_tool_spark.llm import store as _st
     # two independent store tables → concurrent appends (§2.6); crash
     # anywhere leaves the batch unmarked and wholly replayed, the same
     # recovery as the sequential order (store.overlap_writes contract)
@@ -671,11 +637,7 @@ def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
 
     vec_dir = _os.path.join(store_dir, "vec")
     bands_dir = _os.path.join(store_dir, "bands")
-    # flat bands tables (pre-round-8 stores) reshard from vec/ once
-    _st.ensure_sharded(
-        spark, bands_dir, ["_bkt"],
-        lambda: _banded_keys(spark.read.parquet(vec_dir), id_col, vec_col,
-                             dim, bands, rows_per_band))
+    n_shards = _st.store_shards(bands_dir)
     _st.finish_pending_compaction(vec_dir)
     vec_files = sorted(_glob.glob(_os.path.join(vec_dir, "*.parquet")))
     band_files = _st.sharded_files(bands_dir)
@@ -685,8 +647,11 @@ def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
 
     staged_probe = None  # (shards, count) observed during a band write
     if update_store:
-        vf_new, banded_new, staged_probe = _append_and_pin_vec(
-            vf_new, store_dir, id_col, vec_col, dim, bands, rows_per_band)
+        vf_new, banded_new, staged_probe = _st.append_and_pin(
+            vf_new, store_dir, "vec",
+            lambda t: _banded_keys(t, id_col, vec_col, dim, bands,
+                                   rows_per_band),
+            ["_bkt"])
     elif staging_dir:
         # gate path, FUSED staging: ONE write carries (id, vector,
         # _norm, _bkts band-key array) — without staging the sign
@@ -707,7 +672,7 @@ def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
                                                      rows_per_band))
                        .drop("_bits"))
         observed, resolve = _st.fused_probe_observation(
-            fused, _st.shard_array(F.col("_bkts")))
+            fused, _st.shard_array(F.col("_bkts"), n_shards), n_shards)
         observed.write.mode("overwrite").parquet(staging_dir)
         staged_probe = resolve()
         staged = spark.read.parquet(staging_dir)
@@ -731,7 +696,7 @@ def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
         if band_files:
             shards, n_probe = (staged_probe if staged_probe is not None
                                else _st.probe_shards_and_count(
-                                   banded_new, ["_bkt"]))
+                                   banded_new, ["_bkt"], n_shards))
             banded_old = _st.prune_to_shards(
                 _st.read_pinned(spark, bands_dir, band_files), shards)
         else:

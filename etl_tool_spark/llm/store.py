@@ -2,38 +2,41 @@
 
 The minhash (llm/dedup.py) and embedding (llm/similarity.py) incremental
 stores keep their LSH band keys in an append-only parquet table that
-every micro-batch probes with an equi-join. The round-7 flat layout made
-that probe scan AND shuffle the ENTIRE store each batch — per-batch cost
-grew with corpus history, the one streaming-ingest scale risk left in
-the round-7 audit. The bands table is therefore hive-partitioned by a
-hash shard of the band key:
+every micro-batch probes with an equi-join. The table is
+hive-partitioned by a hash shard of the band key:
 
-    bands/_shard=K/part-*.parquet,   K = pmod(xxhash64(key cols), SHARDS)
+    bands/_shard=K/part-*.parquet,   K = pmod(xxhash64(key cols), n)
 
 which buys two things per micro-batch:
 
 * **Partition-pruned store reads** — the batch's band keys hash to a
-  bounded set of shards (collected driver-side, ≤ SHARDS values); the
-  store read filters on ``_shard`` and the file index prunes every
-  non-matching shard directory before a byte is read. A small batch
-  touches few shards.
+  bounded set of shards; the store read filters on ``_shard`` and the
+  file index prunes every non-matching shard directory before a byte is
+  read. A small batch touches few shards.
 * **Shuffle-free probes** — with the store side pruned, the batch side
-  (file-backed in every gate path) rides ``gated_broadcast``, so the
-  probe join is broadcast-hash against a pruned scan: the store is
-  never shuffled, and an oversized backfill batch falls back to
-  sort-merge via the row gate rather than an unbounded broadcast.
+  (file-backed in every gate path) rides a row-gated broadcast, so the
+  probe join is broadcast-hash against a pruned scan and the store is
+  never shuffled.
 
 A (band, bucket) group lives entirely in ONE shard (the shard is a pure
 function of the key columns), so bucket-population counts over a pruned
-read are exact for every bucket the batch can touch — the hot-bucket
-guards need no change.
+read are exact for every bucket the batch can touch.
 
-Shard count defaults to 32 — pruning granularity for the test/bench
-corpora without drowning local runs in tiny files — and scales with the
-env knob ``SPARK_GRAFT_BAND_SHARDS`` on a real cluster (e.g. 1024 at
-100 TB: finer pruning, still trivial listing; re-shard an existing
-store by deleting bands/ and letting migration rebuild it from the
-signature table).
+**One probe.** The batch's shard set and band-row count ride the write
+the batch pays anyway, as an Observation of ``bit_or`` bitmask longs
+(``fused_probe_observation``): the gates observe their staging write,
+whose rows carry an array of band keys; an append observes each band
+row as the one-element-array case. ``probe_shards_and_count`` is the
+one-job aggregate for a batch whose band keys were never written.
+
+**The shard count n is pinned per store.** The first append to a bands
+table writes n to the hidden ``_shard_count`` file in it; every later
+append and probe reads it from there, so a store keeps hashing keys to
+the directories they were written to whatever the environment says.
+``SPARK_GRAFT_BAND_SHARDS`` (default 32; e.g. 1024 at 100 TB) sizes NEW
+stores only. A bands table holding data without the file was written by
+an earlier layout and is refused; there is no in-place reshard — to
+change n, rebuild the store.
 """
 
 from __future__ import annotations
@@ -46,25 +49,44 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["band_shards", "shard_col", "sharded_files", "flat_files",
-           "append_bands", "read_pinned", "probe_shards",
-           "probe_shards_and_count", "stage_banded", "overlap_writes",
-           "shard_array", "fused_probe_observation",
-           "prune_to_shards", "ensure_sharded", "compact_dir",
+__all__ = ["band_shards", "store_shards", "shard_col", "sharded_files",
+           "flat_files", "append_bands", "append_and_pin", "read_pinned",
+           "probe_shards_and_count", "overlap_writes", "shard_array",
+           "fused_probe_observation", "prune_to_shards", "compact_dir",
            "compact_store", "partition_column", "finish_pending_compaction"]
+
+SHARD_COUNT_FILE = "_shard_count"
 
 
 def band_shards() -> int:
-    """Shard-count knob; read per call so tests can vary it. Invalid
-    values fall back to the default rather than wedging ingest."""
+    """Shard count for a NEW store; read per call so tests can vary it.
+    Invalid values fall back to the default rather than wedging ingest."""
     try:
         return max(1, int(os.environ.get("SPARK_GRAFT_BAND_SHARDS", "32")))
     except ValueError:
         return 32
 
 
-def shard_col(*cols: str | Column) -> Column:
-    return F.pmod(F.xxhash64(*cols), F.lit(band_shards())).cast("int")
+def store_shards(bands_dir: str) -> int:
+    """The shard count pinned in ``bands_dir``. A table with no data yet
+    answers ``band_shards()``, the count its first append pins. A table
+    holding data but no pinned count predates pinning: refused, since
+    guessing n would prune probes to the wrong shard directories."""
+    try:
+        with open(os.path.join(bands_dir, SHARD_COUNT_FILE),
+                  encoding="utf-8") as f:
+            return int(f.read())
+    except FileNotFoundError:
+        pass
+    if sharded_files(bands_dir) or flat_files(bands_dir):
+        raise ValueError(
+            f"{bands_dir} holds band keys without a pinned shard count "
+            "(an earlier store layout); rebuild the store")
+    return band_shards()
+
+
+def shard_col(*cols: str | Column, n: int) -> Column:
+    return F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
 
 
 def sharded_files(bands_dir: str) -> list[str]:
@@ -73,35 +95,69 @@ def sharded_files(bands_dir: str) -> list[str]:
     return sorted(glob.glob(os.path.join(bands_dir, "_shard=*", "*.parquet")))
 
 
-def flat_files(bands_dir: str) -> list[str]:
-    """Part files of the superseded flat layout (pre-shard stores, or a
-    bands directory compacted without ``partition_by=['_shard']``)."""
-    return sorted(glob.glob(os.path.join(bands_dir, "*.parquet")))
+def flat_files(d: str) -> list[str]:
+    """Part files directly under ``d`` (a flat table)."""
+    return sorted(glob.glob(os.path.join(d, "*.parquet")))
 
 
 def append_bands(banded: DataFrame, bands_dir: str,
                  key_cols: Sequence[str],
                  probe: bool = False) -> tuple[list[int], int] | None:
-    """Append ``banded`` under the sharded layout. The frame is
-    hash-repartitioned ON ``_shard`` before the partitioned write —
-    without it every input partition opens a writer per shard value it
-    holds (measured: 32 tasks × 32 shards = 1,024 files PER batch at
-    bench scale, and every later pinned probe re-lists and re-opens all
-    of them; llm_incremental_dedup went 2.6× slower the round sharding
-    landed, entirely on this). Repartitioned, an append emits at most
-    one file per (task, shard) ≈ one per shard, for one extra
-    batch-sized shuffle of narrow band rows.
+    """Append ``banded`` under the sharded layout, pinning the store's
+    shard count on its first append. The frame is hash-repartitioned ON
+    ``_shard`` before the partitioned write — without it every input
+    partition opens a writer per shard value it holds (measured: 32
+    tasks × 32 shards = 1,024 files PER batch at bench scale, and every
+    later pinned probe re-lists and re-opens all of them). Repartitioned,
+    an append emits at most one file per (task, shard) ≈ one per shard,
+    for one extra batch-sized shuffle of narrow band rows.
 
     ``probe=True`` additionally returns (probed shards, band-row count)
     observed during the write — the incremental update-store path's
-    probe job, folded into the append it already pays (guide §1.2)."""
-    sharded = banded.withColumn("_shard", shard_col(*key_cols))
+    probe, folded into the append it already pays (guide §1.2)."""
+    n = store_shards(bands_dir)
+    pin = os.path.join(bands_dir, SHARD_COUNT_FILE)
+    if not os.path.exists(pin):
+        os.makedirs(bands_dir, exist_ok=True)
+        with open(pin + ".tmp", "w", encoding="utf-8") as f:
+            f.write(str(n))
+        os.replace(pin + ".tmp", pin)
+    sharded = banded.withColumn("_shard", shard_col(*key_cols, n=n))
     resolve = None
     if probe:
-        sharded, resolve = _probe_observation(sharded, F.col("_shard"))
-    (sharded.repartition(band_shards(), F.col("_shard"))
+        sharded, resolve = fused_probe_observation(
+            sharded, F.array(F.col("_shard")), n)
+    (sharded.repartition(n, F.col("_shard"))
             .write.mode("append").partitionBy("_shard").parquet(bands_dir))
     return resolve() if resolve else None
+
+
+def append_and_pin(table: DataFrame, store_dir: str, table_name: str,
+                   band: Callable[[DataFrame], DataFrame],
+                   key_cols: Sequence[str]):
+    """Append ``table`` to ``store_dir/table_name`` and its band keys
+    (``band`` of the appended rows) to the sharded ``bands/`` table, and
+    return (rows, band rows, probe) re-read PINNED to the just-written
+    part files — hashing and banding execute exactly once (during the
+    writes); every later consumer scans parquet. The probe (shard set +
+    row count) rides the bands append."""
+    spark = table.sparkSession
+    table_dir = os.path.join(store_dir, table_name)
+    bands_dir = os.path.join(store_dir, "bands")
+    finish_pending_compaction(table_dir)
+    pre = set(flat_files(table_dir))
+    pre_band = set(sharded_files(bands_dir))
+    table.write.mode("append").parquet(table_dir)
+    table = spark.read.parquet(*sorted(set(flat_files(table_dir)) - pre))
+    banded = band(table)
+    probe = append_bands(banded, bands_dir, key_cols, probe=True)
+    new_band = sorted(set(sharded_files(bands_dir)) - pre_band)
+    # a partitioned write of an EMPTY frame creates no shard dirs at
+    # all (unlike a flat write's schema-only part file) — pin the
+    # schema, not a schema-less read
+    banded = (spark.read.parquet(*new_band) if new_band
+              else spark.createDataFrame([], banded.schema))
+    return table, banded, probe
 
 
 def read_pinned(spark: SparkSession, bands_dir: str,
@@ -112,69 +168,24 @@ def read_pinned(spark: SparkSession, bands_dir: str,
     return (spark.read.option("basePath", bands_dir).parquet(*files))
 
 
-def probe_shards(banded_new: DataFrame,
-                 key_cols: Sequence[str]) -> list[int]:
-    """The shards a batch's band keys hash into. The collect is bounded
-    by band_shards() rows — never batch-sized."""
-    return [r["_s"] for r in banded_new
-            .select(shard_col(*key_cols).alias("_s")).distinct().collect()]
-
-
-def probe_shards_and_count(banded_new: DataFrame,
-                           key_cols: Sequence[str]) -> tuple[list[int], int]:
-    """``probe_shards`` and the batch's band-row count from ONE job.
-
-    The incremental probe paths used to pay two driver round-trips per
-    micro-batch over the same staged band frame: the shard-set collect
-    and then ``gated_broadcast``'s row-count gate. A per-shard count
-    aggregate answers both (collect stays bounded by band_shards()
-    rows), halving the pre-join job latency every batch pays
-    (optimization guide §1.2: fewer passes)."""
-    rows = (banded_new.groupBy(shard_col(*key_cols).alias("_s"))
+def probe_shards_and_count(banded_new: DataFrame, key_cols: Sequence[str],
+                           n: int) -> tuple[list[int], int]:
+    """The shards a batch's band keys hash into and its band-row count,
+    from ONE aggregate job — for a batch whose band keys no write
+    observed. The collect is bounded by ``n`` rows, never batch-sized."""
+    rows = (banded_new.groupBy(shard_col(*key_cols, n=n).alias("_s"))
                       .agg(F.count(F.lit(1)).alias("_n")).collect())
     return [r["_s"] for r in rows], sum(r["_n"] for r in rows)
 
 
-def _probe_observation(banded: DataFrame, shard: Column):
-    """Attach an Observation computing (probed shard set, row count) to
-    a band frame about to be WRITTEN: the next step past
-    probe_shards_and_count — the probe stops being its own job at all
-    and rides the write the batch pays anyway (guide §1.2). Returns
-    (observed frame, resolver); call the resolver AFTER the write.
-    ``collect_set`` stays bounded by band_shards() values per task."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = banded.observe(
-        obs, F.collect_set(shard).alias("_s"),
-        F.count(F.lit(1)).alias("_n"))
-
-    def resolve() -> tuple[list[int], int]:
-        m = obs.get
-        return sorted(m["_s"] or []), int(m["_n"])
-
-    return observed, resolve
-
-
-def stage_banded(banded: DataFrame, staging_dir: str,
-                 key_cols: Sequence[str]) -> tuple[list[int], int]:
-    """Overwrite-write a gate batch's band keys to ``staging_dir`` and
-    return (probed shards, band-row count) observed DURING that write —
-    zero extra jobs where the gate paths previously paid a separate
-    probe collect per micro-batch."""
-    observed, resolve = _probe_observation(banded, shard_col(*key_cols))
-    observed.write.mode("overwrite").parquet(staging_dir)
-    return resolve()
-
-
-def shard_array(keys_arr: Column, with_index: bool = False) -> Column:
-    """Per-row shard ids of an ARRAY of band keys — the fused-staging
-    twin of ``shard_col``. With ``with_index=True`` each element hashes
-    as (array index, element), exactly what ``shard_col("_band",
+def shard_array(keys_arr: Column, n: int, with_index: bool = False) -> Column:
+    """Per-row shard ids of an ARRAY of band keys — the array twin of
+    ``shard_col``. With ``with_index=True`` each element hashes as
+    (array index, element), exactly what ``shard_col("_band",
     "_bucket")`` computes on the posexploded rows (the HOF index
     variable is IntegerType, matching posexplode's position column, so
     xxhash64 sees identical input types — pinned by test)."""
-    s = F.lit(band_shards())
+    s = F.lit(n)
     if with_index:
         return F.transform(keys_arr,
                            lambda x, i: F.pmod(F.xxhash64(i, x), s)
@@ -195,18 +206,18 @@ def _row_shard_mask(shards_arr: Column, k: int) -> Column:
                             (s - F.lit(lo)).cast("int"))))
 
 
-def fused_probe_observation(staged: DataFrame, shards_arr: Column):
-    """Shard probe riding a FUSED staging write: ``staged`` is a
-    per-document frame carrying its band keys as an array column (the
-    gates' one-write staging), ``shards_arr`` the matching per-row
-    shard-id array (``shard_array``). Attaches an Observation computing
-    (probed shard set, band-row count) as ``bit_or`` bitmask longs —
-    ceil(band_shards()/64) fixed-width values per task, never a
-    collection that grows with the batch. Returns (observed frame,
-    resolver); call the resolver AFTER the write."""
+def fused_probe_observation(staged: DataFrame, shards_arr: Column, n: int):
+    """The shard probe, riding a write: ``staged`` is the frame about to
+    be written, ``shards_arr`` its per-row array of shard ids in [0, n)
+    (``shard_array``; a frame with one band key per row passes a
+    one-element array). Attaches an Observation computing (probed shard
+    set, band-row count) as ``bit_or`` bitmask longs — ceil(n/64)
+    fixed-width values per task, never a collection that grows with the
+    batch. Returns (observed frame, resolver); call the resolver AFTER
+    the write."""
     from pyspark.sql import Observation
 
-    n_masks = (band_shards() + 63) // 64
+    n_masks = (n + 63) // 64
     obs = Observation()
     observed = staged.observe(
         obs,
@@ -273,44 +284,6 @@ def prune_to_shards(banded_old: DataFrame, shards: Sequence[int]) -> DataFrame:
                       .drop("_shard"))
 
 
-def ensure_sharded(spark: SparkSession, bands_dir: str,
-                   key_cols: Sequence[str],
-                   rebuild: Callable[[], DataFrame]) -> None:
-    """Migrate a flat bands table into the sharded layout.
-
-    The rebuild source is the AUTHORITATIVE signature table (via
-    ``rebuild()``), never the flat band files themselves — so the
-    migration is crash-idempotent: a retry at any interruption point
-    either re-stages from the unchanged signatures (flat files still
-    present) or resumes promoting a fully-staged copy (flat files gone,
-    stage directory present). Flat band files are only removed after
-    the staged copy is completely written.
-    """
-    finish_pending_compaction(bands_dir)
-    staged = bands_dir.rstrip("/") + "_reshard"
-    flat = flat_files(bands_dir)
-    if flat:
-        (rebuild().withColumn("_shard", shard_col(*key_cols))
-                  .repartition(band_shards(), F.col("_shard"))
-                  .write.mode("overwrite").partitionBy("_shard")
-                  .parquet(staged))
-        for f in flat_files(bands_dir):  # re-glob: idempotent on retry
-            os.remove(f)
-    elif not os.path.isdir(staged):
-        return
-    # promote: merge-move each staged shard dir (rename per part file —
-    # a shard dir may already exist if an append ran between a crashed
-    # promotion and this retry)
-    for shard_dir in glob.glob(os.path.join(staged, "_shard=*")):
-        dst = os.path.join(bands_dir, os.path.basename(shard_dir))
-        os.makedirs(dst, exist_ok=True)
-        for part in os.listdir(shard_dir):
-            if part.endswith(".parquet"):
-                os.rename(os.path.join(shard_dir, part),
-                          os.path.join(dst, part))
-    shutil.rmtree(staged, ignore_errors=True)
-
-
 # ---------------------------------------------------------------------------
 # Compaction: bounding file counts for long-lived stores
 # ---------------------------------------------------------------------------
@@ -321,7 +294,7 @@ def ensure_sharded(spark: SparkSession, bands_dir: str,
 # files (flat) during a maintenance window between batches.
 #
 # Raw parquet has no transaction log, so crash safety comes from the
-# same discipline as ensure_sharded: nothing in the live directory is
+# discipline of a staged copy: nothing in the live directory is
 # deleted until a complete staged copy exists, and the promotion step
 # is driven by a MANIFEST of exactly the files the staged copy
 # replaces — so a batch that appends between a crashed promotion and
@@ -471,11 +444,6 @@ def compact_store(spark: SparkSession, store_dir: str,
             return {".": compact_dir(spark, store_dir, sharded=False,
                                      target_files=target_files)}
         return {}
-    if len(tables) == 1:
-        sub, is_sharded = tables[0]
-        return {sub: compact_dir(spark, os.path.join(store_dir, sub),
-                                 sharded=is_sharded,
-                                 target_files=target_files)}
     from concurrent.futures import ThreadPoolExecutor
 
     def _one(sub: str, is_sharded: bool | None) -> dict:

@@ -15,7 +15,6 @@ from etl_tool_spark.streaming.cdc import (
     cdc_merge_stream,
     list_versions,
     merge_cdc_batch,
-    migrate_snapshot,
     read_snapshot,
     restore_version,
     snapshot_diff,
@@ -34,8 +33,7 @@ __all__ = ["near_dedup_stream", "exact_dedup_stream", "clean_ingest_stream",
            "read_events_stream", "windowed_counts", "sessionize_stream",
            "streaming_dedup", "stream_to_memory", "interval_join_streams",
            "merge_cdc_batch", "cdc_merge_stream", "read_snapshot",
-           "list_versions", "vacuum", "migrate_snapshot",
-           "snapshot_diff", "restore_version",
+           "list_versions", "vacuum", "snapshot_diff", "restore_version",
            "budget_ingest_stream", "land_budget_batch",
            "full_clean_ingest_stream", "near_dedup_ingest_stream",
            "semantic_ingest_stream"]

@@ -55,8 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = ["merge_cdc_batch", "read_snapshot", "cdc_merge_stream",
-           "list_versions", "vacuum", "migrate_snapshot",
-           "snapshot_diff", "restore_version"]
+           "list_versions", "vacuum", "snapshot_diff", "restore_version"]
 
 BUCKET_COL = "_bucket"
 VERSIONS_DIR = "_versions"
@@ -113,54 +112,14 @@ def list_versions(spark: SparkSession, snapshot_dir: str) -> list[int]:
 def _reject_legacy_layout(spark: SparkSession, snapshot_dir: str) -> None:
     """A directory with `_bucket=*` dirs at top level is the
     pre-versioned layout. Folding new batches over it as if empty would
-    silently discard the existing state — refuse instead."""
+    silently discard the existing state — refuse instead. One listing."""
     if any(n.startswith(f"{BUCKET_COL}=")
            for n in _list_names(spark, snapshot_dir)):
         raise ValueError(
-            f"{snapshot_dir} uses the pre-versioned snapshot layout; run "
-            "migrate_snapshot(spark, dir) once to convert it")
-
-
-def migrate_snapshot(spark: SparkSession, snapshot_dir: str,
-                     n_buckets: int) -> None:
-    """One-time conversion of a pre-versioned snapshot (top-level
-    `_bucket=*` parquet dirs) into version 1 of the manifest layout.
-    The legacy files are left in place (delete them after validating).
-
-    ``n_buckets`` is REQUIRED and must equal the bucket count the legacy
-    store was created with: the manifest's count drives where future
-    merges hash each key, and a mismatch would rewrite keys into buckets
-    their existing rows don't live in (duplicate rows, undead deletes).
-    The gross case — an observed bucket id outside [0, n_buckets) — is
-    rejected; an undersized legacy count that happens to fit cannot be
-    detected without the key columns, hence no default to guess with."""
-    versions = list_versions(spark, snapshot_dir)
-    if versions:
-        raise ValueError(f"{snapshot_dir} already versioned ({versions})")
-    legacy = [n for n in _list_names(spark, snapshot_dir)
-              if n.startswith(f"{BUCKET_COL}=")]
-    if not legacy:
-        raise FileNotFoundError(f"no legacy bucket dirs under {snapshot_dir}")
-    top = max(int(n.split("=", 1)[1]) for n in legacy)
-    if top >= n_buckets:
-        raise ValueError(
-            f"legacy store has bucket {top} but n_buckets={n_buckets}; "
-            "pass the bucket count the legacy snapshot was created with")
-    old = spark.read.parquet(*[f"{snapshot_dir}/{n}" for n in legacy])
-    out_rel = f"{DATA_DIR}/migrate-{uuid.uuid4().hex[:12]}"
-    out_dir = f"{snapshot_dir}/{out_rel}"
-    # bucket values recompute downstream from the keys; reuse the legacy
-    # dir names as the bucket ids to avoid assuming the key columns here
-    for name in legacy:
-        b = name.split("=", 1)[1]
-        (spark.read.parquet(f"{snapshot_dir}/{name}")
-              .write.parquet(f"{out_dir}/{BUCKET_COL}={b}"))
-    manifest = {"batch_id": None, "n_buckets": n_buckets, "keys": None,
-                "schema_ddl": old._jdf.schema().toDDL(),
-                "buckets": {name.split("=", 1)[1]: out_rel
-                            for name in sorted(legacy)}}
-    if not _commit_manifest(spark, snapshot_dir, 1, manifest):
-        raise RuntimeError(f"migration race: v1 already exists in {snapshot_dir}")
+            f"{snapshot_dir} uses the pre-versioned snapshot layout "
+            "(top-level _bucket=* directories), which is not read; "
+            "rebuild the snapshot by replaying its change feed into a "
+            "new directory")
 
 
 def _load_manifest(spark: SparkSession, snapshot_dir: str, n: int) -> dict:

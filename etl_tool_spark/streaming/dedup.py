@@ -1,26 +1,36 @@
-"""Streaming near-duplicate detection: the incremental minhash pipeline
-(llm/dedup.py:incremental_minhash_pairs) driven by Structured Streaming
-micro-batches over a persistent signature store.
+"""Ingest gates and near-dup streams over persistent dedup stores.
 
-Each micro-batch of documents is shingle-hashed once, banded against the
-signatures of every previously seen document, verified with exact
-Jaccard, and appended to the store — so the stream continuously reports
-each near-dup pair exactly when its *younger* member arrives, and the
-union of all batches' outputs equals the one-shot batch pipeline over
-everything ingested (the property tested for the batch API).
+The near-dup, clean and semantic gates land a micro-batch through one
+skeleton, ``_gate``, and differ only in three hooks:
 
-Delivery semantics: foreachBatch + checkpoint replays a batch only if
-it did not commit. The ingest GATES write an O(1) _applied/<batch_id>
-marker after their land + store writes (_batch_marker), so a replay of
-a fully-applied batch is a no-op — effectively-once everywhere except a
-crash inside the narrow append→marker window, where the land-before-
-store order degrades to at-least-once (duplicate landings keyed by
-batch_id, never silent loss). The pair-REPORT stream keeps plain
-at-least-once; a production deployment lands both writes in a
-snapshot-isolated table format — raw parquet keeps this module
-dependency-free."""
+  stage()          writes the batch derivation once, under
+                   ``<store>/gate-staging``, and returns the frame to
+                   gate (file-backed when the family stages here);
+  pairs(gated)     that frame's near-dup pairs (a < b) against the store;
+  append(survivors) puts the survivors' keys into the store tables.
+
+The skeleton owns everything else, in this order: the ``_applied``
+batch marker check (a replay of a fully-applied batch is a no-op), the
+keep-earliest drop policy (``_gate_survivors``) under a lazy
+``localCheckpoint``, the landing of the survivors in ``out_dir`` BEFORE
+``append``, the marker commit, then the release of the checkpoint blocks
+and of the staging directory. Land-before-store is the crash contract:
+a crash after a landing and before the marker replays the batch as a
+duplicate landing (at-least-once, keyed by ``batch_id``), never as a
+silent drop. The exact gate (``land_batch``) and the token-budget gate
+(``land_budget_batch``) have no pair stage; they keep the same marker
+and write order by hand.
+
+Every ``*_stream`` function runs its per-batch function through
+``events.stream_foreach_batch`` (foreachBatch + checkpoint, availableNow
+trigger). The pair-REPORT stream (``near_dedup_stream``) is plain
+at-least-once."""
 
 from __future__ import annotations
+
+import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +39,7 @@ from etl_tool_spark.llm.dedup import (append_signatures,
                                       incremental_exact_dedup,
                                       incremental_minhash_pairs)
 from etl_tool_spark.llm.text import fingerprint
+from etl_tool_spark.streaming.events import stream_foreach_batch
 
 __all__ = ["near_dedup_stream", "exact_dedup_stream",
            "clean_ingest_stream", "land_batch",
@@ -36,6 +47,8 @@ __all__ = ["near_dedup_stream", "exact_dedup_stream",
            "semantic_ingest_stream", "land_semantic_batch",
            "full_clean_ingest_stream", "land_clean_batch",
            "budget_ingest_stream", "land_budget_batch", "crawl_ingest_stream"]
+
+_STAGING = "gate-staging"
 
 
 def _batch_marker(store_dir: str, batch_id: int):
@@ -89,6 +102,25 @@ def land_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     commit()
 
 
+def _quality_filter(docs: DataFrame, text_col: str,
+                    min_quality: float) -> DataFrame:
+    """The cleaning streams' stateless quality + language filter: keep
+    rows scoring ``>= min_quality`` whose language is identified. It
+    runs on the stream frame itself, so it pushes into each
+    micro-batch's scan."""
+    from etl_tool_spark.llm.text import language_id, quality_features, tokens
+
+    base = docs.select("*", tokens(F.col(text_col)).alias("_toks"))
+    feats = quality_features(F.col(text_col), toks=F.col("_toks"))
+    return (base.select("*",
+                        feats["quality_score"].alias("_q"),
+                        language_id(F.col(text_col),
+                                    toks=F.col("_toks")).alias("_lang"))
+                .filter((F.col("_q") >= min_quality)
+                        & (F.col("_lang") != "und"))
+                .drop("_toks", "_q", "_lang"))
+
+
 def near_dedup_stream(docs: DataFrame, store_dir: str, pairs_dir: str,
                       checkpoint: str, id_col: str = "doc_id",
                       text_col: str = "text", **minhash_kwargs):
@@ -105,13 +137,7 @@ def near_dedup_stream(docs: DataFrame, store_dir: str, pairs_dir: str,
         (pairs.withColumn("batch_id", F.lit(batch_id))
               .write.mode("append").parquet(pairs_dir))
 
-    q = (docs.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(docs, handle, checkpoint)
 
 
 def exact_dedup_stream(docs: DataFrame, store_dir: str, out_dir: str,
@@ -130,17 +156,10 @@ def exact_dedup_stream(docs: DataFrame, store_dir: str, out_dir: str,
     for consumers to collapse) — at-least-once. The reverse order would
     find every fingerprint already stored on replay and silently drop
     the whole batch: data loss, not duplication."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        land_batch(batch_df, batch_id, store_dir, out_dir,
-                   id_col=id_col, text_col=text_col)
-
-    q = (docs.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(
+        docs, lambda b, i: land_batch(b, i, store_dir, out_dir,
+                                      id_col=id_col, text_col=text_col),
+        checkpoint)
 
 
 def clean_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
@@ -160,21 +179,8 @@ def clean_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
     the same store directory family): pair discovery is a *report*,
     while this is the ingest gate — production runs them as two readers
     of one stream."""
-    from etl_tool_spark.llm.text import language_id, quality_features, tokens
-
-    base = docs.select("*", tokens(F.col(text_col)).alias("_toks"))
-    feats = quality_features(F.col(text_col), toks=F.col("_toks"))
-    kept = (base.select("*",
-                        feats["quality_score"].alias("_q"),
-                        language_id(F.col(text_col),
-                                    toks=F.col("_toks")).alias("_lang"))
-                .filter((F.col("_q") >= min_quality)
-                        & (F.col("_lang") != "und"))
-                .drop("_toks", "_q", "_lang"))
-
-    # delegate: the dedup-and-land stage (including its land-before-store
-    # crash-safety order) is exact_dedup_stream's, defined once
-    return exact_dedup_stream(kept, store_dir, out_dir, checkpoint,
+    return exact_dedup_stream(_quality_filter(docs, text_col, min_quality),
+                              store_dir, out_dir, checkpoint,
                               id_col=id_col, text_col=text_col)
 
 
@@ -209,6 +215,117 @@ def _gate_survivors(batch_df: DataFrame, pairs: DataFrame,
     return batch_df.join(drops, id_col, "left_anti")
 
 
+def _gate(batch_df: DataFrame, batch_id: int, store_dir: str,
+          out_dir: str, id_col: str, stage: Callable[[], DataFrame],
+          pairs: Callable[[DataFrame], DataFrame],
+          append: Callable[[DataFrame], None]) -> None:
+    """Land one batch through a family's hooks (module docstring). The
+    landing keeps ``batch_df``'s columns; hook columns of the gated
+    frame (staged hashes, band keys) are dropped from it."""
+    applied, commit = _batch_marker(store_dir, batch_id)
+    if applied:
+        return
+    gated = stage()
+    # lazy checkpoint: the landing write materializes the gate join once
+    # and the store append reads the SAME batch-sized blocks — never a
+    # recompute, and never a re-scan of the whole (ever-growing) out_dir
+    # to recover ids this batch computed
+    survivors = _gate_survivors(gated, pairs(gated), id_col) \
+        .localCheckpoint(eager=False)
+    (survivors.drop(*[c for c in survivors.columns
+                      if c not in batch_df.columns])
+              .withColumn("batch_id", F.lit(batch_id))
+              .write.mode("append").parquet(out_dir))
+    append(survivors)
+    commit()
+    from etl_tool_spark.llm.graph import _checkpoint_rdd
+    surv_rdd = _checkpoint_rdd(survivors)
+    if surv_rdd is not None:  # release batch blocks; streams run forever
+        surv_rdd.unpersist(False)
+    shutil.rmtree(os.path.join(store_dir, _STAGING), ignore_errors=True)
+
+
+def _minhash_hooks(batch_df: DataFrame, store_dir: str, id_col: str,
+                   text_col: str, minhash_kwargs: dict, exact: bool):
+    """(stage, pairs, append) of the minhash gates. ``exact`` adds the
+    clean gate's exact-dedup prefix against ``store_dir/fp`` and its
+    fingerprint append.
+
+    FUSED staging — ONE write carries the gated rows with their shingle
+    hashes, band-key array (and fingerprint): the md5 shingle pass is a
+    batch's dominant cost, and without staging it re-ran for banding,
+    each verify side, the landing and the store appends. Column pruning
+    serves every consumer from the one staged table, and the shard probe
+    rides the write as an Observation (store.fused_probe_observation).
+    The fixed staging name is safe: foreachBatch batches run one at a
+    time, and a crashed batch replays from the marker, overwriting it."""
+    from etl_tool_spark.llm import store as _store
+    from etl_tool_spark.llm.dedup import (_band_bucket_array,
+                                          _check_store_layout,
+                                          minhash_from_hashes_vec,
+                                          shingle_hashes)
+
+    shingle_n = minhash_kwargs.get("shingle_n", 3)
+    num_hashes = minhash_kwargs.get("num_hashes", 16)
+    bands = minhash_kwargs.get("bands", 8)
+    fp_dir = os.path.join(store_dir, "fp")
+    staging = os.path.join(store_dir, _STAGING)
+    probe = None
+
+    def banded(df: DataFrame) -> DataFrame:
+        return df.select(id_col,
+                         F.posexplode("_bands").alias("_band", "_bucket"))
+
+    def stage() -> DataFrame:
+        nonlocal probe
+        n = _check_store_layout(store_dir)
+        src = (incremental_exact_dedup(batch_df, fp_dir, id_col=id_col,
+                                       text_col=text_col, update_store=False)
+               if exact else batch_df)
+        fused = src.withColumn("_hs", shingle_hashes(F.col(text_col),
+                                                     shingle_n))
+        if exact:
+            fused = fused.withColumn("_fp", fingerprint(F.col(text_col)))
+        fused = (fused.withColumn("_sig", minhash_from_hashes_vec(
+                          F.col("_hs"), num_hashes))
+                      .withColumn("_bands", _band_bucket_array(
+                          F.col("_sig"), num_hashes, bands))
+                      .drop("_sig"))
+        observed, resolve = _store.fused_probe_observation(
+            fused, _store.shard_array(F.col("_bands"), n, with_index=True), n)
+        observed.write.mode("overwrite").parquet(staging)
+        probe = resolve()
+        return batch_df.sparkSession.read.parquet(staging)
+
+    def pairs(staged: DataFrame) -> DataFrame:
+        return incremental_minhash_pairs(
+            staged.select(id_col, "_hs"), store_dir, id_col=id_col,
+            update_store=False, prehashed=True, banded_frame=banded(staged),
+            probe=probe,
+            **{k: v for k, v in minhash_kwargs.items() if k != "shingle_n"})
+
+    def append(survivors: DataFrame) -> None:
+        if exact:
+            # fp/ appends SEQUENTIALLY FIRST: it is the replay idempotence
+            # guard — incremental_exact_dedup anti-joins fp/, so a
+            # crash-replay after fp committed re-appends nothing.
+            # Overlapping fp with sig+bands would break that: a crash
+            # could leave sig/ committed with fp/ absent, the replay would
+            # re-append everything, and the duplicate (id, _hs) rows would
+            # inflate _jaccard_verify's intersection counts for good.
+            survivors.select("_fp").write.mode("append").parquet(fp_dir)
+        # survivors carry their staged _hs/_bands columns: the appends
+        # read the checkpoint blocks, and sig/ and bands/ are written
+        # concurrently without re-banding (append_signatures)
+        append_signatures(
+            survivors.select(id_col, "_hs"), store_dir, id_col=id_col,
+            prehashed=True, banded=banded(survivors),
+            **{k: v for k, v in minhash_kwargs.items()
+               if k in ("num_hashes", "bands")})
+
+    return stage, pairs, append
+
+
 def land_near_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
                     out_dir: str, id_col: str = "doc_id",
                     text_col: str = "text", **minhash_kwargs) -> None:
@@ -229,80 +346,9 @@ def land_near_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     (_batch_marker) — without the marker it would also re-append its
     survivors' signatures (same-id pairs are excluded by a < b, so the
     store copy cannot flag its own replay)."""
-    import os as _os
-    import shutil as _shutil
-
-    applied, commit = _batch_marker(store_dir, batch_id)
-    if applied:
-        return
-    spark = batch_df.sparkSession
-    sig_kwargs = {k: v for k, v in minhash_kwargs.items()
-                  if k in ("num_hashes", "bands")}
-    shingle_n = minhash_kwargs.get("shingle_n", 3)
-    num_hashes = minhash_kwargs.get("num_hashes", 16)
-    bands = minhash_kwargs.get("bands", 8)
-    # FUSED staging — ONE write carries the whole batch derivation:
-    # shingle hashes (without staging, the md5 shingle pass re-ran for
-    # banding, both verify sides, and the survivor append — measured 4×
-    # the necessary hash work per batch) AND the band keys as a per-doc
-    # array column (previously a second sequential staging write over a
-    # re-read of the hashes). Parquet column pruning serves both
-    # consumer families from the same files — (id, _hs) for the verify
-    # sides and sig append, (id, _bands) for the probe/candidate
-    # join/bands append — and the shard probe rides this write as a
-    # bounded bitmask observation (guide §1.2: two staging jobs + their
-    # probe became one job). Fixed staging name is safe: foreachBatch
-    # batches are sequential, and a crashed batch replays from the
-    # marker, overwriting the stage.
-    from etl_tool_spark.llm import store as _store
-    from etl_tool_spark.llm.dedup import (_band_bucket_array,
-                                          minhash_from_hashes_vec,
-                                          shingle_hashes)
-    staging = _os.path.join(store_dir, "gate-staging")
-    fused = (batch_df
-             .select(F.col(id_col),
-                     shingle_hashes(F.col(text_col), shingle_n).alias("_hs"))
-             .withColumn("_sig", minhash_from_hashes_vec(F.col("_hs"),
-                                                         num_hashes))
-             .withColumn("_bands", _band_bucket_array(F.col("_sig"),
-                                                      num_hashes, bands))
-             .drop("_sig"))
-    observed, resolve = _store.fused_probe_observation(
-        fused, _store.shard_array(F.col("_bands"), with_index=True))
-    observed.write.mode("overwrite").parquet(staging)
-    probe = resolve()
-    staged = spark.read.parquet(staging)
-    hs = staged.select(id_col, "_hs")
-    banded_new = staged.select(
-        id_col, F.posexplode("_bands").alias("_band", "_bucket"))
-    pairs = incremental_minhash_pairs(
-        hs, store_dir, id_col=id_col, update_store=False, prehashed=True,
-        banded_frame=banded_new, probe=probe,
-        **{k: v for k, v in minhash_kwargs.items() if k != "shingle_n"})
-    # lazy checkpoint: the landing write materializes the gate join once
-    # and the signature append reads the SAME batch-sized blocks — never
-    # a recompute, and never a re-scan of the whole (ever-growing)
-    # out_dir just to recover ids this batch computed (round-7 advisor:
-    # that read made per-batch gate cost grow with corpus history)
-    survivors = _gate_survivors(batch_df, pairs, id_col) \
-        .localCheckpoint(eager=False)
-    (survivors.withColumn("batch_id", F.lit(batch_id))
-              .write.mode("append").parquet(out_dir))
-    landed_ids = survivors.select(id_col).distinct()
-    # survivors' band keys come from the staged array column (banding
-    # ran once, at stage time) — with them supplied, append_signatures
-    # writes sig/ and bands/ concurrently instead of re-banding the
-    # just-appended signatures and paying the two appends back to back
-    append_signatures(hs.join(landed_ids, id_col), store_dir,
-                      id_col=id_col, prehashed=True,
-                      banded=banded_new.join(landed_ids, id_col),
-                      **sig_kwargs)
-    commit()
-    from etl_tool_spark.llm.graph import _checkpoint_rdd
-    surv_rdd = _checkpoint_rdd(survivors)
-    if surv_rdd is not None:  # release batch blocks; streams run forever
-        surv_rdd.unpersist(False)
-    _shutil.rmtree(staging, ignore_errors=True)
+    _gate(batch_df, batch_id, store_dir, out_dir, id_col,
+          *_minhash_hooks(batch_df, store_dir, id_col, text_col,
+                          minhash_kwargs, exact=False))
 
 
 def near_dedup_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
@@ -313,17 +359,11 @@ def near_dedup_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
     nor a smaller-id batch sibling (see land_near_batch). The always-
     near-dup-free landing zone — where near_dedup_stream is the pair
     REPORT over everything ingested, this is the ingest GATE."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        land_near_batch(batch_df, batch_id, store_dir, out_dir,
-                        id_col=id_col, text_col=text_col, **minhash_kwargs)
-
-    q = (docs.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(
+        docs, lambda b, i: land_near_batch(b, i, store_dir, out_dir,
+                                           id_col=id_col, text_col=text_col,
+                                           **minhash_kwargs),
+        checkpoint)
 
 
 def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
@@ -338,45 +378,32 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     the store (llm/similarity.py incremental store). Same
     land-before-store crash order and _batch_marker replay no-op as
     land_near_batch."""
-    import os as _os
-    import shutil as _shutil
-
     from etl_tool_spark.llm.similarity import (append_embedding_signatures,
                                                incremental_embedding_pairs)
 
-    applied, commit = _batch_marker(store_dir, batch_id)
-    if applied:
-        return
-    spark = batch_df.sparkSession
-    # norms + sign projections + band keys stage once in ONE fused
-    # write (see incremental_embedding_pairs' staging branch); the
-    # survivor append below reuses the staged table, so the batch is
-    # projected exactly once per landing
-    staging = _os.path.join(store_dir, "gate-staging")
-    pairs = incremental_embedding_pairs(
-        batch_df, store_dir, threshold=threshold, id_col=id_col,
-        vec_col=vec_col, update_store=False, staging_dir=staging,
-        **lsh_kwargs)
-    # same survivors-checkpoint shape as land_near_batch: ids come from
-    # the batch's own materialized frame, not an out_dir re-scan
-    survivors = _gate_survivors(batch_df, pairs, id_col) \
-        .localCheckpoint(eager=False)
-    (survivors.withColumn("batch_id", F.lit(batch_id))
-              .write.mode("append").parquet(out_dir))
-    landed_ids = survivors.select(id_col).distinct()
-    staged = spark.read.parquet(staging)
-    append_embedding_signatures(
-        staged.select(id_col, vec_col, "_norm").join(landed_ids, id_col),
-        store_dir, id_col=id_col, vec_col=vec_col, prenormed=True,
-        banded=staged.select(id_col, F.explode("_bkts").alias("_bkt"))
-                     .join(landed_ids, id_col),
-        **lsh_kwargs)
-    commit()
-    from etl_tool_spark.llm.graph import _checkpoint_rdd
-    surv_rdd = _checkpoint_rdd(survivors)
-    if surv_rdd is not None:
-        surv_rdd.unpersist(False)
-    _shutil.rmtree(staging, ignore_errors=True)
+    staging = os.path.join(store_dir, _STAGING)
+
+    def pairs(gated: DataFrame) -> DataFrame:
+        # norms + sign projections + band keys stage in ONE fused write
+        # inside incremental_embedding_pairs (its staging_dir); the
+        # append reuses that table, so the batch is projected once
+        return incremental_embedding_pairs(
+            gated, store_dir, threshold=threshold, id_col=id_col,
+            vec_col=vec_col, update_store=False, staging_dir=staging,
+            **lsh_kwargs)
+
+    def append(survivors: DataFrame) -> None:
+        landed_ids = survivors.select(id_col).distinct()
+        staged = batch_df.sparkSession.read.parquet(staging)
+        append_embedding_signatures(
+            staged.select(id_col, vec_col, "_norm").join(landed_ids, id_col),
+            store_dir, id_col=id_col, vec_col=vec_col, prenormed=True,
+            banded=staged.select(id_col, F.explode("_bkts").alias("_bkt"))
+                         .join(landed_ids, id_col),
+            **lsh_kwargs)
+
+    _gate(batch_df, batch_id, store_dir, out_dir, id_col,
+          stage=lambda: batch_df, pairs=pairs, append=append)
 
 
 def semantic_ingest_stream(vecs: DataFrame, store_dir: str, out_dir: str,
@@ -388,18 +415,12 @@ def semantic_ingest_stream(vecs: DataFrame, store_dir: str, out_dir: str,
     and every smaller-id batch sibling stays below the threshold — the
     embedding twin of near_dedup_ingest_stream, for corpora deduped on
     meaning (paraphrases, re-encodes) rather than surface text."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        land_semantic_batch(batch_df, batch_id, store_dir, out_dir,
-                            id_col=id_col, vec_col=vec_col,
-                            threshold=threshold, **lsh_kwargs)
-
-    q = (vecs.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(
+        vecs, lambda b, i: land_semantic_batch(b, i, store_dir, out_dir,
+                                               id_col=id_col, vec_col=vec_col,
+                                               threshold=threshold,
+                                               **lsh_kwargs),
+        checkpoint)
 
 
 def land_clean_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
@@ -423,90 +444,9 @@ def land_clean_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     ``store_dir/bands`` minhash tables, ``store_dir/_applied`` batch
     markers (land-before-store order; replay of a fully-applied batch
     is a no-op)."""
-    import os
-    import shutil as _shutil
-
-    applied, commit = _batch_marker(store_dir, batch_id)
-    if applied:
-        return
-    spark = batch_df.sparkSession
-    fresh = incremental_exact_dedup(batch_df, os.path.join(store_dir, "fp"),
-                                    id_col=id_col, text_col=text_col,
-                                    update_store=False)
-    # FUSED staging — one write carries the exact-dedup survivors WITH
-    # their shingle hashes, fingerprint, AND band-key array: `fresh` is
-    # an anti-join plan and the md5 shingle pass is the batch's dominant
-    # cost — without staging both re-ran for banding, each verify side,
-    # the landing write, and the store appends; the band keys previously
-    # cost a SECOND staging write over a re-read of the hashes. Column
-    # pruning serves every consumer from the one staged table, and the
-    # shard probe rides this write as a bounded bitmask observation
-    # (land_near_batch rationale, guide §1.2).
-    from etl_tool_spark.llm import store as _store
-    from etl_tool_spark.llm.dedup import (_band_bucket_array,
-                                          minhash_from_hashes_vec,
-                                          shingle_hashes)
-    shingle_n = minhash_kwargs.get("shingle_n", 3)
-    num_hashes = minhash_kwargs.get("num_hashes", 16)
-    bands = minhash_kwargs.get("bands", 8)
-    staging = os.path.join(store_dir, "gate-staging")
-    fused = (fresh.withColumn("_hs", shingle_hashes(F.col(text_col),
-                                                    shingle_n))
-                  .withColumn("_fp", fingerprint(F.col(text_col)))
-                  .withColumn("_sig", minhash_from_hashes_vec(F.col("_hs"),
-                                                              num_hashes))
-                  .withColumn("_bands", _band_bucket_array(F.col("_sig"),
-                                                           num_hashes,
-                                                           bands))
-                  .drop("_sig"))
-    observed, resolve = _store.fused_probe_observation(
-        fused, _store.shard_array(F.col("_bands"), with_index=True))
-    observed.write.mode("overwrite").parquet(staging)
-    probe = resolve()
-    staged = spark.read.parquet(staging)
-    hs = staged.select(id_col, "_hs")
-    banded_new = staged.select(
-        id_col, F.posexplode("_bands").alias("_band", "_bucket"))
-    pairs = incremental_minhash_pairs(
-        hs, store_dir, id_col=id_col, update_store=False, prehashed=True,
-        banded_frame=banded_new, probe=probe,
-        **{k: v for k, v in minhash_kwargs.items() if k != "shingle_n"})
-    # survivors carry their own staged _hs/_fp/_bands columns, so the
-    # store appends read the checkpoint blocks directly — no out_dir
-    # re-scan, no join-back through `staged`
-    survivors = _gate_survivors(staged, pairs, id_col) \
-        .localCheckpoint(eager=False)
-    (survivors.drop("_hs", "_fp", "_bands")
-              .withColumn("batch_id", F.lit(batch_id))
-              .write.mode("append").parquet(out_dir))
-    landed_staged = survivors
-    sig_kwargs = {k: v for k, v in minhash_kwargs.items()
-                  if k in ("num_hashes", "bands")}
-    # fp/ appends SEQUENTIALLY FIRST: it is the replay idempotence
-    # guard — incremental_exact_dedup anti-joins fp/, so a crash-replay
-    # after fp committed re-appends nothing. Overlapping fp with the
-    # sig+bands pair (as one round-8 revision did) breaks that: a crash
-    # could leave sig/ committed with fp/ absent, the replayed batch
-    # would be judged fresh and re-append everything, and the duplicate
-    # (id, _hs) rows would permanently inflate _jaccard_verify's
-    # intersection counts (jaccard > true value, spurious drops in every
-    # later batch). Only the sig/bands pair overlaps (inside
-    # append_signatures) — those two are guarded by fp, not by each
-    # other.
-    (landed_staged.select("_fp").write.mode("append")
-                  .parquet(os.path.join(store_dir, "fp")))
-    append_signatures(
-        landed_staged.select(id_col, "_hs"), store_dir, id_col=id_col,
-        prehashed=True,
-        banded=landed_staged.select(
-            id_col, F.posexplode("_bands").alias("_band", "_bucket")),
-        **sig_kwargs)
-    commit()
-    from etl_tool_spark.llm.graph import _checkpoint_rdd
-    surv_rdd = _checkpoint_rdd(survivors)
-    if surv_rdd is not None:
-        surv_rdd.unpersist(False)
-    _shutil.rmtree(staging, ignore_errors=True)
+    _gate(batch_df, batch_id, store_dir, out_dir, id_col,
+          *_minhash_hooks(batch_df, store_dir, id_col, text_col,
+                          minhash_kwargs, exact=True))
 
 
 def full_clean_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
@@ -519,29 +459,12 @@ def full_clean_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
     passes the exact and near-dup gates against the landed corpus
     (land_clean_batch). The landing zone is always filtered, exactly
     deduped, and pairwise near-dup-free."""
-    from etl_tool_spark.llm.text import language_id, quality_features, tokens
-
-    base = docs.select("*", tokens(F.col(text_col)).alias("_toks"))
-    feats = quality_features(F.col(text_col), toks=F.col("_toks"))
-    kept = (base.select("*",
-                        feats["quality_score"].alias("_q"),
-                        language_id(F.col(text_col),
-                                    toks=F.col("_toks")).alias("_lang"))
-                .filter((F.col("_q") >= min_quality)
-                        & (F.col("_lang") != "und"))
-                .drop("_toks", "_q", "_lang"))
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        land_clean_batch(batch_df, batch_id, store_dir, out_dir,
-                         id_col=id_col, text_col=text_col, **minhash_kwargs)
-
-    q = (kept.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(
+        _quality_filter(docs, text_col, min_quality),
+        lambda b, i: land_clean_batch(b, i, store_dir, out_dir,
+                                      id_col=id_col, text_col=text_col,
+                                      **minhash_kwargs),
+        checkpoint)
 
 
 def land_budget_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
@@ -607,18 +530,12 @@ def budget_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,
     """Streaming token-budget admission: every micro-batch lands its
     best-quality documents up to the quota (land_budget_batch). Same
     foreachBatch + marker delivery contract as the dedup gates."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        land_budget_batch(batch_df, batch_id, store_dir, out_dir,
-                          id_col=id_col, text_col=text_col,
-                          token_quota=token_quota, quota_frac=quota_frac)
-
-    q = (docs.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(
+        docs, lambda b, i: land_budget_batch(b, i, store_dir, out_dir,
+                                             id_col=id_col, text_col=text_col,
+                                             token_quota=token_quota,
+                                             quota_frac=quota_frac),
+        checkpoint)
 
 
 def crawl_ingest_stream(archives: DataFrame, store_dir: str, out_dir: str,
@@ -657,10 +574,4 @@ def crawl_ingest_stream(archives: DataFrame, store_dir: str, out_dir: str,
         land_batch(docs, batch_id, store_dir, out_dir,
                    id_col="media_id", text_col="text")
 
-    q = (archives.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return stream_foreach_batch(archives, handle, checkpoint)

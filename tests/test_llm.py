@@ -1136,12 +1136,15 @@ def test_gif_decode_real_pixels(spark):
     assert rows[5]["width"] is None
 
 
-def test_incremental_minhash_migrates_legacy_flat_store(spark, tmp_path):
+def test_incremental_minhash_rejects_legacy_flat_store(spark, tmp_path):
     """A store written by the pre-two-table revision (signature parts
-    directly under store_dir) must be migrated into sig/ + bands/, not
+    directly under store_dir) must be refused with a rebuild hint, not
     silently read as empty — duplicates against the previously ingested
-    corpus would otherwise go undetected with no error."""
+    corpus would otherwise go undetected with no error. Nothing is
+    written on the refused paths."""
     import glob
+
+    from etl_tool_spark.streaming.dedup import land_near_batch
 
     store = str(tmp_path / "legacy_store")
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa mu nu"
@@ -1151,63 +1154,18 @@ def test_incremental_minhash_migrates_legacy_flat_store(spark, tmp_path):
     b1.select(F.col("doc_id"),
               D.shingle_hashes(F.col("text"), 3).alias("_hs")) \
       .write.parquet(store)
-    assert glob.glob(store + "/*.parquet")
+    before = sorted(glob.glob(store + "/**", recursive=True))
 
     b2 = spark.createDataFrame([(2, base + " sigma")],
                                "doc_id long, text string")
-    pairs = D.incremental_minhash_pairs(b2, store)
-    assert [(r["a"], r["b"]) for r in pairs.collect()] == [(1, 2)]
-    # migrated: no flat parts remain; sig/ + bands/ hold both docs
-    assert not glob.glob(store + "/*.parquet")
-    assert spark.read.parquet(store + "/sig").count() == 2
-    assert spark.read.parquet(store + "/bands").count() == 8 * 2
-
-
-def test_legacy_migration_retry_after_crash_does_not_duplicate(
-        spark, tmp_path):
-    """A migration interrupted between promoting sig/ and removing the
-    legacy flat parts must NOT re-append the same signatures on retry
-    (round-4 advice: the append-then-remove form silently doubled sig/
-    and bands/ rows). Simulated by promoting sig/ while leaving the
-    legacy parts and bands/ absent — the retry resumes (rebuild bands,
-    drop legacy) instead of re-ingesting."""
-    import glob
-    import os
-    import shutil
-
-    store = str(tmp_path / "crashed_store")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa mu nu"
-    b1 = spark.createDataFrame([(1, base + " omega")],
-                               "doc_id long, text string")
-    sig = b1.select(F.col("doc_id"),
-                    D.shingle_hashes(F.col("text"), 3).alias("_hs"))
-    sig.write.parquet(store)                 # legacy flat parts
-    sig.write.parquet(store + "/sig")        # crash: sig/ already promoted
-    assert glob.glob(store + "/*.parquet") and os.path.isdir(store + "/sig")
-
-    b2 = spark.createDataFrame([(2, base + " sigma")],
-                               "doc_id long, text string")
-    pairs = D.incremental_minhash_pairs(b2, store)
-    assert [(r["a"], r["b"]) for r in pairs.collect()] == [(1, 2)]
-    # exactly one signature row per doc — never doubled
-    assert not glob.glob(store + "/*.parquet")
-    assert spark.read.parquet(store + "/sig").count() == 2
-    assert spark.read.parquet(store + "/bands").count() == 8 * 2
-
-    # second crash shape: bands/ staged but not yet promoted
-    store2 = str(tmp_path / "crashed_store2")
-    sig.write.parquet(store2)
-    sig.write.parquet(store2 + "/sig")
-    shutil.copytree(store2 + "/sig", store2 + "/_migrate_bands_src")
-    # stage a REAL bands table so promotion-by-rename is exercised
-    from etl_tool_spark.llm.dedup import _band_frame
-    _band_frame(spark.read.parquet(store2 + "/sig"), "doc_id", 16, 8)         .write.parquet(store2 + "/_migrate_bands")
-    shutil.rmtree(store2 + "/_migrate_bands_src")
-    pairs2 = D.incremental_minhash_pairs(b2, store2)
-    assert [(r["a"], r["b"]) for r in pairs2.collect()] == [(1, 2)]
-    assert spark.read.parquet(store2 + "/sig").count() == 2
-    assert spark.read.parquet(store2 + "/bands").count() == 8 * 2
-    assert not os.path.isdir(store2 + "/_migrate_bands")
+    with pytest.raises(ValueError, match="store layout.*rebuild"):
+        D.incremental_minhash_pairs(b2, store)
+    with pytest.raises(ValueError, match="store layout.*rebuild"):
+        D.append_signatures(b2, store)
+    with pytest.raises(ValueError, match="store layout.*rebuild"):
+        land_near_batch(b2, 0, store, str(tmp_path / "landed"))
+    assert sorted(glob.glob(store + "/**", recursive=True)) == before
+    assert not glob.glob(str(tmp_path / "landed"))
 
 
 def test_winnow_detection_guarantee(spark):
@@ -1254,6 +1212,7 @@ def test_incremental_store_survives_compaction(spark, tmp_path):
     import os
     import shutil
 
+    from etl_tool_spark.llm import store as st
     from etl_tool_spark.operators.maintenance import compact_parquet
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1268,12 +1227,18 @@ def test_incremental_store_survives_compaction(spark, tmp_path):
                 # the operational recipe: earlier batches' outputs are
                 # MATERIALIZED (collected above) before compaction —
                 # returned frames are lazily pinned to pre-compaction
-                # part files and die with them (asserted below)
-                for tbl in ("sig", "bands"):
+                # part files and die with them (asserted below). A
+                # rewrite of bands/ keeps its _shard layout and carries
+                # the store's pinned shard count over.
+                for tbl, parts in (("sig", None), ("bands", ["_shard"])):
                     srcd = os.path.join(store, tbl)
                     dstd = os.path.join(store, tbl + "_compact")
-                    summary = compact_parquet(spark, srcd, dstd)
+                    summary = compact_parquet(spark, srcd, dstd,
+                                              partition_by=parts)
                     assert summary["files_after"] <= summary["files_before"]
+                    if parts:
+                        shutil.copy(os.path.join(srcd, st.SHARD_COUNT_FILE),
+                                    dstd)
                     shutil.rmtree(srcd)
                     os.rename(dstd, srcd)
             pairs = D.incremental_minhash_pairs(b, store)

@@ -1,6 +1,6 @@
 """Sharded band-store layout (llm/store.py): partition-pruned probes,
-flat-store migration, and the shard-locality invariant the hot-bucket
-guards rely on.
+the per-store pinned shard count, refusal of unpinned layouts, and the
+shard-locality invariant the hot-bucket guards rely on.
 
 The scale contract under test (round-7 verdict item 3): a micro-batch's
 probe of the incremental stores' band tables must read only the shard
@@ -10,6 +10,7 @@ with corpus history just to re-scan band keys the batch cannot match.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_tool_spark.llm import dedup as D
@@ -32,8 +33,9 @@ def test_bands_layout_is_sharded(spark, tmp_path):
     assert not st.flat_files(bands_dir), "flat part files in a new store"
     # shard values round-trip and match the key-derived expression
     back = spark.read.parquet(bands_dir)
+    n = st.store_shards(bands_dir)
     bad = back.filter(
-        F.col("_shard") != st.shard_col("_band", "_bucket")).count()
+        F.col("_shard") != st.shard_col("_band", "_bucket", n=n)).count()
     assert bad == 0, "directory shard != key-derived shard"
 
 
@@ -72,64 +74,87 @@ def test_shard_locality_of_buckets(spark, tmp_path):
     assert multi == 0
 
 
-def test_flat_store_migrates_and_matches(spark, tmp_path):
-    """A round-7 store (flat bands/) must keep producing identical
-    incremental pairs after in-place migration to the sharded layout."""
-    import shutil
-
+def test_unpinned_bands_store_rejected(spark, tmp_path):
+    """A bands table holding data without a pinned shard count (the
+    round-7 flat layout, or sharded files of an unpinned store) must be
+    refused with a rebuild hint on every probe and append path — read
+    with a guessed count, its keys would be pruned away silently."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(i, base + f" tail{i % 3}") for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     b0 = df.filter(F.col("doc_id") % 2 == 0)
     b1 = df.filter(F.col("doc_id") % 2 == 1)
 
-    def run(store, flatten_between):
-        out = set()
-        for k, b in enumerate([b0, b1]):
-            if flatten_between and k == 1:
-                # rewrite bands/ into the round-7 flat layout
-                bands_dir = os.path.join(store, "bands")
-                flat = spark.read.parquet(bands_dir).drop("_shard")
-                tmp = bands_dir + "_flat"
-                flat.coalesce(1).write.parquet(tmp)
-                shutil.rmtree(bands_dir)
-                os.rename(tmp, bands_dir)
-                assert st.flat_files(bands_dir)
-            pairs = D.incremental_minhash_pairs(b, store)
-            out |= {(r["a"], r["b"], r["jaccard"]) for r in pairs.collect()}
-        return out
-
-    plain = run(str(tmp_path / "s1"), flatten_between=False)
-    migrated = run(str(tmp_path / "s2"), flatten_between=True)
-    assert migrated == plain and plain
-    # and the migrated store is sharded again, with no flat leftovers
-    bands_dir = str(tmp_path / "s2" / "bands")
-    assert st.sharded_files(bands_dir)
-    assert not st.flat_files(bands_dir)
-    assert not os.path.isdir(bands_dir + "_reshard")
-
-
-def test_migration_resume_after_partial_promotion(spark, tmp_path):
-    """Crash window: staged reshard fully written, flat files removed,
-    promotion interrupted. The retry must finish the promotion from the
-    stage directory without touching the signature table."""
-    store = str(tmp_path / "s")
-    _mk_store(spark, store)
-    bands_dir = os.path.join(store, "bands")
-    rows_before = spark.read.parquet(bands_dir).count()
-
+    flat_store = str(tmp_path / "flat")
+    D.incremental_minhash_pairs(b0, flat_store).count()
+    bands_dir = os.path.join(flat_store, "bands")
+    flat = spark.read.parquet(bands_dir).drop("_shard")
+    flat.coalesce(1).write.parquet(bands_dir + "_flat")
     import shutil
+    shutil.rmtree(bands_dir)
+    os.rename(bands_dir + "_flat", bands_dir)
+    assert st.flat_files(bands_dir)
 
-    # simulate the crash state: bands content staged, bands_dir empty
-    staged = bands_dir + "_reshard"
-    os.rename(bands_dir, staged)
-    os.makedirs(bands_dir)
-    st.ensure_sharded(spark, bands_dir, ["_band", "_bucket"],
-                      lambda: (_ for _ in ()).throw(
-                          AssertionError("rebuild must not run on resume")))
-    assert spark.read.parquet(bands_dir).count() == rows_before
-    assert not os.path.isdir(staged)
-    shutil.rmtree(store)
+    unpinned_store = str(tmp_path / "unpinned")
+    D.incremental_minhash_pairs(b0, unpinned_store).count()
+    os.remove(os.path.join(unpinned_store, "bands", st.SHARD_COUNT_FILE))
+
+    for store in (flat_store, unpinned_store):
+        with pytest.raises(ValueError, match="pinned shard count.*rebuild"):
+            D.incremental_minhash_pairs(b1, store)
+        with pytest.raises(ValueError, match="pinned shard count.*rebuild"):
+            D.incremental_minhash_pairs(b1, store, update_store=False)
+        with pytest.raises(ValueError, match="pinned shard count.*rebuild"):
+            D.append_signatures(b1, store)
+
+
+def test_shard_count_pinned_per_store(spark, tmp_path, monkeypatch):
+    """A store keeps the shard count it was created with: a corpus
+    written at 32 shards and then probed by single-document batches with
+    the knob at 64 must find exactly the pairs (and the near-dup gate
+    land exactly the documents) of an all-32 run. An unpinned count
+    hashes a probe key to a shard the store wrote under another number;
+    with a small batch the pruned read then misses it, and pairs go
+    missing without an error. Checked on the update-store path and on
+    the near-dup gate."""
+    import random
+
+    from etl_tool_spark.streaming.dedup import land_near_batch
+
+    rng = random.Random(7)
+    vocab = [f"w{k}" for k in range(2000)]
+    rows = []
+    for i in range(40):
+        doc = [rng.choice(vocab) for _ in range(30)]
+        rows.append((i, " ".join(doc)))
+        if i % 4 == 0:  # near-dup: the last 5..8 words replaced
+            cut = 5 + i % 4
+            rows.append((100 + i, " ".join(
+                doc[:30 - cut] + [rng.choice(vocab) for _ in range(cut)])))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    batches = [df.filter(F.col("doc_id") < 100)] + [
+        df.filter(F.col("doc_id") == 100 + i) for i in range(0, 40, 4)]
+
+    def run(tag, later):
+        store = str(tmp_path / f"s-{tag}")
+        gate_store = str(tmp_path / f"g-{tag}")
+        out = str(tmp_path / f"o-{tag}")
+        pairs = set()
+        for i, b in enumerate(batches):
+            monkeypatch.setenv("SPARK_GRAFT_BAND_SHARDS",
+                               "32" if i == 0 else later)
+            pairs |= {(r["a"], r["b"]) for r in D.incremental_minhash_pairs(
+                b, store, threshold=0.4).collect()}
+            land_near_batch(b, i, gate_store, out, threshold=0.4)
+        assert st.store_shards(os.path.join(store, "bands")) == 32
+        landed = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+        return pairs, landed
+
+    want_pairs, want_landed = run("32-32", "32")
+    got_pairs, got_landed = run("32-64", "64")
+    assert want_pairs and len(want_landed) < len(rows)
+    assert got_pairs == want_pairs
+    assert got_landed == want_landed
 
 
 def test_shard_count_env_knob(monkeypatch):
@@ -339,29 +364,23 @@ def test_compact_pq_index_codes(spark, tmp_path):
 
 
 def test_observed_probe_matches_separate_probe(spark, tmp_path):
-    """The probe that rides a band write via Observation (stage_banded /
-    append_bands(probe=True)) must report exactly the (shard set, row
-    count) the standalone probe job computes over the written rows —
-    the round-8 fusion removes a per-batch driver round-trip, never
-    changes what the probe says."""
+    """The probe that rides a band append (append_bands(probe=True): the
+    one-element-array case of fused_probe_observation) must report
+    exactly the (shard set, row count) the standalone probe job computes
+    over the written rows, and the shard directories written."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(i, base + f" tail{i}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     hs = df.select("doc_id", D.shingle_hashes(F.col("text"), 3).alias("_hs"))
     banded = D._band_frame(hs, "doc_id", 16, 8)
 
-    staged = str(tmp_path / "staged-bands")
-    shards, n = st.stage_banded(banded, staged, ["_band", "_bucket"])
-    back = spark.read.parquet(staged)
-    want_shards, want_n = st.probe_shards_and_count(
-        back, ["_band", "_bucket"])
-    assert n == want_n == back.count()
-    assert sorted(shards) == sorted(want_shards)
-
     bands_dir = str(tmp_path / "bands")
     ap_shards, ap_n = st.append_bands(banded, bands_dir,
                                       ["_band", "_bucket"], probe=True)
-    assert ap_n == want_n
+    back = spark.read.parquet(bands_dir).drop("_shard")
+    want_shards, want_n = st.probe_shards_and_count(
+        back, ["_band", "_bucket"], st.store_shards(bands_dir))
+    assert ap_n == want_n == back.count()
     assert sorted(ap_shards) == sorted(want_shards)
     # directory layout agrees with the observed shard set
     on_disk = {int(os.path.basename(d).split("=")[1])
@@ -372,12 +391,14 @@ def test_observed_probe_matches_separate_probe(spark, tmp_path):
 
 def test_observed_probe_empty_batch(spark, tmp_path):
     """Empty batches must observe an empty shard set and zero count
-    (collect_set yields null/[] on no rows) without erroring."""
+    (bit_or and sum yield null on no rows) without erroring — the
+    one-element-array form of the probe on a plain staging write."""
     empty = spark.createDataFrame(
         [], "doc_id long, _band int, _bucket string")
-    staged = str(tmp_path / "staged-empty")
-    shards, n = st.stage_banded(empty, staged, ["_band", "_bucket"])
-    assert shards == [] and n == 0
+    observed, resolve = st.fused_probe_observation(
+        empty, F.array(st.shard_col("_band", "_bucket", n=32)), 32)
+    observed.write.mode("overwrite").parquet(str(tmp_path / "staged-empty"))
+    assert resolve() == ([], 0)
 
 
 def test_fused_probe_matches_exploded_probe(spark, tmp_path):
@@ -397,7 +418,7 @@ def test_fused_probe_matches_exploded_probe(spark, tmp_path):
                .withColumn("_bands", D._band_bucket_array(F.col("_sig"), 16, 8))
                .drop("_sig"))
     observed, resolve = st.fused_probe_observation(
-        fused, st.shard_array(F.col("_bands"), with_index=True))
+        fused, st.shard_array(F.col("_bands"), 32, with_index=True), 32)
     staged = str(tmp_path / "fused")
     observed.write.mode("overwrite").parquet(staged)
     shards, n = resolve()
@@ -405,34 +426,27 @@ def test_fused_probe_matches_exploded_probe(spark, tmp_path):
     exploded = back.select(
         "doc_id", F.posexplode("_bands").alias("_band", "_bucket"))
     want_shards, want_n = st.probe_shards_and_count(
-        exploded, ["_band", "_bucket"])
+        exploded, ["_band", "_bucket"], 32)
     assert n == want_n == exploded.count()
     assert sorted(shards) == sorted(want_shards)
 
-    # embedding shape: single string key; force >64 shards so the
-    # observation needs several mask longs (bit-63 boundary crossed)
+    # embedding shape: single string key; >64 shards so the observation
+    # needs several mask longs (bit-63 boundary crossed)
     keys = fused.select("doc_id",
                         F.col("_bands").alias("_bkts"))
-    old = os.environ.get("SPARK_GRAFT_BAND_SHARDS")
-    os.environ["SPARK_GRAFT_BAND_SHARDS"] = "130"
-    try:
-        observed2, resolve2 = st.fused_probe_observation(
-            keys, st.shard_array(F.col("_bkts")))
-        observed2.write.mode("overwrite").parquet(str(tmp_path / "fused2"))
-        shards2, n2 = resolve2()
-        expl2 = keys.select("doc_id", F.explode("_bkts").alias("_bkt"))
-        want2, want_n2 = st.probe_shards_and_count(expl2, ["_bkt"])
-        assert n2 == want_n2
-        assert sorted(shards2) == sorted(want2)
-        assert max(shards2) > 63  # the multi-mask path actually exercised
-    finally:
-        if old is None:
-            del os.environ["SPARK_GRAFT_BAND_SHARDS"]
-        else:
-            os.environ["SPARK_GRAFT_BAND_SHARDS"] = old
+    observed2, resolve2 = st.fused_probe_observation(
+        keys, st.shard_array(F.col("_bkts"), 130), 130)
+    observed2.write.mode("overwrite").parquet(str(tmp_path / "fused2"))
+    shards2, n2 = resolve2()
+    expl2 = keys.select("doc_id", F.explode("_bkts").alias("_bkt"))
+    want2, want_n2 = st.probe_shards_and_count(expl2, ["_bkt"], 130)
+    assert n2 == want_n2
+    assert sorted(shards2) == sorted(want2)
+    assert max(shards2) > 63  # the multi-mask path actually exercised
 
     # empty-batch edge: no rows → no shards, zero count, no error
     observed3, resolve3 = st.fused_probe_observation(
-        fused.limit(0), st.shard_array(F.col("_bands"), with_index=True))
+        fused.limit(0), st.shard_array(F.col("_bands"), 32, with_index=True),
+        32)
     observed3.write.mode("overwrite").parquet(str(tmp_path / "fused3"))
     assert resolve3() == ([], 0)

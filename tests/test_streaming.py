@@ -491,33 +491,27 @@ def test_cdc_vacuum_spares_recent_inflight_dirs(spark, tmp_path):
     assert not inflight.exists()
 
 
-def test_cdc_legacy_layout_rejected_and_migrated(spark, tmp_path):
+def test_cdc_legacy_layout_rejected(spark, tmp_path):
     """A pre-versioned snapshot (top-level _bucket=* dirs) must refuse
-    to fold/read as if empty; migrate_snapshot converts it to v1."""
-    from etl_tool_spark.streaming.cdc import (
-        merge_cdc_batch, migrate_snapshot, read_snapshot)
+    to fold/read as if empty, and say how to recover (rebuild); the
+    directory is left untouched."""
+    import os
+
+    from etl_tool_spark.streaming.cdc import merge_cdc_batch, read_snapshot
 
     snap = str(tmp_path / "snap")
     legacy = spark.createDataFrame(
         [(1, "a0", 3), (2, "b0", 7)], "id long, payload string, _bucket int")
     legacy.write.partitionBy("_bucket").parquet(snap)
+    before = sorted(os.listdir(snap))
 
     b = spark.createDataFrame(
         [(3, 10, "I", "c0")], "id long, seq long, op string, payload string")
-    with pytest.raises(ValueError, match="pre-versioned"):
+    with pytest.raises(ValueError, match="pre-versioned.*rebuild"):
         merge_cdc_batch(b, snap, keys=["id"], batch_id=0)
-    with pytest.raises(ValueError, match="pre-versioned"):
+    with pytest.raises(ValueError, match="pre-versioned.*rebuild"):
         read_snapshot(spark, snap)
-
-    with pytest.raises(ValueError, match="bucket 7"):
-        migrate_snapshot(spark, snap, n_buckets=4)   # mismatch rejected
-    migrate_snapshot(spark, snap, n_buckets=16)
-    assert {r["id"]: r["payload"]
-            for r in read_snapshot(spark, snap).collect()} == {1: "a0", 2: "b0"}
-    merge_cdc_batch(b, snap, keys=["id"], batch_id=0)
-    assert {r["id"]: r["payload"]
-            for r in read_snapshot(spark, snap).collect()} \
-        == {1: "a0", 2: "b0", 3: "c0"}
+    assert sorted(os.listdir(snap)) == before
 
 
 def test_cdc_snapshot_diff_and_restore(spark, tmp_path):
@@ -682,33 +676,58 @@ def test_semantic_ingest_gate(spark, tmp_path):
     assert fold == got
 
 
-def test_ingest_gate_replay_is_noop(spark, tmp_path):
+def _store_tables(spark, store):
+    """Sorted rows of every store table present (fp/, sig/, bands/, vec/;
+    a bare exact-dedup store is its own flat table)."""
+    import os
+
+    tables = {sub: os.path.join(store, sub)
+              for sub in ("fp", "sig", "bands", "vec")
+              if os.path.isdir(os.path.join(store, sub))}
+    if not tables and any(f.endswith(".parquet") for f in os.listdir(store)):
+        tables["."] = store
+    return {sub: sorted(map(str, spark.read.parquet(d).collect()))
+            for sub, d in tables.items()}
+
+
+@pytest.mark.parametrize("family",
+                         ["near", "exact", "semantic", "clean", "budget"])
+def test_ingest_gate_replay_is_noop(spark, tmp_path, family):
     """Replaying a FULLY-applied batch (same batch_id) must change
-    neither the landing zone nor the signature store — the _batch_marker
-    effectively-once contract. (Same-id pairs are excluded by a < b, so
-    without the marker the store copy could not flag its own replay and
-    signatures would silently duplicate.)"""
-    from etl_tool_spark.streaming.dedup import land_batch, land_near_batch
+    neither the landing zone nor any store table — the _batch_marker
+    effectively-once contract, for every gate family. (Same-id pairs are
+    excluded by a < b, so without the marker the store copy could not
+    flag its own replay and signatures would silently duplicate.)"""
+    from etl_tool_spark.streaming import dedup as G
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon")
-    b1 = spark.createDataFrame([(1, base + " ONE"), (2, "unique text here")],
-                               "doc_id long, text string")
+    docs = spark.createDataFrame(
+        [(1, base + " ONE"), (2, "unique text here"), (3, base + " ONE")],
+        "doc_id long, text string")
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.1, 0.0]), (2, [0.99, 0.01, 0.1, 0.0]),
+         (3, [0.0, 1.0, 0.0, 0.1])], "vec_id long, embedding array<float>")
+    land = {
+        "near": lambda s, o: G.land_near_batch(docs, 7, s, o),
+        "exact": lambda s, o: G.land_batch(docs, 7, s, o),
+        "semantic": lambda s, o: G.land_semantic_batch(
+            vecs, 7, s, o, threshold=0.9, dim=4, bands=8, rows_per_band=2),
+        "clean": lambda s, o: G.land_clean_batch(docs, 7, s, o),
+        "budget": lambda s, o: G.land_budget_batch(docs, 7, s, o,
+                                                   quota_frac=0.5),
+    }[family]
 
-    store, out = str(tmp_path / "ns"), str(tmp_path / "nl")
-    land_near_batch(b1, 7, store, out)
-    landed1 = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-    sig1 = spark.read.parquet(store + "/sig").count()
-    land_near_batch(b1, 7, store, out)          # replay after success
-    assert sorted(r["doc_id"]
-                  for r in spark.read.parquet(out).collect()) == landed1
-    assert spark.read.parquet(store + "/sig").count() == sig1
-
-    estore, eout = str(tmp_path / "es"), str(tmp_path / "el")
-    land_batch(b1, 3, estore, eout)
-    n1 = spark.read.parquet(eout).count()
-    land_batch(b1, 3, estore, eout)             # replay after success
-    assert spark.read.parquet(eout).count() == n1
+    store, out = str(tmp_path / "store"), str(tmp_path / "landed")
+    land(store, out)
+    landed1 = sorted(map(str, spark.read.parquet(out).collect()))
+    tables1 = _store_tables(spark, store)
+    assert landed1
+    if family != "budget":  # the budget gate keeps only batch markers
+        assert tables1
+    land(store, out)                            # replay after success
+    assert sorted(map(str, spark.read.parquet(out).collect())) == landed1
+    assert _store_tables(spark, store) == tables1
 
 
 def test_full_clean_ingest_stream(spark, tmp_path):
