@@ -79,15 +79,10 @@ def incremental_exact_dedup(new_df: DataFrame, store_dir: str,
     batch_first = (with_fp.withColumn("_rk", F.row_number().over(keep_w))
                           .filter(F.col("_rk") == 1).drop("_rk"))
 
-    import glob as _glob
-    import os as _os
+    from etl_tool_spark import commit as C
 
-    from etl_tool_spark.util import require_local_store
-
-    require_local_store(store_dir, "exact-dedup fingerprint store")
-    from etl_tool_spark.llm.store import finish_pending_compaction
-    finish_pending_compaction(store_dir)
-    part_files = sorted(_glob.glob(_os.path.join(store_dir, "*.parquet")))
+    C.recover(store_dir)
+    part_files = C.ls(f"{store_dir}/*.parquet")
     if part_files:
         seen = spark.read.parquet(*part_files)
         survivors = batch_first.join(seen, "_fp", "left_anti")
@@ -513,71 +508,41 @@ def _jaccard_verify(hs_frame: DataFrame, cands: DataFrame, id_col: str,
 
 
 def _check_store_layout(store_dir: str) -> int:
-    """Refuse a minhash store of another layout before anything reads
-    or writes it, and return its pinned band-shard count. Flat part
-    files in the root are signatures of an earlier layout, or another
-    kind of store (an exact-dedup fingerprint store is flat): read as a
-    sig/ + bands/ store they would look EMPTY, and every duplicate of
-    their corpus would pass unflagged. An unpinned bands/ table is
-    refused by store.store_shards. One listing per call."""
-    import os as _os
-
+    """Open a minhash store (store.open_store), refusing one of another
+    layout before anything reads or writes it, and return its pinned
+    band-shard count. Flat part files in the root are signatures of an
+    earlier layout, or another kind of store (an exact-dedup fingerprint
+    store is flat): read as a sig/ + bands/ store they would look EMPTY,
+    and every duplicate of their corpus would pass unflagged. An
+    unpinned bands/ table is refused by store.store_shards."""
     from etl_tool_spark.llm import store as _st
-    from etl_tool_spark.util import require_local_store
 
-    require_local_store(store_dir, "minhash signature store")
     if _st.flat_files(store_dir):
         raise ValueError(
             f"{store_dir} holds flat part files, not the sig/ + bands/ "
             "minhash store layout (an earlier layout, or another kind of "
             "store); rebuild the store")
-    return _st.store_shards(_os.path.join(store_dir, "bands"))
+    return _st.open_store(store_dir)
 
 
 def append_signatures(df: DataFrame, store_dir: str,
                       id_col: str = "doc_id", text_col: str = "text",
                       num_hashes: int = 16, bands: int = 8,
-                      shingle_n: int = 3, prehashed: bool = False,
-                      banded: DataFrame | None = None) -> None:
+                      shingle_n: int = 3) -> None:
     """Append ``df``'s minhash signatures + banded keys to an
-    incremental store WITHOUT running pair discovery. The ingest-gate
-    path (streaming/dedup.py:near-dup gate) uses this to remember only
-    the SURVIVORS of a batch — dropped duplicates must not pollute the
-    store, or later docs would be compared against text the corpus never
-    kept. Parameters must match the store's (same hash family).
-    ``prehashed=True`` takes ``df`` as an existing (id, _hs) signature
-    frame (e.g. the gate's staged batch signatures) instead of hashing
-    ``text_col``. ``banded`` supplies the matching pre-computed
-    (id, _band, _bucket) keys (the gate's staged band table) — then the
-    minhash banding never recomputes on append, and the two store
-    tables (independent directories) are written CONCURRENTLY
-    (store.overlap_writes, guide §2.6) instead of band-after-sig;
-    crash anywhere leaves the batch unmarked and wholly replayed, the
-    same recovery as the sequential order."""
-    import os as _os
-
+    incremental store WITHOUT running pair discovery — remember a set of
+    documents (e.g. a seed corpus) so later batches are compared against
+    it. Parameters must match the store's (same hash family). The
+    ingest gates stage their survivors' already-computed signatures
+    through ``store.stage_appends`` instead."""
     from etl_tool_spark.llm import store as _st
 
-    spark = df.sparkSession
     _check_store_layout(store_dir)
-    sig_dir = _os.path.join(store_dir, "sig")
-    bands_dir = _os.path.join(store_dir, "bands")
-    hs = (df.select(F.col(id_col), "_hs") if prehashed
-          else df.select(F.col(id_col),
-                         shingle_hashes(F.col(text_col), shingle_n)
-                         .alias("_hs")))
-    if banded is None:
-        _st.append_and_pin(hs, store_dir, "sig",
-                           lambda t: _band_frame(t, id_col, num_hashes, bands),
-                           ["_band", "_bucket"])
-        return
-    _st.finish_pending_compaction(sig_dir)
-    _st.overlap_writes(
-        spark,
-        lambda: hs.write.mode("append").parquet(sig_dir),
-        lambda: _st.append_bands(
-            banded.select(F.col(id_col), "_band", "_bucket"),
-            bands_dir, ["_band", "_bucket"]))
+    hs = df.select(F.col(id_col),
+                   shingle_hashes(F.col(text_col), shingle_n).alias("_hs"))
+    _st.append_and_pin(hs, store_dir, "sig",
+                       lambda t: _band_frame(t, id_col, num_hashes, bands),
+                       ["_band", "_bucket"])
 
 
 def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
@@ -641,16 +606,11 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
     # batch into hs_old on a later re-execution (double-counted shingles
     # ⇒ wrong Jaccard). A production deployment would use a table format
     # with snapshot isolation (Iceberg/Delta) instead of raw parquet.
-    import glob as _glob
-    import os as _os
-
     from etl_tool_spark.llm import store as _st
 
     n_shards = _check_store_layout(store_dir)
-    sig_dir = _os.path.join(store_dir, "sig")
-    bands_dir = _os.path.join(store_dir, "bands")
-    _st.finish_pending_compaction(sig_dir)
-    sig_files = sorted(_glob.glob(_os.path.join(sig_dir, "*.parquet")))
+    bands_dir = f"{store_dir}/bands"
+    sig_files = _st.flat_files(f"{store_dir}/sig")
     band_files = _st.sharded_files(bands_dir)
     first_batch = not sig_files
     if first_batch:
@@ -910,16 +870,12 @@ def incremental_paragraph_dedup(new_df: DataFrame, store_dir: str,
     every batch's output equals the one-shot ``paragraph_dedup`` over
     the full corpus (asserted in tests and the catalog fold query).
 
-    Store contract matches ``incremental_exact_dedup``: a local parquet
+    Store contract matches ``incremental_exact_dedup``: a parquet
     directory of ``_pfp`` md5 fingerprints, reads pinned to the current
     part files, survivor-only appends."""
-    import glob as _glob
-    import os as _os
-
-    from etl_tool_spark.util import require_local_store
-
-    require_local_store(store_dir, "paragraph-dedup fingerprint store")
     import re
+
+    from etl_tool_spark import commit as C
 
     spark = new_df.sparkSession
     pat = re.escape(sep)
@@ -934,9 +890,8 @@ def incremental_paragraph_dedup(new_df: DataFrame, store_dir: str,
     marked = (paras.join(keeper, "_pfp")
                    .withColumn("_first",
                                F.struct("_id", "_pos") == F.col("_k")))
-    from etl_tool_spark.llm.store import finish_pending_compaction
-    finish_pending_compaction(store_dir)
-    part_files = sorted(_glob.glob(_os.path.join(store_dir, "*.parquet")))
+    C.recover(store_dir)
+    part_files = C.ls(f"{store_dir}/*.parquet")
     if part_files:
         seen = spark.read.parquet(*part_files)
         marked = (marked.join(seen.withColumn("_seen", F.lit(True)),

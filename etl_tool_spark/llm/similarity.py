@@ -475,9 +475,9 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 5,
     partitions via dynamic partition pruning."""
     from pyspark.sql import Window
 
-    from etl_tool_spark.llm.store import finish_pending_compaction
+    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
-    finish_pending_compaction(f"{base}/vectors")
+    C.recover(base)
     cent_rows = spark.read.parquet(f"{base}/centroids") \
                      .orderBy("cell").collect()
     centroids = [list(r["centroid"]) for r in cent_rows]
@@ -518,9 +518,9 @@ def ivf_append_index(new_df: DataFrame, index_dir: str,
     rebuild via ivf_build_index when cell imbalance degrades recall —
     appends never mutate existing files, so a rebuild can run alongside
     reads and swap in atomically."""
-    from etl_tool_spark.llm.store import finish_pending_compaction
+    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
-    finish_pending_compaction(f"{base}/vectors")
+    C.recover(base)
     spark = new_df.sparkSession
     cent_rows = spark.read.parquet(f"{base}/centroids") \
                      .orderBy("cell").collect()
@@ -537,9 +537,9 @@ def ivf_cell_stats(spark, index_dir: str) -> DataFrame:
     trigger (a cell holding a large corpus fraction means probes scan
     too much; many near-empty cells mean wasted nlist). Reads only
     partition metadata + counts; one aggregate over the index."""
-    from etl_tool_spark.llm.store import finish_pending_compaction
+    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
-    finish_pending_compaction(f"{base}/vectors")
+    C.recover(base)
     return (spark.read.parquet(f"{base}/vectors")
                  .groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors")))
 
@@ -553,42 +553,20 @@ def append_embedding_signatures(df: DataFrame, store_dir: str,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding",
                                 dim: int = 64, bands: int = 64,
-                                rows_per_band: int = 6,
-                                prenormed: bool = False,
-                                banded: DataFrame | None = None) -> None:
+                                rows_per_band: int = 6) -> None:
     """Append vectors + banded sign-LSH keys to an incremental embedding
-    store WITHOUT pair discovery — the semantic ingest gate remembers
-    only a batch's SURVIVORS (llm/dedup.py append_signatures rationale:
-    dropped near-dups must not pollute the store). ``prenormed`` takes
-    ``df`` as an existing (id, vec, _norm) frame; ``banded`` supplies
-    the matching pre-computed band keys (both typically staged parquet
-    from the gate) so neither the norms nor the sign projections
-    recompute."""
-    import os as _os
-
+    store WITHOUT pair discovery (llm/dedup.py append_signatures twin).
+    The semantic ingest gate stages its survivors' already-projected
+    keys through ``store.stage_appends`` instead."""
     from etl_tool_spark.llm import store as _st
-    from etl_tool_spark.util import require_local_store
 
-    require_local_store(store_dir, "embedding signature store")
-    # refuse an unpinned bands/ table before the first write
-    _st.store_shards(_os.path.join(store_dir, "bands"))
-    vf = df if prenormed else _norm_frame(df, id_col, vec_col)
-    if banded is None:
-        _st.append_and_pin(
-            vf, store_dir, "vec",
-            lambda t: _banded_keys(t, id_col, vec_col, dim, bands,
-                                   rows_per_band),
-            ["_bkt"])
-        return
-    # two independent store tables → concurrent appends (§2.6); crash
-    # anywhere leaves the batch unmarked and wholly replayed, the same
-    # recovery as the sequential order (store.overlap_writes contract)
-    _st.overlap_writes(
-        vf.sparkSession,
-        lambda: vf.write.mode("append").parquet(
-            _os.path.join(store_dir, "vec")),
-        lambda: _st.append_bands(banded, _os.path.join(store_dir, "bands"),
-                                 ["_bkt"]))
+    # refuses an unpinned bands/ table before the first write
+    _st.open_store(store_dir)
+    _st.append_and_pin(
+        _norm_frame(df, id_col, vec_col), store_dir, "vec",
+        lambda t: _banded_keys(t, id_col, vec_col, dim, bands,
+                               rows_per_band),
+        ["_bkt"])
 
 
 def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
@@ -624,22 +602,14 @@ def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
     the capped one-shot; exact equality holds only uncapped.
 
     Returns (a, b, cosine_sim) with a < b, cosine ≥ threshold."""
-    import glob as _glob
-    import os as _os
-
-    from etl_tool_spark.util import require_local_store
-
     from etl_tool_spark.llm import store as _st
 
-    require_local_store(store_dir, "embedding signature store")
     spark = new_df.sparkSession
     vf_new = _norm_frame(new_df, id_col, vec_col)
 
-    vec_dir = _os.path.join(store_dir, "vec")
-    bands_dir = _os.path.join(store_dir, "bands")
-    n_shards = _st.store_shards(bands_dir)
-    _st.finish_pending_compaction(vec_dir)
-    vec_files = sorted(_glob.glob(_os.path.join(vec_dir, "*.parquet")))
+    n_shards = _st.open_store(store_dir)
+    bands_dir = f"{store_dir}/bands"
+    vec_files = _st.flat_files(f"{store_dir}/vec")
     band_files = _st.sharded_files(bands_dir)
     first_batch = not vec_files
     vf_old = (spark.createDataFrame([], vf_new.schema) if first_batch
@@ -1230,9 +1200,9 @@ def pq_search(spark, index_dir: str, corpus: DataFrame, queries: DataFrame,
     shortlist rows for the exact re-rank."""
     from pyspark.sql import Window
 
-    from etl_tool_spark.llm.store import finish_pending_compaction
+    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
-    finish_pending_compaction(f"{base}/codes")
+    C.recover(base)
     books = _pq_read_codebooks(spark, base)
     codes = (spark.read.parquet(f"{base}/codes")
                   .select(F.col(id_col), F.col("code").alias("_code")))
@@ -1252,9 +1222,9 @@ def pq_append_index(new_df: DataFrame, index_dir: str,
     the quantizer drifts as the corpus distribution shifts, so rebuild
     via pq_build_index when shortlist recall degrades; appends never
     mutate existing files."""
-    from etl_tool_spark.llm.store import finish_pending_compaction
+    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
-    finish_pending_compaction(f"{base}/codes")
+    C.recover(base)
     books = _pq_read_codebooks(new_df.sparkSession, base)
     (pq_encode(new_df.select(id_col, vec_col), books,
                vec_col=vec_col, code_col="code")

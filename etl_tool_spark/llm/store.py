@@ -30,30 +30,35 @@ row as the one-element-array case. ``probe_shards_and_count`` is the
 one-job aggregate for a batch whose band keys were never written.
 
 **The shard count n is pinned per store.** The first append to a bands
-table writes n to the hidden ``_shard_count`` file in it; every later
+table publishes n as the hidden ``_shard_count`` file in it; every later
 append and probe reads it from there, so a store keeps hashing keys to
 the directories they were written to whatever the environment says.
 ``SPARK_GRAFT_BAND_SHARDS`` (default 32; e.g. 1024 at 100 TB) sizes NEW
 stores only. A bands table holding data without the file was written by
 an earlier layout and is refused; there is no in-place reshard — to
 change n, rebuild the store.
+
+**Every append is a commit** (etl_tool_spark.commit): a store's tables
+are written into one stage, published together and promoted, so
+``open_store`` — one listing of pending stages — is all a reader needs
+to see every committed batch and none of a crashed one.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["band_shards", "store_shards", "shard_col", "sharded_files",
-           "flat_files", "append_bands", "append_and_pin", "read_pinned",
-           "probe_shards_and_count", "overlap_writes", "shard_array",
-           "fused_probe_observation", "prune_to_shards", "compact_dir",
-           "compact_store", "partition_column", "finish_pending_compaction"]
+from etl_tool_spark import commit as C
+
+__all__ = ["band_shards", "store_shards", "open_store", "shard_col",
+           "sharded_files", "flat_files", "append_and_pin", "stage_appends",
+           "read_pinned", "probe_shards_and_count", "overlap_writes",
+           "shard_array", "fused_probe_observation", "prune_to_shards",
+           "compact_store", "partition_column"]
 
 SHARD_COUNT_FILE = "_shard_count"
 
@@ -72,17 +77,29 @@ def store_shards(bands_dir: str) -> int:
     answers ``band_shards()``, the count its first append pins. A table
     holding data but no pinned count predates pinning: refused, since
     guessing n would prune probes to the wrong shard directories."""
-    try:
-        with open(os.path.join(bands_dir, SHARD_COUNT_FILE),
-                  encoding="utf-8") as f:
-            return int(f.read())
-    except FileNotFoundError:
-        pass
+    pinned = C.read_text(f"{bands_dir}/{SHARD_COUNT_FILE}")
+    if pinned is not None:
+        return int(pinned)
     if sharded_files(bands_dir) or flat_files(bands_dir):
         raise ValueError(
             f"{bands_dir} holds band keys without a pinned shard count "
             "(an earlier store layout); rebuild the store")
     return band_shards()
+
+
+def _pin_shards(bands_dir: str) -> int:
+    """``store_shards``, published as the table's pin on its first
+    append (a no-op once pinned)."""
+    n = store_shards(bands_dir)
+    C.publish(f"{bands_dir}/{SHARD_COUNT_FILE}", str(n))
+    return n
+
+
+def open_store(store_dir: str) -> int:
+    """Open an incremental store: promote its published stages (see
+    etl_tool_spark.commit) and return its band-shard count."""
+    C.recover(store_dir)
+    return store_shards(f"{store_dir}/bands")
 
 
 def shard_col(*cols: str | Column, n: int) -> Column:
@@ -92,72 +109,84 @@ def shard_col(*cols: str | Column, n: int) -> Column:
 def sharded_files(bands_dir: str) -> list[str]:
     """Every data file of the sharded layout, sorted for deterministic
     pinning."""
-    return sorted(glob.glob(os.path.join(bands_dir, "_shard=*", "*.parquet")))
+    return C.ls(f"{bands_dir}/_shard=*/*.parquet")
 
 
 def flat_files(d: str) -> list[str]:
     """Part files directly under ``d`` (a flat table)."""
-    return sorted(glob.glob(os.path.join(d, "*.parquet")))
+    return C.ls(f"{d}/*.parquet")
 
 
-def append_bands(banded: DataFrame, bands_dir: str,
-                 key_cols: Sequence[str],
-                 probe: bool = False) -> tuple[list[int], int] | None:
-    """Append ``banded`` under the sharded layout, pinning the store's
-    shard count on its first append. The frame is hash-repartitioned ON
-    ``_shard`` before the partitioned write — without it every input
-    partition opens a writer per shard value it holds (measured: 32
-    tasks × 32 shards = 1,024 files PER batch at bench scale, and every
-    later pinned probe re-lists and re-opens all of them). Repartitioned,
-    an append emits at most one file per (task, shard) ≈ one per shard,
-    for one extra batch-sized shuffle of narrow band rows.
+def _write_bands(banded: DataFrame, out_dir: str, key_cols: Sequence[str],
+                 n: int, probe: bool = False):
+    """Write ``banded`` under the sharded layout into ``out_dir`` (a
+    stage). The frame is hash-repartitioned ON ``_shard`` before the
+    partitioned write — without it every input partition opens a writer
+    per shard value it holds (measured: 32 tasks × 32 shards = 1,024
+    files PER batch at bench scale, and every later pinned probe
+    re-lists and re-opens all of them). Repartitioned, an append emits
+    at most one file per (task, shard) ≈ one per shard, for one extra
+    batch-sized shuffle of narrow band rows.
 
-    ``probe=True`` additionally returns (probed shards, band-row count)
-    observed during the write — the incremental update-store path's
-    probe, folded into the append it already pays (guide §1.2)."""
-    n = store_shards(bands_dir)
-    pin = os.path.join(bands_dir, SHARD_COUNT_FILE)
-    if not os.path.exists(pin):
-        os.makedirs(bands_dir, exist_ok=True)
-        with open(pin + ".tmp", "w", encoding="utf-8") as f:
-            f.write(str(n))
-        os.replace(pin + ".tmp", pin)
+    ``probe=True`` returns the resolver of (probed shards, band-row
+    count) observed during the write — the update-store path's probe,
+    folded into the append it already pays."""
     sharded = banded.withColumn("_shard", shard_col(*key_cols, n=n))
     resolve = None
     if probe:
         sharded, resolve = fused_probe_observation(
             sharded, F.array(F.col("_shard")), n)
     (sharded.repartition(n, F.col("_shard"))
-            .write.mode("append").partitionBy("_shard").parquet(bands_dir))
-    return resolve() if resolve else None
+            .write.partitionBy("_shard").parquet(out_dir))
+    return resolve
+
+
+def stage_appends(store_dir: str, key, tables: dict[str, DataFrame],
+                  banded: DataFrame, key_cols: Sequence[str]) -> None:
+    """Write each of ``tables`` (name → rows) and the band keys
+    ``banded`` into stage ``key`` of ``store_dir``, concurrently
+    (``overlap_writes``): nothing is visible until the caller's
+    ``commit.commit(store_dir, key)`` publishes them together."""
+    n = _pin_shards(f"{store_dir}/bands")
+    stage = C.begin(store_dir, key)
+    overlap_writes(
+        banded.sparkSession,
+        *[lambda name=name, t=t: t.write.parquet(f"{stage}/{name}")
+          for name, t in tables.items()],
+        lambda: _write_bands(banded, f"{stage}/bands", key_cols, n))
 
 
 def append_and_pin(table: DataFrame, store_dir: str, table_name: str,
                    band: Callable[[DataFrame], DataFrame],
                    key_cols: Sequence[str]):
     """Append ``table`` to ``store_dir/table_name`` and its band keys
-    (``band`` of the appended rows) to the sharded ``bands/`` table, and
-    return (rows, band rows, probe) re-read PINNED to the just-written
-    part files — hashing and banding execute exactly once (during the
-    writes); every later consumer scans parquet. The probe (shard set +
-    row count) rides the bands append."""
+    (``band`` of the appended rows) to the sharded ``bands/`` table
+    through one stage and one commit, and return (rows, band rows,
+    probe) re-read PINNED to the promoted part files — hashing and
+    banding execute exactly once (during the staged writes); every
+    later consumer scans parquet. The probe (shard set + row count)
+    rides the bands write; a batch that writes no band file answers
+    ([], 0) without reading it (an empty local frame's partitioned
+    write runs no job, so its observation never gets metrics)."""
     spark = table.sparkSession
-    table_dir = os.path.join(store_dir, table_name)
-    bands_dir = os.path.join(store_dir, "bands")
-    finish_pending_compaction(table_dir)
-    pre = set(flat_files(table_dir))
-    pre_band = set(sharded_files(bands_dir))
-    table.write.mode("append").parquet(table_dir)
-    table = spark.read.parquet(*sorted(set(flat_files(table_dir)) - pre))
-    banded = band(table)
-    probe = append_bands(banded, bands_dir, key_cols, probe=True)
-    new_band = sorted(set(sharded_files(bands_dir)) - pre_band)
+    bands_dir = f"{store_dir}/bands"
+    n = _pin_shards(bands_dir)
+    stage = C.begin(store_dir, "append")
+    # a flat write leaves at least one (schema-only) part file
+    table.write.parquet(f"{stage}/{table_name}")
+    banded = band(spark.read.parquet(f"{stage}/{table_name}"))
+    resolve = _write_bands(banded, f"{stage}/bands", key_cols, n,
+                           probe=True)
+    files = C.commit(store_dir, "append", keep=False)
+    new_band = [f for f in files if f.startswith(f"{bands_dir}/")]
+    table = spark.read.parquet(*[
+        f for f in files if f.startswith(f"{store_dir}/{table_name}/")])
     # a partitioned write of an EMPTY frame creates no shard dirs at
     # all (unlike a flat write's schema-only part file) — pin the
     # schema, not a schema-less read
-    banded = (spark.read.parquet(*new_band) if new_band
-              else spark.createDataFrame([], banded.schema))
-    return table, banded, probe
+    if not new_band:
+        return table, spark.createDataFrame([], banded.schema), ([], 0)
+    return table, spark.read.parquet(*new_band), resolve()
 
 
 def read_pinned(spark: SparkSession, bands_dir: str,
@@ -255,13 +284,12 @@ def overlap_writes(spark: SparkSession, *thunks: Callable[[], None]) -> None:
     tasks back-fill executors freed by the current one's tail).
 
     ONLY for writes whose order is NOT a crash contract: the ingest
-    gates' land-before-store ordering must never pass through here,
-    but the per-table store appends AFTER a landing (sig/ vs bands/,
-    fp/ vs sig/) are independent directories replayed wholesale from
-    the batch marker on a crash, so any interleaving is as safe as the
-    sequential order (same argument as compact_store's pool). A thunk
-    failure propagates after all thunks finish — identical outcome to
-    a crash between sequential appends (batch unmarked → replayed)."""
+    gates' land-before-store ordering must never pass through here, but
+    the store tables of one stage (sig/ vs bands/ vs fp/) become visible
+    together at the commit, so any interleaving of their writes is as
+    safe as the sequential order. A thunk failure propagates after all
+    thunks finish — identical outcome to a crash between sequential
+    writes (stage unpublished → replayed)."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -293,125 +321,56 @@ def prune_to_shards(banded_old: DataFrame, shards: Sequence[int]) -> DataFrame:
 # current snapshot into one file per shard (sharded) or a handful of
 # files (flat) during a maintenance window between batches.
 #
-# Raw parquet has no transaction log, so crash safety comes from the
-# discipline of a staged copy: nothing in the live directory is
-# deleted until a complete staged copy exists, and the promotion step
-# is driven by a MANIFEST of exactly the files the staged copy
-# replaces — so a batch that appends between a crashed promotion and
-# its recovery can never lose data (recovery deletes only manifest
-# files, every one of which is duplicated in the stage). The stage is
-# authoritative the moment its manifest exists; before that it is
-# garbage and recovery discards it.
-
-_COMPACT_SUFFIX = "_compact"
-_MANIFEST = "_compact_manifest.json"
-
-
-def _stage_data_files(stage: str) -> list[str]:
-    """Data files of a staged compaction, flat or hive-partitioned
-    (any single-level partition column — ``_shard=`` band stores,
-    ``cell=`` IVF indexes)."""
-    return sorted(glob.glob(os.path.join(stage, "*.parquet"))
-                  + glob.glob(os.path.join(stage, "*=*", "*.parquet")))
+# Raw parquet has no transaction log, so a compaction is a commit
+# (etl_tool_spark.commit): the rewrite is staged, a manifest naming
+# exactly the files it replaces is published, and the promote deletes
+# those files and moves the staged copy in. A batch that appends
+# between a crashed promote and its recovery never loses data: the
+# promote deletes only manifest files, every one of which is duplicated
+# in the stage. A table of a store stages under the store's root, so
+# the store's one recovery listing finishes it.
 
 
 def partition_column(d: str) -> str | None:
     """The hive partition column of a table directory, or None for a
     flat layout — detected from the ``col=value`` directory names."""
-    for p in sorted(glob.glob(os.path.join(d, "*=*"))):
-        if os.path.isdir(p):
-            return os.path.basename(p).split("=", 1)[0]
+    for p in C.ls(f"{d}/*=*"):
+        return p.rsplit("/", 1)[1].split("=", 1)[0]
     return None
 
 
-def _promote_compaction(d: str, stage: str) -> None:
-    """Finish a staged compaction whose manifest exists: remove the
-    replaced files (tolerating ones a crashed promotion already
-    removed), move the staged files in, drop the stage. Idempotent —
-    safe to re-run from any interruption point."""
-    import json as _json
-    with open(os.path.join(stage, _MANIFEST), encoding="utf-8") as f:
-        replaced = _json.load(f)["files"]
-    for f in replaced:
-        try:
-            os.remove(f)
-        except FileNotFoundError:
-            pass
-    for src in _stage_data_files(stage):
-        rel = os.path.relpath(src, stage)
-        dst = os.path.join(d, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-    shutil.rmtree(stage, ignore_errors=True)
+def _compact(spark: SparkSession, root: str, rel: str,
+             sharded: bool | None, target_files: int) -> dict:
+    """Compact table ``rel`` of ``root`` ("" = ``root`` itself) in
+    place; returns ``{"before": n_files, "after": n_files}``.
 
-
-def finish_pending_compaction(d: str) -> None:
-    """Recover an interrupted ``compact_dir`` run on ``d``. A stage
-    with a manifest is complete and promotes (data files in ``d`` stay
-    a superset of one full snapshot throughout); a stage without one
-    died mid-write and is discarded. Called from every store-open path
-    so readers never see the missing-rows window a crashed promotion
-    leaves behind."""
-    stage = d.rstrip("/") + _COMPACT_SUFFIX
-    if not os.path.isdir(stage):
-        return
-    if os.path.exists(os.path.join(stage, _MANIFEST)):
-        _promote_compaction(d, stage)
-    else:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def compact_dir(spark: SparkSession, d: str, sharded: bool | None = None,
-                target_files: int = 4) -> dict:
-    """Compact a store table directory in place; returns
-    ``{"before": n_files, "after": n_files}``.
-
-    ``sharded=None`` auto-detects the layout (``_shard=`` partition
-    directories → sharded). A sharded table compacts to one file per
-    shard; a flat table coalesces to ``target_files``. No-op when the
-    table is already at or under the target.
-
-    Concurrency contract: run between batches (a maintenance window).
-    Probes pin pre-append file lists, so a probe planned BEFORE the
-    compaction must finish before promotion deletes its files — same
-    snapshot caveat as the append paths, and the reason a production
-    deployment would put these stores on Iceberg/Delta. Crash at any
-    point is recovered by the next store open or ``compact_dir`` call
-    (see finish_pending_compaction)."""
-    finish_pending_compaction(d)
-    # any single-level hive layout compacts to one file per partition
-    # value: _shard= band stores, cell= IVF indexes. `sharded` keeps
-    # its boolean meaning for callers; the column is detected.
+    ``sharded=None`` auto-detects the layout (partition directories →
+    sharded). Any single-level hive layout compacts to one file per
+    partition value (``_shard=`` band stores, ``cell=`` IVF indexes); a
+    flat table coalesces to ``target_files``. No-op when the table is
+    already at or under the target."""
+    d = f"{root}/{rel}" if rel else root
     part = partition_column(d)
     if sharded is None:
         sharded = part is not None
-    files = (sorted(glob.glob(os.path.join(d, f"{part}=*", "*.parquet")))
-             if sharded else flat_files(d))
-    n_parts = len({os.path.basename(os.path.dirname(f))
-                   for f in files}) if sharded else 0
+    files = C.ls(f"{d}/{part}=*/*.parquet") if sharded else flat_files(d)
+    n_parts = len({f.rsplit("/", 2)[1] for f in files}) if sharded else 0
     target = n_parts if sharded else max(1, target_files)
     if len(files) <= target:
         return {"before": len(files), "after": len(files)}
-    stage = d.rstrip("/") + _COMPACT_SUFFIX
-    shutil.rmtree(stage, ignore_errors=True)
+    key = f"compact-{rel}" if rel else "compact"
+    stage = C.begin(root, key)
+    out = f"{stage}/{rel}" if rel else stage
     if sharded:
         # re-derive the partition column from the directory names
         # (basePath read), and repartition on it — one file per
-        # partition value (see append_bands)
+        # partition value (see _write_bands)
         (spark.read.option("basePath", d).parquet(*files)
               .repartition(F.col(part))
-              .write.mode("overwrite").partitionBy(part).parquet(stage))
+              .write.partitionBy(part).parquet(out))
     else:
-        (spark.read.parquet(*files).coalesce(target)
-              .write.mode("overwrite").parquet(stage))
-    import json as _json
-    manifest = os.path.join(stage, _MANIFEST)
-    with open(manifest + ".tmp", "w", encoding="utf-8") as f:
-        _json.dump({"files": files}, f)
-    os.rename(manifest + ".tmp", manifest)  # stage becomes authoritative
-    _promote_compaction(d, stage)
-    after = (sorted(glob.glob(os.path.join(d, f"{part}=*", "*.parquet")))
-             if sharded else flat_files(d))
+        spark.read.parquet(*files).coalesce(target).write.parquet(out)
+    after = C.commit(root, key, replaces=files, keep=False)
     return {"before": len(files), "after": len(after)}
 
 
@@ -424,33 +383,34 @@ def compact_store(spark: SparkSession, store_dir: str,
     codes/ table; a bare exact-dedup store is its own flat table).
     Returns per-table before/after file counts.
 
-    The per-table compactions are INDEPENDENT (distinct directories,
-    distinct staged copies, distinct manifests), so they run from a
-    small driver thread pool: the next table's rewrite job back-fills
-    executors freed by the current one's task tail instead of each job
-    paying its straggler latency back to back (optimization guide
-    §2.6). Crash safety is unchanged — each table keeps its own staged
-    copy + manifest protocol, and a crash mid-pool leaves each table
-    either untouched, staged-unmanifested (discarded on recovery), or
-    manifested (promoted on recovery), exactly as in the sequential
-    order."""
+    Concurrency contract: run between batches (a maintenance window).
+    Probes pin pre-append file lists, so a probe planned BEFORE the
+    compaction must finish before promotion deletes its files — same
+    snapshot caveat as the append paths, and the reason a production
+    deployment would put these stores on Iceberg/Delta. A crash at any
+    point is finished by the next store open.
+
+    The per-table compactions are INDEPENDENT (distinct tables, stages
+    and manifests), so they run from a small thread pool: the next
+    table's rewrite job back-fills executors freed by the current one's
+    task tail instead of each job paying its straggler latency back to
+    back."""
+    C.recover(store_dir)
+    present = {p.rsplit("/", 1)[1] for p in
+               C.ls(f"{store_dir}/{{sig,vec,fp,bands,vectors,codes}}")}
     tables = [(sub, is_sharded)
               for sub, is_sharded in (("sig", False), ("vec", False),
                                       ("fp", False), ("bands", True),
                                       ("vectors", None), ("codes", False))
-              if os.path.isdir(os.path.join(store_dir, sub))]
+              if sub in present]
     if not tables:
         if flat_files(store_dir):
-            return {".": compact_dir(spark, store_dir, sharded=False,
-                                     target_files=target_files)}
+            return {".": _compact(spark, store_dir, "", False, target_files)}
         return {}
     from concurrent.futures import ThreadPoolExecutor
 
-    def _one(sub: str, is_sharded: bool | None) -> dict:
-        return compact_dir(spark, os.path.join(store_dir, sub),
-                           sharded=is_sharded, target_files=target_files)
-
-    one = _inheritable(spark, _one)
+    one = _inheritable(spark, lambda sub, is_sharded: _compact(
+        spark, store_dir, sub, is_sharded, target_files))
 
     # 2-3 jobs in flight is plenty (guide §2.6): enough to fill the
     # tail, not so many that tiny rewrite jobs fight for cores

@@ -74,8 +74,9 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
     a zero delta, and silently lose the batch from the MV forever). A
     fully-applied batch is marked by ``_MV_COMMITTED`` — written only
     AFTER the snapshot manifest commit, so the short-circuit can never
-    hide an uncommitted merge — and short-circuits the replay; a
-    partial MV directory is overwritten.
+    hide an uncommitted merge, and published like the snapshot manifest
+    (``commit.publish``) — and short-circuits the replay; a partial MV
+    directory is overwritten.
 
     Write overlap (guide §2.6): on the non-replay path the MV fold is
     computed from the PRE-merge snapshot version plus the batch's
@@ -88,14 +89,13 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
     and touched keys' old rows are all replaced), and the post-merge
     snapshot == pre-merge rows anti-joined on the touched keys ∪
     upserts (buckets are a pure function of the key)."""
-    from etl_tool_spark.streaming.cdc import (_fs, _load_manifest,
-                                              _prepare_merge, _write_text,
-                                              list_versions,
-                                              read_snapshot)
+    from etl_tool_spark import commit as C
+    from etl_tool_spark.streaming.cdc import (_load_manifest, _prepare_merge,
+                                              list_versions, read_snapshot)
 
     mv_path = f"{mv_dir}/v{batch_id}"
-    fs, marker, _ = _fs(spark, f"{mv_path}/_MV_COMMITTED")
-    if fs.exists(marker):  # replay of a fully-applied batch: no-op
+    marker = f"{mv_path}/_MV_COMMITTED"
+    if C.exists(marker):  # replay of a fully-applied batch: no-op
         return spark.read.parquet(mv_path)
 
     def batch_version() -> int | None:
@@ -238,5 +238,5 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
     # _SUCCESS lands when the MV write job finishes, which under the
     # overlap can PRECEDE the manifest — short-circuiting on it could
     # skip a replay whose merge never committed (silent snapshot loss)
-    _write_text(spark, f"{mv_path}/_MV_COMMITTED", "")
+    C.publish(marker, "")
     return spark.read.parquet(mv_path)

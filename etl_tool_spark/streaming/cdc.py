@@ -19,10 +19,11 @@ protocol, miniaturized). Data files are IMMUTABLE — every merge writes
 its output buckets into a fresh ``data/<batch>-<attempt>/`` directory
 and never deletes or overwrites live files. A version is a manifest
 JSON in ``_versions/`` mapping bucket → data directory; the CURRENT
-version is simply the highest-numbered manifest. Committing = writing
-the manifest to a temp name and RENAMING it into place — a single
-atomic filesystem operation (HDFS/POSIX rename; on S3 front it with a
-consistent store, the same caveat every table format carries). A crash
+version is simply the highest-numbered manifest. Committing = a
+``commit.publish`` of the manifest: create-if-absent through a temp
+write and a RENAME — a single atomic filesystem operation (HDFS/POSIX
+rename; on S3 front it with a consistent store, the same caveat every
+table format carries) — checked by a read-back. A crash
 anywhere before the rename leaves the previous version fully intact
 and only an orphaned data directory behind (``vacuum`` collects it);
 there is no window in which a reader can observe a half-merged
@@ -48,11 +49,14 @@ key-partitioning, Debezium per-table topics)."""
 from __future__ import annotations
 
 import json
+import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from etl_tool_spark import commit as C
 
 __all__ = ["merge_cdc_batch", "read_snapshot", "cdc_merge_stream",
            "list_versions", "vacuum", "snapshot_diff", "restore_version"]
@@ -60,40 +64,6 @@ __all__ = ["merge_cdc_batch", "read_snapshot", "cdc_merge_stream",
 BUCKET_COL = "_bucket"
 VERSIONS_DIR = "_versions"
 DATA_DIR = "data"
-
-
-# --- Hadoop FS helpers: scheme-independent, driver-side metadata ops ---
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), p, jvm
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
-    fs, p, jvm = _fs(spark, path)
-    stream = fs.open(p)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    fs, p, _ = _fs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _list_names(spark: SparkSession, dir_path: str) -> list[str]:
-    fs, p, _ = _fs(spark, dir_path)
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 # --- version bookkeeping ---
@@ -104,17 +74,15 @@ def _manifest_name(n: int) -> str:
 
 def list_versions(spark: SparkSession, snapshot_dir: str) -> list[int]:
     """Retained version numbers, ascending (vacuum trims the head)."""
-    names = _list_names(spark, f"{snapshot_dir}/{VERSIONS_DIR}")
-    return sorted(int(n[1:10]) for n in names
-                  if n.startswith("v") and n.endswith(".json"))
+    return sorted(int(p.rsplit("/", 1)[1][1:10]) for p in
+                  C.ls(f"{snapshot_dir}/{VERSIONS_DIR}/v*.json"))
 
 
 def _reject_legacy_layout(spark: SparkSession, snapshot_dir: str) -> None:
     """A directory with `_bucket=*` dirs at top level is the
     pre-versioned layout. Folding new batches over it as if empty would
     silently discard the existing state — refuse instead. One listing."""
-    if any(n.startswith(f"{BUCKET_COL}=")
-           for n in _list_names(spark, snapshot_dir)):
+    if C.ls(f"{snapshot_dir}/{BUCKET_COL}=*"):
         raise ValueError(
             f"{snapshot_dir} uses the pre-versioned snapshot layout "
             "(top-level _bucket=* directories), which is not read; "
@@ -123,39 +91,20 @@ def _reject_legacy_layout(spark: SparkSession, snapshot_dir: str) -> None:
 
 
 def _load_manifest(spark: SparkSession, snapshot_dir: str, n: int) -> dict:
-    return json.loads(_read_text(
-        spark, f"{snapshot_dir}/{VERSIONS_DIR}/{_manifest_name(n)}"))
+    path = f"{snapshot_dir}/{VERSIONS_DIR}/{_manifest_name(n)}"
+    text = C.read_text(path)
+    if text is None:
+        raise FileNotFoundError(path)
+    return json.loads(text)
 
 
 def _commit_manifest(spark: SparkSession, snapshot_dir: str, n: int,
                      manifest: dict) -> bool:
-    """Publish version ``n``: write to a temp name, rename into place,
-    then VERIFY the content at the target is ours. Returns False when
-    another attempt's manifest occupies v{n}.
-
-    The post-verify matters because rename semantics differ by
-    filesystem: HDFS rename fails when the target exists, but the local
-    filesystem's rename silently REPLACES it — without the read-back, a
-    lost race would be a silent lost update instead of a detected one.
-    The exists-check + verify pair turns every interleaving into either
-    a clean win or a detected loss (resolved by batch_id upstream)."""
-    vdir = f"{snapshot_dir}/{VERSIONS_DIR}"
-    fs, vp, jvm = _fs(spark, vdir)
-    fs.mkdirs(vp)
-    tmp = f"{vdir}/.tmp-{uuid.uuid4().hex}"
-    _write_text(spark, tmp, json.dumps(manifest))
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    dst_path = f"{vdir}/{_manifest_name(n)}"
-    dst = jvm.org.apache.hadoop.fs.Path(dst_path)
-    ok = (not fs.exists(dst)) and fs.rename(src, dst)
-    if fs.exists(src):
-        fs.delete(src, False)
-    if not ok:
-        return False
-    try:
-        return json.loads(_read_text(spark, dst_path)) == manifest
-    except Exception:
-        return False
+    """Publish version ``n`` (``commit.publish``). Returns False when
+    another attempt's manifest occupies v{n} — a lost race, resolved by
+    batch_id upstream."""
+    return C.publish(f"{snapshot_dir}/{VERSIONS_DIR}/{_manifest_name(n)}",
+                     json.dumps(manifest))
 
 
 def _bucket_paths(snapshot_dir: str, manifest: dict) -> list[str]:
@@ -166,10 +115,8 @@ def _bucket_paths(snapshot_dir: str, manifest: dict) -> list[str]:
 def _written_buckets(spark: SparkSession, out_dir: str) -> list[str]:
     """Bucket ids just written under ``out_dir`` (partition dir names),
     sorted — a driver-side metadata listing, not a plan re-execution."""
-    return sorted((n.split("=", 1)[1]
-                   for n in _list_names(spark, out_dir)
-                   if n.startswith(f"{BUCKET_COL}=")),
-                  key=int)
+    return sorted((p.rsplit("=", 1)[1]
+                   for p in C.ls(f"{out_dir}/{BUCKET_COL}=*")), key=int)
 
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str,
@@ -372,24 +319,20 @@ def vacuum(spark: SparkSession, snapshot_dir: str, keep_last: int = 2,
     format's VACUUM documents)."""
     versions = list_versions(spark, snapshot_dir)
     keep_ns = versions[-keep_last:] if keep_last > 0 else []
-    fs, _, jvm = _fs(spark, snapshot_dir)
     for n in versions:
         if n not in keep_ns:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{snapshot_dir}/{VERSIONS_DIR}/{_manifest_name(n)}"), False)
+            C.delete(f"{snapshot_dir}/{VERSIONS_DIR}/{_manifest_name(n)}")
     referenced = set()
     for n in keep_ns:
         m = _load_manifest(spark, snapshot_dir, n)
         referenced.update(d.split("/", 1)[1] for d in m["buckets"].values())
-    now_ms = jvm.java.lang.System.currentTimeMillis()
+    now_ms = time.time() * 1000.0
     removed = 0
-    for name in _list_names(spark, f"{snapshot_dir}/{DATA_DIR}"):
-        if name in referenced:
+    for p in C.ls(f"{snapshot_dir}/{DATA_DIR}/*"):
+        if p.rsplit("/", 1)[1] in referenced:
             continue
-        p = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/{DATA_DIR}/{name}")
-        age_s = (now_ms - fs.getFileStatus(p).getModificationTime()) / 1000.0
-        if age_s >= min_age_s:
-            fs.delete(p, True)
+        if (now_ms - C.mtime(p)) / 1000.0 >= min_age_s:
+            C.delete(p)
             removed += 1
     return removed
 

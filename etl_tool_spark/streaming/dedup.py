@@ -7,17 +7,29 @@ skeleton, ``_gate``, and differ only in three hooks:
                    ``<store>/gate-staging``, and returns the frame to
                    gate (file-backed when the family stages here);
   pairs(gated)     that frame's near-dup pairs (a < b) against the store;
-  append(survivors) puts the survivors' keys into the store tables.
+  append(survivors, batch_id)
+                   writes the survivors' keys for every store table into
+                   the batch's stage (``store.stage_appends``).
 
-The skeleton owns everything else, in this order: the ``_applied``
-batch marker check (a replay of a fully-applied batch is a no-op), the
-keep-earliest drop policy (``_gate_survivors``) under a lazy
-``localCheckpoint``, the landing of the survivors in ``out_dir`` BEFORE
-``append``, the marker commit, then the release of the checkpoint blocks
-and of the staging directory. Land-before-store is the crash contract:
-a crash after a landing and before the marker replays the batch as a
-duplicate landing (at-least-once, keyed by ``batch_id``), never as a
-silent drop. The exact gate (``land_batch``) and the token-budget gate
+The skeleton owns everything else, in this order: store recovery and
+the ``_applied/<batch_id>`` check (a replay of a fully-applied batch is
+a no-op), the keep-earliest drop policy (``_gate_survivors``) under a
+lazy ``localCheckpoint``, the landing of the survivors in ``out_dir``
+BEFORE ``append``, the commit, then the release of the checkpoint
+blocks and of the staging directory.
+
+Crash contract. Publishing ``_applied/<batch_id>`` (etl_tool_spark.commit)
+is both the batch marker and the manifest of the batch's stage, so all
+of a batch's store tables become visible at once or not at all:
+
+* before the publish (after the landing, or mid-stage), the replay
+  lands the batch again — at-least-once, keyed by ``batch_id`` — and
+  restages it from scratch; land-before-store means a crash can
+  duplicate a landing but never silently drop one;
+* after the publish (mid-promote included), the next store open
+  finishes the promote and the replay is a no-op.
+
+The exact gate (``land_batch``) and the token-budget gate
 (``land_budget_batch``) have no pair stage; they keep the same marker
 and write order by hand.
 
@@ -28,15 +40,13 @@ at-least-once."""
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_tool_spark.llm.dedup import (append_signatures,
-                                      incremental_exact_dedup,
+from etl_tool_spark import commit as C
+from etl_tool_spark.llm.dedup import (incremental_exact_dedup,
                                       incremental_minhash_pairs)
 from etl_tool_spark.llm.text import fingerprint
 from etl_tool_spark.streaming.events import stream_foreach_batch
@@ -51,32 +61,13 @@ __all__ = ["near_dedup_stream", "exact_dedup_stream",
 _STAGING = "gate-staging"
 
 
-def _batch_marker(store_dir: str, batch_id: int):
-    """O(1) idempotency check for a (store, batch) application: returns
-    (already_applied, commit_fn). The marker is written AFTER the
-    batch's land + store writes succeed, so a replay of a FULLY-applied
-    batch is a no-op (no duplicate landing rows, no duplicate store
-    signatures) — effectively-once for every crash outside the narrow
-    append→marker window, where the documented at-least-once semantics
-    (collapse on batch_id) still hold. The check costs one stat call,
-    never a scan of the growing store."""
-    import os
-
-    from etl_tool_spark.util import require_local_store
-
-    # loud failure on object-store URIs: os.path.exists on "s3a://…" is
-    # always False, so the replay guard would silently never engage
-    # (every replay re-lands — at-least-once instead of effectively-once)
-    require_local_store(store_dir, "streaming gate store")
-    marker_dir = os.path.join(store_dir, "_applied")
-    marker = os.path.join(marker_dir, str(batch_id))
-
-    def commit() -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w", encoding="utf-8"):
-            pass
-
-    return os.path.exists(marker), commit
+def _applied(store_dir: str, batch_id: int) -> bool:
+    """Open the store (finishing any published stage) and check the
+    batch's marker: one listing of pending stages plus one stat call,
+    never a scan of the growing store or of all markers. A bare empty
+    marker file written by earlier code reads as applied too."""
+    C.recover(store_dir)
+    return C.exists(C.marker(store_dir, batch_id))
 
 
 def land_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
@@ -87,10 +78,10 @@ def land_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     state a crash can leave is landed-but-not-remembered, which a
     replay turns into a duplicate landing (at-least-once); the reverse
     order's intermediate state (remembered-but-not-landed) would make
-    the replay drop the batch silently. A replay of a fully-applied
-    batch is a no-op (_batch_marker)."""
-    applied, commit = _batch_marker(store_dir, batch_id)
-    if applied:
+    the replay drop the batch silently. The fingerprints are staged and
+    published with the batch marker (module docstring), so a replay of
+    a fully-applied batch is a no-op."""
+    if _applied(store_dir, batch_id):
         return
     fresh = incremental_exact_dedup(batch_df, store_dir,
                                     id_col=id_col, text_col=text_col,
@@ -98,8 +89,8 @@ def land_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     (fresh.withColumn("batch_id", F.lit(batch_id))
           .write.mode("append").parquet(out_dir))
     (fresh.select(fingerprint(F.col(text_col)).alias("_fp"))
-          .write.mode("append").parquet(store_dir))
-    commit()
+          .write.parquet(C.begin(store_dir, batch_id)))
+    C.commit(store_dir, batch_id)
 
 
 def _quality_filter(docs: DataFrame, text_col: str,
@@ -218,12 +209,11 @@ def _gate_survivors(batch_df: DataFrame, pairs: DataFrame,
 def _gate(batch_df: DataFrame, batch_id: int, store_dir: str,
           out_dir: str, id_col: str, stage: Callable[[], DataFrame],
           pairs: Callable[[DataFrame], DataFrame],
-          append: Callable[[DataFrame], None]) -> None:
+          append: Callable[[DataFrame, int], None]) -> None:
     """Land one batch through a family's hooks (module docstring). The
     landing keeps ``batch_df``'s columns; hook columns of the gated
     frame (staged hashes, band keys) are dropped from it."""
-    applied, commit = _batch_marker(store_dir, batch_id)
-    if applied:
+    if _applied(store_dir, batch_id):
         return
     gated = stage()
     # lazy checkpoint: the landing write materializes the gate join once
@@ -236,13 +226,13 @@ def _gate(batch_df: DataFrame, batch_id: int, store_dir: str,
                       if c not in batch_df.columns])
               .withColumn("batch_id", F.lit(batch_id))
               .write.mode("append").parquet(out_dir))
-    append(survivors)
-    commit()
+    append(survivors, batch_id)
+    C.commit(store_dir, batch_id)
     from etl_tool_spark.llm.graph import _checkpoint_rdd
     surv_rdd = _checkpoint_rdd(survivors)
     if surv_rdd is not None:  # release batch blocks; streams run forever
         surv_rdd.unpersist(False)
-    shutil.rmtree(os.path.join(store_dir, _STAGING), ignore_errors=True)
+    C.delete(f"{store_dir}/{_STAGING}")
 
 
 def _minhash_hooks(batch_df: DataFrame, store_dir: str, id_col: str,
@@ -268,8 +258,8 @@ def _minhash_hooks(batch_df: DataFrame, store_dir: str, id_col: str,
     shingle_n = minhash_kwargs.get("shingle_n", 3)
     num_hashes = minhash_kwargs.get("num_hashes", 16)
     bands = minhash_kwargs.get("bands", 8)
-    fp_dir = os.path.join(store_dir, "fp")
-    staging = os.path.join(store_dir, _STAGING)
+    fp_dir = f"{store_dir}/fp"
+    staging = f"{store_dir}/{_STAGING}"
     probe = None
 
     def banded(df: DataFrame) -> DataFrame:
@@ -304,24 +294,14 @@ def _minhash_hooks(batch_df: DataFrame, store_dir: str, id_col: str,
             probe=probe,
             **{k: v for k, v in minhash_kwargs.items() if k != "shingle_n"})
 
-    def append(survivors: DataFrame) -> None:
+    def append(survivors: DataFrame, batch_id: int) -> None:
+        # survivors carry their staged _hs/_bands (and _fp) columns: the
+        # stage writes read the checkpoint blocks, never re-banding
+        tables = {"sig": survivors.select(id_col, "_hs")}
         if exact:
-            # fp/ appends SEQUENTIALLY FIRST: it is the replay idempotence
-            # guard — incremental_exact_dedup anti-joins fp/, so a
-            # crash-replay after fp committed re-appends nothing.
-            # Overlapping fp with sig+bands would break that: a crash
-            # could leave sig/ committed with fp/ absent, the replay would
-            # re-append everything, and the duplicate (id, _hs) rows would
-            # inflate _jaccard_verify's intersection counts for good.
-            survivors.select("_fp").write.mode("append").parquet(fp_dir)
-        # survivors carry their staged _hs/_bands columns: the appends
-        # read the checkpoint blocks, and sig/ and bands/ are written
-        # concurrently without re-banding (append_signatures)
-        append_signatures(
-            survivors.select(id_col, "_hs"), store_dir, id_col=id_col,
-            prehashed=True, banded=banded(survivors),
-            **{k: v for k, v in minhash_kwargs.items()
-               if k in ("num_hashes", "bands")})
+            tables["fp"] = survivors.select("_fp")
+        _store.stage_appends(store_dir, batch_id, tables,
+                             banded(survivors), ["_band", "_bucket"])
 
     return stage, pairs, append
 
@@ -340,12 +320,11 @@ def land_near_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     any qualifying pair can never land (within a batch the larger id
     drops; across batches the later one drops).
 
-    Same land-before-store crash order as land_batch: a replayed batch
-    re-lands (at-least-once, collapse on batch_id), never silently
-    drops; a replay of a FULLY-applied batch is a no-op
-    (_batch_marker) — without the marker it would also re-append its
-    survivors' signatures (same-id pairs are excluded by a < b, so the
-    store copy cannot flag its own replay)."""
+    Same crash contract as every gate (module docstring): a replayed
+    batch re-lands (at-least-once, collapse on batch_id), never silently
+    drops, and its signatures enter the store exactly once — same-id
+    pairs are excluded by a < b, so a store copy could never flag its
+    own replay."""
     _gate(batch_df, batch_id, store_dir, out_dir, id_col,
           *_minhash_hooks(batch_df, store_dir, id_col, text_col,
                           minhash_kwargs, exact=False))
@@ -375,13 +354,12 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     of minhash Jaccard pairs: a batch vector drops if it
     cosine-near-duplicates a landed survivor (stored wins) or a
     smaller-id batch sibling; only survivor vectors + band keys enter
-    the store (llm/similarity.py incremental store). Same
-    land-before-store crash order and _batch_marker replay no-op as
-    land_near_batch."""
-    from etl_tool_spark.llm.similarity import (append_embedding_signatures,
-                                               incremental_embedding_pairs)
+    the store (llm/similarity.py incremental store). Same crash
+    contract as land_near_batch."""
+    from etl_tool_spark.llm import store as _store
+    from etl_tool_spark.llm.similarity import incremental_embedding_pairs
 
-    staging = os.path.join(store_dir, _STAGING)
+    staging = f"{store_dir}/{_STAGING}"
 
     def pairs(gated: DataFrame) -> DataFrame:
         # norms + sign projections + band keys stage in ONE fused write
@@ -392,15 +370,16 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
             vec_col=vec_col, update_store=False, staging_dir=staging,
             **lsh_kwargs)
 
-    def append(survivors: DataFrame) -> None:
+    def append(survivors: DataFrame, batch_id: int) -> None:
         landed_ids = survivors.select(id_col).distinct()
         staged = batch_df.sparkSession.read.parquet(staging)
-        append_embedding_signatures(
-            staged.select(id_col, vec_col, "_norm").join(landed_ids, id_col),
-            store_dir, id_col=id_col, vec_col=vec_col, prenormed=True,
-            banded=staged.select(id_col, F.explode("_bkts").alias("_bkt"))
-                         .join(landed_ids, id_col),
-            **lsh_kwargs)
+        _store.stage_appends(
+            store_dir, batch_id,
+            {"vec": staged.select(id_col, vec_col, "_norm")
+                          .join(landed_ids, id_col)},
+            staged.select(id_col, F.explode("_bkts").alias("_bkt"))
+                  .join(landed_ids, id_col),
+            ["_bkt"])
 
     _gate(batch_df, batch_id, store_dir, out_dir, id_col,
           stage=lambda: batch_df, pairs=pairs, append=append)
@@ -442,8 +421,8 @@ def land_clean_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
 
     Store layout: ``store_dir/fp`` fingerprints, ``store_dir/sig`` +
     ``store_dir/bands`` minhash tables, ``store_dir/_applied`` batch
-    markers (land-before-store order; replay of a fully-applied batch
-    is a no-op)."""
+    markers; a batch's fp/, sig/ and bands/ rows commit together with
+    its marker (module docstring)."""
     _gate(batch_df, batch_id, store_dir, out_dir, id_col,
           *_minhash_hooks(batch_df, store_dir, id_col, text_col,
                           minhash_kwargs, exact=True))
@@ -493,8 +472,7 @@ def land_budget_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
 
     if (token_quota is None) == (quota_frac is None):
         raise ValueError("pass exactly one of token_quota / quota_frac")
-    applied, commit = _batch_marker(store_dir, batch_id)
-    if applied:
+    if _applied(store_dir, batch_id):
         return
     base = batch_df.select("*", tokens(F.col(text_col)).alias("_toks"))
     feats = quality_features(F.col(text_col), toks=F.col("_toks"))
@@ -519,7 +497,7 @@ def land_budget_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
         .withColumnRenamed("_nt", "n_tokens")
         .withColumn("batch_id", F.lit(batch_id))
         .write.mode("append").parquet(out_dir))
-    commit()
+    C.commit(store_dir, batch_id)
 
 
 def budget_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,

@@ -6,29 +6,8 @@ from __future__ import annotations
 import re
 
 __all__ = ["mask_credentials", "mask_sensitive_fields", "SENSITIVE_KEY_RE",
-           "require_local_store", "bounded_collect", "guard_bridge_file",
+           "bounded_collect", "guard_bridge_file",
            "DRIVER_COLLECT_MAX_ROWS", "DRIVER_PARSE_MAX_BYTES"]
-
-_URI_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
-
-
-def require_local_store(path: str, what: str = "incremental store") -> str:
-    """The raw-parquet incremental stores (minhash/simhash/embedding
-    signatures, CDC versions, batch markers) read their part-file lists
-    with local ``glob`` and write markers with local ``open`` — on an
-    object-store URI (s3a://, hdfs://) those calls silently see an EMPTY
-    store, so dedup misses the whole prior corpus and the
-    effectively-once replay guard never engages. Fail loudly instead.
-    ``file://`` URIs are rejected too (glob does not strip the scheme);
-    pass the plain path. A production deployment would use a table
-    format with real snapshot isolation (Iceberg/Delta) for these
-    stores, at which point this guard moves into the table client."""
-    if _URI_SCHEME_RE.match(path):
-        raise NotImplementedError(
-            f"{what} at {path!r}: raw-parquet stores are local-filesystem"
-            "-only (glob/open based); use a local path, or back the store "
-            "with a snapshot-isolated table format for object storage")
-    return path
 
 #: Default row cap for parity-format sinks that materialize the frame
 #: on the driver (JSON array / YAML / XML / XLSX documents). These

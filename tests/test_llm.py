@@ -1307,29 +1307,75 @@ def test_embedding_incremental_hot_bucket_cap(spark, tmp_path):
     assert uncapped == 30 * 20 + 20 * 19 // 2 + 1
 
 
-def test_stores_reject_object_store_uris(spark):
-    """glob/open-based stores silently see an empty store on object-store
-    URIs (dedup misses the prior corpus; replay markers never engage) —
-    they must fail loudly instead."""
-    from etl_tool_spark.streaming.dedup import land_batch
-    from etl_tool_spark.util import require_local_store
+def test_stores_accept_file_uris(spark, tmp_path):
+    """Every store reaches storage through the Hadoop FileSystem
+    (etl_tool_spark.commit): a ``file://`` URI runs the near and clean
+    gates, the update store, compaction, the CDC merge and the MV
+    refresh with the same output as the plain path, and a scheme Hadoop
+    cannot serve here (s3a:// without its connector, hdfs:/// without a
+    namenode) fails loudly before anything is written — never reads as
+    a silently empty store."""
+    from etl_tool_spark.llm import store as st
+    from etl_tool_spark.operators.mv import update_agg_mv
+    from etl_tool_spark.streaming import dedup as G
+    from etl_tool_spark.streaming.cdc import merge_cdc_batch, read_snapshot
 
-    df = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
-    for uri in ("s3a://bucket/store", "hdfs://nn/store", "file:///tmp/x"):
-        with pytest.raises(NotImplementedError):
-            require_local_store(uri)
-    with pytest.raises(NotImplementedError):
-        D.incremental_exact_dedup(df, "s3a://bucket/store")
-    with pytest.raises(NotImplementedError):
-        D.incremental_minhash_pairs(df, "hdfs://nn/store")
-    with pytest.raises(NotImplementedError):
-        S.incremental_embedding_pairs(
-            spark.createDataFrame([(1, [1.0, 0.0])],
-                                  "vec_id long, embedding array<float>"),
-            "s3a://bucket/emb")
-    with pytest.raises(NotImplementedError):
-        land_batch(df, 0, "s3a://bucket/gate", "/tmp/out_never_written")
-    require_local_store("/tmp/plain/path")  # plain paths pass
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame([(i, base + f" tail{i % 3}")
+                                  for i in range(6)],
+                                 "doc_id long, text string")
+    batches = [docs.filter(F.col("doc_id") < 3),
+               docs.filter(F.col("doc_id") >= 3)]
+    changes = spark.createDataFrame(
+        [(1, 1, "U", "a", 10), (2, 2, "U", "b", 5), (3, 3, "U", "a", 4)],
+        "k long, seq long, op string, grp string, v long")
+
+    def rows(df):
+        return sorted(map(str, df.collect()))
+
+    def run(root):
+        got = {}
+        for name, land in (("near", G.land_near_batch),
+                           ("clean", G.land_clean_batch)):
+            land(docs, 0, f"{root}/{name}", f"{root}/{name}_out")
+            got[name] = rows(spark.read.parquet(f"{root}/{name}_out"))
+        got["pairs"] = [rows(D.incremental_minhash_pairs(b, f"{root}/mh"))
+                        for b in batches]
+        got["compact"] = st.compact_store(spark, f"{root}/mh")
+        got["sig"] = rows(spark.read.parquet(f"{root}/mh/sig"))
+        merge_cdc_batch(changes, f"{root}/cdc", keys=["k"], batch_id=0)
+        got["cdc"] = rows(read_snapshot(spark, f"{root}/cdc"))
+        got["mv"] = rows(update_agg_mv(
+            spark, f"{root}/snap", f"{root}/mv", changes, keys=["k"],
+            group_col="grp", value_col="v", batch_id=0))
+        return got
+
+    plain = run(str(tmp_path / "plain"))
+    assert plain["near"] and any(plain["pairs"]) and plain["mv"]
+    assert run(f"file://{tmp_path}/uri") == plain
+
+    out = tmp_path / "never_written"
+    for uri in ("s3a://bucket/store", "hdfs:///store"):
+        calls = [
+            lambda: G.land_batch(docs, 0, uri, str(out)),
+            lambda: G.land_near_batch(docs, 0, uri, str(out)),
+            lambda: G.land_clean_batch(docs, 0, uri, str(out)),
+            lambda: D.incremental_exact_dedup(docs, uri),
+            lambda: D.incremental_minhash_pairs(docs, uri),
+            lambda: S.incremental_embedding_pairs(
+                spark.createDataFrame([(1, [1.0, 0.0])],
+                                      "vec_id long, embedding array<float>"),
+                uri),
+            lambda: st.compact_store(spark, uri),
+            lambda: merge_cdc_batch(changes, uri, keys=["k"], batch_id=0),
+            lambda: update_agg_mv(spark, uri, f"{uri}/mv", changes,
+                                  keys=["k"], group_col="grp",
+                                  value_col="v", batch_id=0),
+        ]
+        for call in calls:
+            with pytest.raises(Exception, match="S3AFileSystem|no host"):
+                call()
+    assert not out.exists()
 
 
 # --- baseline JPEG decode (multimodal.py _jpeg_decode) -------------------

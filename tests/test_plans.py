@@ -29,6 +29,21 @@ def catalog():
     return SPARK
 
 
+@pytest.fixture(scope="module")
+def sf0001_plans(spark, catalog):
+    """name → formatted plan of the catalog query at sf0.001, built once
+    per module: the catalog-wide sweep and the scale-invariance check
+    both read every headline plan at this scale."""
+    cache: dict = {}
+
+    def get(name: str) -> str:
+        if name not in cache:
+            cache[name] = plan(catalog[name](spark, SF_DIR))
+        return cache[name]
+
+    return get
+
+
 def test_q1_filter_pushdown_and_pruning(spark, catalog):
     p = plan(catalog["q1_pricing_summary"](spark, SF_DIR))
     pushed = p.split("PushedFilters:")[1].splitlines()[0]
@@ -453,7 +468,7 @@ def test_simhash_near_pairs_verifies_before_distinct(spark, catalog):
     assert min(aggs) < max(filt) or "bit_count" in p  # distinct above verify
 
 
-def test_catalog_wide_no_cartesian_no_row_udf(spark, catalog):
+def test_catalog_wide_no_cartesian_no_row_udf(spark, catalog, sf0001_plans):
     """EVERY catalog plan must be cartesian-free and keep Python out of
     the hot path except the documented Arrow spots (scripts/
     audit_plans.py is the human-readable version of this sweep). The
@@ -467,8 +482,8 @@ def test_catalog_wide_no_cartesian_no_row_udf(spark, catalog):
     from scripts.audit_plans import unpartitioned_window_violations
 
     offenders, row_udfs, bad_windows = [], [], []
-    for name, fn in sorted(catalog.items()):
-        p = plan(fn(spark, SF_DIR))
+    for name in sorted(catalog):
+        p = sf0001_plans(name)
         if re.search(r"\(\d+\) CartesianProduct", p):
             offenders.append(name)
         # row-at-a-time Python UDFs never; ArrowEvalPython only where
@@ -551,7 +566,7 @@ def test_quality_checks_no_cartesian_broadcast_fk(spark, catalog):
     assert "LeftAnti" in p
 
 
-def test_headline_plan_shapes_scale_invariant(spark, catalog):
+def test_headline_plan_shapes_scale_invariant(spark, catalog, sf0001_plans):
     """The partition strategy must hold at 1000x: a query's physical
     plan SHAPE (operator-type counts — joins, exchanges, windows,
     aggregates) must not depend on the data volume, only its runtime
@@ -587,8 +602,7 @@ def test_headline_plan_shapes_scale_invariant(spark, catalog):
     for name in [*BENCH_QUERIES, *extra]:
         if name in skip:
             continue
-        s_small = signature(plan(catalog[name](spark,
-                                               "/root/testdata/sf0.001")))
+        s_small = signature(sf0001_plans(name))
         s_big = signature(plan(catalog[name](spark,
                                              "/root/testdata/sf0.1")))
         if s_small != s_big:

@@ -169,7 +169,7 @@ def test_shard_count_env_knob(monkeypatch):
 def test_append_writes_one_file_per_shard(spark, tmp_path):
     """An append must emit at most one data file per shard, no matter
     how many partitions the input frame arrives in. Without the
-    repartition-on-_shard inside append_bands, every input partition
+    repartition-on-_shard inside the band write, every input partition
     opens a writer per shard value it holds (tasks × shards tiny files
     per batch) and every later pinned probe re-lists and re-opens all
     of them — measured as llm_incremental_dedup going 2.6× slower the
@@ -221,42 +221,51 @@ def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
     assert files and len(files) <= 2 * st.band_shards()
 
 
-def test_compaction_crash_recovery(spark, tmp_path):
-    """A promotion interrupted at the worst point (manifest written,
-    some replaced files deleted, some staged files moved) must be
-    finished by the next store open, with no rows lost or duplicated —
-    and a stage that died before its manifest must be discarded."""
-    import json
-    import shutil
+def test_compaction_crash_recovery(spark, tmp_path, monkeypatch):
+    """A compaction that crashes at a write boundary must leave every
+    store table exactly as before — no row lost or duplicated — once
+    the store is next opened. Mid-promote (manifest published, replaced
+    files deleted, one staged file moved) the open finishes the
+    promote; before the manifest the stage stays invisible to readers
+    and the next compaction discards it."""
+    from etl_tool_spark import commit as C
 
-    store = str(tmp_path / "s")
-    _mk_store(spark, store)
-    _mk_store(spark, store)  # two appends → multiple files
-    sig = os.path.join(store, "sig")
-    rows_before = spark.read.parquet(sig).count()
+    class Crash(Exception):
+        pass
 
-    # stage a compacted copy by hand, exactly as compact_dir would
-    files = st.flat_files(sig)
-    stage = sig + "_compact"
-    spark.read.parquet(*files).coalesce(1).write.mode("overwrite") \
-         .parquet(stage)
-    with open(os.path.join(stage, "_compact_manifest.json"), "w") as f:
-        json.dump({"files": files}, f)
-    # simulate the mid-promotion crash: delete ONE replaced file, move
-    # NO staged files yet
-    os.remove(files[0])
-    st.finish_pending_compaction(sig)
-    assert spark.read.parquet(sig).count() == rows_before
-    assert not os.path.isdir(stage)
+    def tables(store):
+        return {t: sorted(map(str, spark.read.parquet(
+                    os.path.join(store, t)).collect()))
+                for t in ("sig", "bands")}
 
-    # manifest-less stage (died mid-write): discarded, data untouched
-    os.makedirs(os.path.join(stage), exist_ok=True)
-    with open(os.path.join(stage, "part-junk.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    st.finish_pending_compaction(sig)
-    assert not os.path.isdir(stage)
-    assert spark.read.parquet(sig).count() == rows_before
-    shutil.rmtree(store)
+    for point in ("manifest", "promote"):
+        store = str(tmp_path / point)
+        _mk_store(spark, store)
+        _mk_store(spark, store)  # two appends → multiple files
+        before = tables(store)
+        with monkeypatch.context() as m:
+            if point == "manifest":
+                publish = C.publish
+
+                def publish_(path, text):
+                    if "/_applied/compact-" in path:
+                        raise Crash(point)
+                    return publish(path, text)
+                m.setattr(C, "publish", publish_)
+            else:
+                move = C._move
+
+                def move_once(*a):
+                    move(*a)
+                    raise Crash(point)
+                m.setattr(C, "_move", move_once)
+            with pytest.raises(Crash):
+                st.compact_store(spark, store)
+        st.open_store(store)
+        assert tables(store) == before, point   # no row lost or doubled
+        st.compact_store(spark, store)
+        assert tables(store) == before, point
+        assert not C.ls(os.path.join(store, "_stage", "*")), point
 
 
 def test_compact_bare_flat_store(spark, tmp_path):
@@ -364,7 +373,7 @@ def test_compact_pq_index_codes(spark, tmp_path):
 
 
 def test_observed_probe_matches_separate_probe(spark, tmp_path):
-    """The probe that rides a band append (append_bands(probe=True): the
+    """The probe that rides a band append (append_and_pin: the
     one-element-array case of fused_probe_observation) must report
     exactly the (shard set, row count) the standalone probe job computes
     over the written rows, and the shard directories written."""
@@ -372,11 +381,12 @@ def test_observed_probe_matches_separate_probe(spark, tmp_path):
     rows = [(i, base + f" tail{i}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     hs = df.select("doc_id", D.shingle_hashes(F.col("text"), 3).alias("_hs"))
-    banded = D._band_frame(hs, "doc_id", 16, 8)
 
-    bands_dir = str(tmp_path / "bands")
-    ap_shards, ap_n = st.append_bands(banded, bands_dir,
-                                      ["_band", "_bucket"], probe=True)
+    store = str(tmp_path / "s")
+    bands_dir = os.path.join(store, "bands")
+    _, _, (ap_shards, ap_n) = st.append_and_pin(
+        hs, store, "sig", lambda t: D._band_frame(t, "doc_id", 16, 8),
+        ["_band", "_bucket"])
     back = spark.read.parquet(bands_dir).drop("_shard")
     want_shards, want_n = st.probe_shards_and_count(
         back, ["_band", "_bucket"], st.store_shards(bands_dir))

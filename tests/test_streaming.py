@@ -434,10 +434,12 @@ def test_cdc_versioned_commit_time_travel_and_vacuum(spark, tmp_path):
             for r in read_snapshot(spark, snap).collect()} == v2
 
 
-def test_cdc_replay_after_commit_detects_own_batch(spark, tmp_path):
+def test_cdc_replay_after_commit_detects_own_batch(spark, tmp_path,
+                                                  monkeypatch):
     """foreachBatch retry that crashed AFTER the commit: the replay
     loses the manifest rename race to its own earlier attempt and must
-    treat the commit as done (same batch_id), not raise."""
+    treat the commit as done (same batch_id), not raise. A crash before
+    the commit replays to the same snapshot."""
     from etl_tool_spark.streaming.cdc import merge_cdc_batch, read_snapshot
 
     snap = str(tmp_path / "snap")
@@ -455,6 +457,31 @@ def test_cdc_replay_after_commit_detects_own_batch(spark, tmp_path):
     merge_cdc_batch(b2, snap, keys=["id"], batch_id=1)
     got = {r["id"]: r["payload"] for r in read_snapshot(spark, snap).collect()}
     assert got == {1: "a0", 2: "b0"}
+
+    # a merge that crashes after its data write (before the manifest
+    # publish) or right after the publish: its replay leaves the
+    # snapshot the clean run left
+    from etl_tool_spark import commit as C
+
+    want = sorted(map(str, read_snapshot(spark, snap).collect()))
+    publish = C.publish
+    for after in (False, True):
+        crashed = str(tmp_path / f"crashed-{after}")
+        merge_cdc_batch(b1, crashed, keys=["id"], batch_id=0)
+
+        def crashing(path, text, after=after):
+            if "/_versions/" not in path:
+                return publish(path, text)
+            if after:
+                publish(path, text)
+            raise _Crash(path)
+        with monkeypatch.context() as m:
+            m.setattr(C, "publish", crashing)
+            with pytest.raises(_Crash):
+                merge_cdc_batch(b2, crashed, keys=["id"], batch_id=1)
+        merge_cdc_batch(b2, crashed, keys=["id"], batch_id=1)
+        assert sorted(map(str, read_snapshot(spark, crashed).collect())) \
+            == want, after
 
 
 def test_cdc_conflicting_writer_raises(spark, tmp_path):
@@ -690,24 +717,95 @@ def _store_tables(spark, store):
             for sub, d in tables.items()}
 
 
-@pytest.mark.parametrize("family",
-                         ["near", "exact", "semantic", "clean", "budget"])
-def test_ingest_gate_replay_is_noop(spark, tmp_path, family):
-    """Replaying a FULLY-applied batch (same batch_id) must change
-    neither the landing zone nor any store table — the _batch_marker
-    effectively-once contract, for every gate family. (Same-id pairs are
-    excluded by a < b, so without the marker the store copy could not
-    flag its own replay and signatures would silently duplicate.)"""
+class _Crash(Exception):
+    """A crash injected at one write boundary of a commit."""
+
+
+def _inject_crash(monkeypatch, point, store, out):
+    """Make the next batch crash at ``point`` by patching the parquet
+    writer or the commit module (no hook in engine code):
+
+    land     right after the landing write to ``out``;
+    stage    after the first write of a store table (once the writes
+             overlapped with it finish), before the batch marker — the
+             point where an append-then-marker store would hold the
+             batch's rows without its marker;
+    publish  after the marker's publish, before the promote;
+    promote  after the promote's first file move."""
+    from pyspark.sql import DataFrameWriter
+
+    if point in ("land", "stage"):
+        write = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **k):
+            write(self, path, *a, **k)
+            if (path == out if point == "land" else
+                    path.startswith(store) and "/gate-staging" not in path):
+                raise _Crash(point)
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        return
+    from etl_tool_spark import commit as C
+
+    if point == "publish":
+        def promote(manifest):
+            raise _Crash(point)
+        monkeypatch.setattr(C, "promote", promote)
+    else:
+        move = C._move
+
+        def move_once(*a):
+            move(*a)
+            raise _Crash(point)
+        monkeypatch.setattr(C, "_move", move_once)
+
+
+def _landed(spark, out, id_col):
+    """Landed rows de-duplicated on (id, batch_id): what a consumer of
+    the at-least-once landing zone reads."""
+    return sorted(map(str, spark.read.parquet(out)
+                      .dropDuplicates([id_col, "batch_id"]).collect()))
+
+
+_GATE_CASES = [(f, None) for f in ("near", "exact", "semantic", "clean",
+                                   "budget")] + [
+    (f, p) for f in ("near", "exact", "semantic", "clean")
+    for p in ("land", "stage", "publish", "promote")] + [
+    ("budget", "land"), ("budget", "publish"), ("near", "bare")]
+
+
+@pytest.fixture(scope="module")
+def clean_gate_runs():
+    """family → (landed rows, store tables) of one crash-free run."""
+    return {}
+
+
+@pytest.mark.parametrize(
+    "family,crash", _GATE_CASES,
+    ids=[f if p is None else f"{f}-{p}" for f, p in _GATE_CASES])
+def test_ingest_gate_replay_is_noop(spark, tmp_path, monkeypatch,
+                                    clean_gate_runs, family, crash):
+    """Replaying a batch must leave the landing zone (de-duplicated on
+    (id, batch_id)) and every store table exactly as a clean run left
+    them, with no duplicate rows — after a FULLY-applied batch (the
+    batch marker makes the replay a no-op; a bare empty marker file, as
+    written before markers carried a manifest, counts too) and after a
+    crash at each write boundary of the commit. Same-id pairs are
+    excluded by a < b, so a store copy could never flag its own replay:
+    without the commit a crash between the store append and the marker
+    would duplicate the batch's signatures, and a crash after the clean
+    gate's fp/ append would strand the batch's signatures outside sig/
+    and bands/."""
     from etl_tool_spark.streaming import dedup as G
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon")
     docs = spark.createDataFrame(
-        [(1, base + " ONE"), (2, "unique text here"), (3, base + " ONE")],
-        "doc_id long, text string")
+        [(1, base + " ONE"), (2, "unique text here"), (3, base + " ONE"),
+         (4, "another fresh document body")], "doc_id long, text string")
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.1, 0.0]), (2, [0.99, 0.01, 0.1, 0.0]),
-         (3, [0.0, 1.0, 0.0, 0.1])], "vec_id long, embedding array<float>")
+         (3, [0.0, 1.0, 0.0, 0.1]), (4, [0.0, 0.0, 1.0, 0.5])],
+        "vec_id long, embedding array<float>")
     land = {
         "near": lambda s, o: G.land_near_batch(docs, 7, s, o),
         "exact": lambda s, o: G.land_batch(docs, 7, s, o),
@@ -717,17 +815,37 @@ def test_ingest_gate_replay_is_noop(spark, tmp_path, family):
         "budget": lambda s, o: G.land_budget_batch(docs, 7, s, o,
                                                    quota_frac=0.5),
     }[family]
+    id_col = "vec_id" if family == "semantic" else "doc_id"
 
-    store, out = str(tmp_path / "store"), str(tmp_path / "landed")
-    land(store, out)
-    landed1 = sorted(map(str, spark.read.parquet(out).collect()))
-    tables1 = _store_tables(spark, store)
+    if family not in clean_gate_runs:
+        store, out = str(tmp_path / "clean"), str(tmp_path / "clean_out")
+        land(store, out)
+        clean_gate_runs[family] = (_landed(spark, out, id_col),
+                                   _store_tables(spark, store))
+    landed1, tables1 = clean_gate_runs[family]
     assert landed1
     if family != "budget":  # the budget gate keeps only batch markers
         assert tables1
-    land(store, out)                            # replay after success
-    assert sorted(map(str, spark.read.parquet(out).collect())) == landed1
-    assert _store_tables(spark, store) == tables1
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "landed")
+    if crash in (None, "bare"):
+        land(store, out)
+        if crash == "bare":
+            marker = tmp_path / "store" / "_applied" / "7"
+            for f in (marker, marker.with_name(".7.crc")):
+                f.unlink(missing_ok=True)
+            marker.touch()
+    else:
+        with monkeypatch.context() as m:
+            _inject_crash(m, crash, store, out)
+            with pytest.raises(_Crash):
+                land(store, out)
+    land(store, out)                            # the replay
+    assert _landed(spark, out, id_col) == landed1
+    tables = _store_tables(spark, store)
+    assert tables == tables1
+    for rows in tables.values():
+        assert len(rows) == len(set(rows)), "duplicate store rows"
 
 
 def test_full_clean_ingest_stream(spark, tmp_path):
@@ -938,14 +1056,16 @@ def test_incremental_mv_minmax_lossy_recompute(spark, tmp_path):
     assert got == {("a", 117, 3, 7, 60)}
 
 
-def test_incremental_mv_retry_after_partial_failure(spark, tmp_path):
+def test_incremental_mv_retry_after_partial_failure(spark, tmp_path,
+                                                   monkeypatch):
     """The snapshot merge and the MV write cannot be one atomic commit;
     a crash between them must be recoverable. Simulates the crash by
     merging a batch into the snapshot WITHOUT writing its MV, then
     re-running update_agg_mv for the same batch_id: the old side must
     pin to the pre-batch snapshot version (a current-snapshot read would
     fold a zero delta and lose the batch from the MV forever). A replay
-    of a fully-applied batch is a no-op returning the stored MV."""
+    of a fully-applied batch is a no-op returning the stored MV, and a
+    refresh that crashes at a write boundary replays to the same MV."""
     from etl_tool_spark.operators.mv import update_agg_mv
     from etl_tool_spark.streaming.cdc import merge_cdc_batch, read_snapshot
 
@@ -979,6 +1099,47 @@ def test_incremental_mv_retry_after_partial_failure(spark, tmp_path):
                                     group_col="grp", value_col="v",
                                     batch_id=1).collect()}
     assert again == got
+
+    # a refresh that crashes after its snapshot publish, or after its
+    # MV write and before _MV_COMMITTED: the replay gives the same MV
+    # and the same snapshot
+    from pyspark.sql import DataFrameWriter
+
+    from etl_tool_spark import commit as C
+
+    want_snap = sorted(map(str, read_snapshot(spark, snap).collect()))
+    publish, write = C.publish, DataFrameWriter.parquet
+    for point in ("snapshot", "mv"):
+        snap2 = str(tmp_path / f"snap-{point}")
+        mv2 = str(tmp_path / f"mv-{point}")
+        update_agg_mv(spark, snap2, mv2, b0, keys=["k"], group_col="grp",
+                      value_col="v", batch_id=0)
+
+        def crashing(path, text, point=point):
+            ok = publish(path, text)
+            if "/_versions/" in path:
+                raise _Crash(point)
+            return ok
+
+        def parquet(self, path, *a, mv2=mv2, **k):
+            write(self, path, *a, **k)
+            if path.startswith(mv2):
+                raise _Crash("mv")
+        with monkeypatch.context() as m:
+            if point == "snapshot":
+                m.setattr(C, "publish", crashing)
+            else:
+                m.setattr(DataFrameWriter, "parquet", parquet)
+            with pytest.raises(_Crash):
+                update_agg_mv(spark, snap2, mv2, b1, keys=["k"],
+                              group_col="grp", value_col="v", batch_id=1)
+        replay = {(r["grp"], r["mv_sum"], r["mv_n"])
+                  for r in update_agg_mv(spark, snap2, mv2, b1, keys=["k"],
+                                         group_col="grp", value_col="v",
+                                         batch_id=1).collect()}
+        assert replay == got, point
+        assert sorted(map(str, read_snapshot(spark, snap2).collect())) \
+            == want_snap, point
 
 
 def test_crawl_ingest_stream_gates_duplicate_archives(spark, tmp_path):
@@ -1072,3 +1233,22 @@ def test_ingest_gates_handle_empty_batches(spark, tmp_path):
     got = sorted((r["vec_id"], r["batch_id"])
                  for r in spark.read.parquet(out).collect())
     assert got == [(0, 0), (1, 0), (2, 2), (3, 2)]
+
+    # an empty LOCAL frame (its partitioned band write runs no job, so
+    # the probe's observation never gets metrics) through the update
+    # store: no pairs, and the store is unchanged
+    from etl_tool_spark.llm.dedup import incremental_minhash_pairs
+    from etl_tool_spark.llm.similarity import incremental_embedding_pairs
+
+    cases = [  # the near and semantic gate stores above are such stores
+        (incremental_minhash_pairs, tmp_path / "land_near_batch" / "store",
+         "doc_id INT, text STRING", {}),
+        (incremental_embedding_pairs, tmp_path / "sem" / "store",
+         "vec_id INT, embedding ARRAY<FLOAT>", kw),
+    ]
+    for pairs, store, schema, kwargs in cases:
+        before = _store_tables(spark, str(store))
+        got = pairs(spark.createDataFrame([], schema), str(store),
+                    update_store=True, **kwargs).collect()
+        assert got == [], pairs.__name__
+        assert _store_tables(spark, str(store)) == before, pairs.__name__
