@@ -585,11 +585,12 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
     Old–old pairs are never re-emitted — they were reported when their
     younger member arrived. Union of every batch's output == the
     one-shot ``minhash_dedup_pairs`` over the full corpus (asserted in
-    tests). Ids must be globally unique across batches; the old-side
-    read is pinned to the store's pre-append part files, so the lazily
-    evaluated result stays correct after the append.
+    tests). The old-side read is pinned to the store's pre-append part
+    files, so the lazily evaluated result stays correct after the append.
 
-    Returns (a, b, jaccard) with a < b, jaccard ≥ threshold."""
+    Returns (a, b, jaccard) with a < b, jaccard ≥ threshold — except that
+    a batch id the store already holds (a re-sent document) pairs with
+    its stored copy as (id, id)."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
     spark = new_df.sparkSession
@@ -613,10 +614,7 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
     sig_files = _st.flat_files(f"{store_dir}/sig")
     band_files = _st.sharded_files(bands_dir)
     first_batch = not sig_files
-    if first_batch:
-        hs_old = spark.createDataFrame([], hs_new.schema)
-    else:
-        hs_old = spark.read.parquet(*sig_files)
+    hs_old = None if first_batch else spark.read.parquet(*sig_files)
 
     new_file_backed = True
     staged_probe = None  # (shards, count) observed during a band write
@@ -648,7 +646,8 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
 
     if first_batch:
         new_new = (_bucket_pairs(banded_new, id_col, max_bucket=max_bucket)
-                   .select(F.col("l._id").alias("a"), F.col("r._id").alias("b")))
+                   .select(_sided(1, "l._id").alias("a"),
+                           _sided(1, "r._id").alias("b")))
         cands = new_new.distinct()
     else:
         # the store's banded table, pinned pre-append and PRUNED to the
@@ -690,7 +689,8 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
             banded_new = banded_new.join(hot, ["_band", "_bucket"], "left_anti")
             banded_old = banded_old.join(hot, ["_band", "_bucket"], "left_anti")
         new_new = (_bucket_pairs(banded_new, id_col)
-                   .select(F.col("l._id").alias("a"), F.col("r._id").alias("b")))
+                   .select(_sided(1, "l._id").alias("a"),
+                           _sided(1, "r._id").alias("b")))
         # broadcast the (micro-batch-sized) probe side so the store scan
         # never shuffles; the row gate falls back to sort-merge for an
         # oversized backfill batch. Only when the batch bands are
@@ -708,12 +708,26 @@ def incremental_minhash_pairs(new_df: DataFrame, store_dir: str,
                 probe = gated_broadcast(probe)
         new_old = (banded_old
                    .join(probe, ["_band", "_bucket"])
-                   .select(F.least(F.col(id_col), F.col("_nid")).alias("a"),
-                           F.greatest(F.col(id_col), F.col("_nid")).alias("b")))
+                   .select(_sided(0, id_col).alias("a"),
+                           _sided(1, "_nid").alias("b")))
         cands = new_new.unionByName(new_old).distinct()
 
-    hs_all = hs_new.unionByName(hs_old)
-    return _jaccard_verify(hs_all, cands, id_col, threshold)
+    # verify rows are keyed by (side, id): an id the store already holds
+    # (a re-sent document) keyed by id alone doubles its rows in the
+    # verify's intersection and size joins. Its pair with the stored copy
+    # comes out as (id, id).
+    hs_all = hs_new.select(_sided(1, id_col).alias(id_col), "_hs")
+    if hs_old is not None:
+        hs_all = hs_all.unionByName(
+            hs_old.select(_sided(0, id_col).alias(id_col), "_hs"))
+    return (_jaccard_verify(hs_all, cands, id_col, threshold)
+            .select(F.least("a.id", "b.id").alias("a"),
+                    F.greatest("a.id", "b.id").alias("b"), "jaccard"))
+
+
+def _sided(side: int, col: str) -> Column:
+    """(side, id) verify key: side 0 = stored, 1 = this batch."""
+    return F.struct(F.lit(side).alias("side"), F.col(col).alias("id"))
 
 
 def simhash_from_hashes(th: Column, bits: int = 16) -> Column:

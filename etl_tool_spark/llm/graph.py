@@ -60,6 +60,13 @@ def _checkpoint_rdd(df: DataFrame):
         return None
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist a localCheckpoint frame's blocks now, not at JVM GC."""
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
+
+
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 25) -> DataFrame:
     """(id, label) for every vertex appearing in ``edges``; ``label`` is

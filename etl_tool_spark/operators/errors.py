@@ -6,16 +6,17 @@ appends the *original* record plus ``etl_error_message`` to a CSV error
 file (``skip``) — internal/processor/processor.go:94-101, error writer
 internal/io/csv.go:354-518, defaults internal/config/load.go:50-60.
 
-Spark-side design: operators accumulate a nullable string column
-(``ERROR_COL``) and carry the original record as a single struct column
-(``ORIG_COL``). ``split_errors`` splits the frame once; both branches stay
-lazy so the clean path and the error sink are part of the same plan."""
+Spark-side design: one nullable string column (``ERROR_COL``) carries a
+record's first error of any kind — filter-eval, mapping, errorOnNonList —
+and the original record rides along as a struct column (``ORIG_COL``).
+``split_errors`` splits that channel frame once, before flatten, so the
+error file holds one row per errored source record."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ERROR_COL = "_etl_error"
@@ -34,6 +35,13 @@ class PipelineHaltError(RuntimeError):
 class SplitResult:
     clean: DataFrame
     errors: DataFrame  # original record columns + etl_error_message
+
+
+def add_error(df: DataFrame, err: Column) -> DataFrame:
+    """Mark ``err`` (null = none) into ERROR_COL; an earlier error wins."""
+    if ERROR_COL in df.columns:
+        err = F.coalesce(F.col(ERROR_COL), err)
+    return df.withColumn(ERROR_COL, err)
 
 
 def split_errors(df: DataFrame) -> SplitResult:

@@ -8,8 +8,8 @@ expression compiles to a Catalyst predicate: null results are the
 eval-error analogue. ``apply_filter`` keeps only TRUE rows (nulls drop
 with the falses — and the predicate pushes into the Parquet/JDBC scan, so
 at 100 TB the filtered data is never read at all);
-``apply_filter_with_errors`` additionally surfaces the null-predicate
-rows as an error frame for the error file."""
+``apply_filter_with_errors`` keeps the null-predicate rows too, marked on
+the error channel, for runs whose error file consumes them."""
 
 from __future__ import annotations
 
@@ -17,7 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_tool_spark.expr import compile_filter
-from etl_tool_spark.operators.errors import ERROR_MESSAGE_FIELD, SEQ_COL
+from etl_tool_spark.operators.errors import add_error, split_errors
+
+FILTER_ERROR = "filter eval error"
 
 
 def apply_filter(df: DataFrame, expression: str | None) -> DataFrame:
@@ -28,18 +30,14 @@ def apply_filter(df: DataFrame, expression: str | None) -> DataFrame:
 
 def apply_filter_with_errors(df: DataFrame,
                              expression: str | None) -> tuple[DataFrame, DataFrame]:
-    """(kept, filter_errors): kept rows are those where the predicate is
-    TRUE (pushdown-friendly — the error branch is its own scan with its
-    own IS NULL pushdown); filter_errors carries the ORIGINAL record
-    columns + etl_error_message, matching the reference's error-file rows
-    for filter eval failures (app.go:156-161)."""
-    src_cols = [c for c in df.columns if c != SEQ_COL]
-    empty_errors = (df.limit(0).select(*src_cols)
-                      .withColumn(ERROR_MESSAGE_FIELD, F.lit("")))
-    if not expression:
-        return df, empty_errors
-    pred = compile_filter(expression)
-    errors = (df.filter(pred.isNull())
-                .select(*src_cols)
-                .withColumn(ERROR_MESSAGE_FIELD, F.lit("filter eval error")))
-    return df.filter(pred), errors
+    """(channel, filter_errors) from one pass over ``df``: the channel
+    keeps the rows whose predicate is TRUE or NULL and marks the NULL ones
+    in ERROR_COL, so they ride the error channel through the later stages;
+    ``filter_errors`` is those rows split from the channel (original
+    record columns + etl_error_message), matching the reference's
+    error-file rows for filter eval failures (app.go:156-161)."""
+    if expression:
+        pred = compile_filter(expression)
+        df = add_error(df.filter(pred | pred.isNull()),
+                       F.when(pred.isNull(), F.lit(FILTER_ERROR)))
+    return df, split_errors(df).errors

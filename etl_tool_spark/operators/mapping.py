@@ -57,8 +57,9 @@ def apply_mappings(df: DataFrame, rules: list, fips: bool = False,
     """Compile the mapping chain onto ``df``.
 
     Returns a frame with columns = targets (+ ERROR_COL/ORIG_COL when
-    ``keep_error_channel`` and any rule can fail, + ``extra_keep``
-    passthrough columns such as the _seq ordering column)."""
+    ``keep_error_channel`` and any rule can fail or ``df`` already
+    carries ERROR_COL, + ``extra_keep`` passthrough columns such as the
+    _seq ordering column)."""
     rules = _normalize(rules)
     if not rules:
         return df
@@ -78,7 +79,11 @@ def apply_mappings(df: DataFrame, rules: list, fips: bool = False,
     if keep_error_channel and ORIG_COL not in df.columns:
         work = work.withColumn(ORIG_COL, F.struct(*[F.col(f"`{c}`") for c in original_cols]))
 
-    error_markers = []
+    # a row that arrives errored (filter-eval) keeps its error and is not
+    # mapped: CASE WHEN evaluates no rule on it, so none can raise there
+    error_markers = ([F.col(ERROR_COL)]
+                     if keep_error_channel and ERROR_COL in df.columns else [])
+    guard = F.col(ERROR_COL).isNull() if error_markers else None
     for idx, rule in enumerate(rules):
         dtypes = {name: dt for name, dt in work.dtypes
                   if name not in (ERROR_COL, ORIG_COL)}
@@ -86,13 +91,17 @@ def apply_mappings(df: DataFrame, rules: list, fips: bool = False,
         src_col = ctx.col(rule.source) if rule.source else F.lit(None)
         src_dtype = ctx.dtype(rule.source)
         result = build_transform(rule.transform or "", rule.params, src_col, src_dtype, ctx)
-        work = work.withColumn(rule.target, result.value)
-        if result.error is not None:
+        value, error = result.value, result.error
+        if guard is not None:
+            value = F.when(guard, value)
+            error = None if error is None else F.when(guard, error)
+        work = work.withColumn(rule.target, value)
+        if error is not None:
             # first-error-wins: tag with rule context like processor.go:157
             error_markers.append(
-                F.when(result.error.isNotNull(),
+                F.when(error.isNotNull(),
                        F.concat(F.lit(f"mapping rule {idx} (target '{rule.target}'): "),
-                                result.error)))
+                                error)))
 
     keep = list(targets) + [c for c in extra_keep if c in work.columns and c not in targets]
     if keep_error_channel and error_markers:

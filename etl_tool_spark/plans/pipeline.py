@@ -1,15 +1,16 @@
 """Pipeline compiler/runner: Extract → Filter → Transform → Flatten →
 Deduplicate → Load (reference stage order: internal/app/app.go:148-181).
 
-Unlike the reference's three eager in-memory passes, ``build_pipeline``
-produces ONE lazy DataFrame; Catalyst then pushes the filter into the
-scan, prunes unused columns, and codegens the whole mapping chain. A
-single action (the sink write / dry-run count) executes everything.
+Unlike the reference's three eager in-memory passes, the stages compile
+to lazy DataFrames; Catalyst pushes the filter into the scan, prunes
+unused columns, and codegens the whole mapping chain. Errored records
+split off a CHANNEL frame before flatten; a run that acts on both
+outputs checkpoints that frame, so it scans its source once.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,13 +18,18 @@ from pyspark.sql import functions as F
 from etl_tool_spark.operators.dedup import dedup
 from etl_tool_spark.operators.errors import (
     ERROR_COL,
+    ERROR_MESSAGE_FIELD,
+    ORIG_COL,
+    POS_COL,
     SEQ_COL,
+    add_error,
     halt_if_errors,
     split_errors,
     write_error_file,
 )
-from etl_tool_spark.operators.filter import apply_filter_with_errors
-from etl_tool_spark.operators.flatten import flatten
+from etl_tool_spark.operators.filter import (FILTER_ERROR, apply_filter,
+                                             apply_filter_with_errors)
+from etl_tool_spark.operators.flatten import flatten, non_list_error
 from etl_tool_spark.operators.mapping import apply_mappings
 from etl_tool_spark.plans.config import PlaybookConfig
 from etl_tool_spark.sources.registry import read_source
@@ -114,12 +120,9 @@ def _pending_hwm(spark: SparkSession, cfg: PlaybookConfig):
     return df.agg(F.max(_wm_col(df, inc))).collect()[0][0]
 
 
-def build_pipeline(spark: SparkSession, cfg: PlaybookConfig
-                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Compile the playbook to (clean_df, error_df, filter_error_df)
-    without executing. Filter-eval errors are a SEPARATE channel: the
-    reference writes them to the error file but never halts on them
-    (app.go:156-161), while processing errors can halt."""
+def _channel(spark: SparkSession, cfg: PlaybookConfig) -> DataFrame:
+    """Extract → filter → mappings → errorOnNonList check: the frame both
+    outputs of a run split from, every error kind in ERROR_COL."""
     if cfg.sql:
         # Spark-native SQL stage (beyond the reference): named sources
         # register as temp views (seq-free — SELECT * must not leak
@@ -143,41 +146,55 @@ def build_pipeline(spark: SparkSession, cfg: PlaybookConfig
         if src.incremental:
             df = _apply_incremental(df, src.incremental)
 
-    # Filter runs on source records, pre-transform (app.go:150-164)
-    df, filter_errors = apply_filter_with_errors(df, cfg.filter)
+    # Filter runs on source records, pre-transform (app.go:150-164); its
+    # eval errors never halt (app.go:156-161), so only a file or DLQ keeps them
+    eh = cfg.errorHandling
+    if eh.mode == "skip" and (eh.errorFile or eh.deadLetterDir):
+        df, _ = apply_filter_with_errors(df, cfg.filter)
+    else:
+        df = apply_filter(df, cfg.filter)
 
     if cfg.mappings:
         df = apply_mappings(df, cfg.mappings, fips=cfg.fipsMode,
                             extra_keep=(SEQ_COL,))
 
+    fl = cfg.flattening
+    if fl and fl.errorOnNonList:
+        df = add_error(df, non_list_error(df, fl.sourceField,
+                                          fl.conditionField, fl.conditionValue))
+    if ORIG_COL in df.columns:
+        # only errored rows read it: keep it off a checkpoint's clean rows
+        df = df.withColumn(ORIG_COL, F.when(F.col(ERROR_COL).isNotNull(),
+                                            F.col(ORIG_COL)))
+    return df
+
+
+def _outputs(cfg: PlaybookConfig, channel: DataFrame
+             ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Split the channel, then flatten and dedup the clean rows only: one
+    error row per source record (processor.go:94-101 precede 110-122)."""
+    split = split_errors(channel)
+    clean = split.clean
     if cfg.flattening:
         fl = cfg.flattening
-        df = flatten(df, fl.sourceField, fl.targetField,
-                     include_parent=fl.includeParent,
-                     error_on_non_list=fl.errorOnNonList,
-                     condition_field=fl.conditionField,
-                     condition_value=fl.conditionValue)
-
-    split = split_errors(df)
-    clean = split.clean
-
+        clean = flatten(clean, fl.sourceField, fl.targetField,
+                        include_parent=fl.includeParent,
+                        condition_field=fl.conditionField,
+                        condition_value=fl.conditionValue)
     if cfg.dedup:
         clean = dedup(clean, list(cfg.dedup.keys), cfg.dedup.strategy,
                       cfg.dedup.strategyField, seq_col=SEQ_COL)
-
-    from etl_tool_spark.operators.errors import POS_COL
-
-    drop = [c for c in (SEQ_COL, POS_COL) if c in clean.columns]
-    if drop:
-        clean = clean.drop(*drop)
-    return clean, split.errors, filter_errors
+    errors = split.errors
+    return (clean.drop(SEQ_COL, POS_COL), errors,
+            errors.filter(F.col(ERROR_MESSAGE_FIELD) == FILTER_ERROR))
 
 
-def _union_errors(errors: DataFrame, filter_errors: DataFrame) -> DataFrame:
-    try:
-        return errors.unionByName(filter_errors, allowMissingColumns=True)
-    except Exception:  # incompatible schemas (no-mapping empty frame edge)
-        return errors
+def build_pipeline(spark: SparkSession, cfg: PlaybookConfig
+                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Compile the playbook to (clean_df, error_df, filter_error_df)
+    without executing. ``error_df`` holds every errored source record;
+    ``filter_error_df`` is its filter-eval subset (kept for a file/DLQ)."""
+    return _outputs(cfg, _channel(spark, cfg))
 
 
 def _read_stream_source(spark: SparkSession, src) -> DataFrame:
@@ -272,11 +289,10 @@ def run_pipeline(spark: SparkSession, cfg: PlaybookConfig,
         # normalize here too (load_config already does): direct-API
         # callers building PlaybookConfig with only `destinations` mean
         # "write everywhere", not "dry run"
-        from dataclasses import replace
-
         cfg = replace(cfg, destination=cfg.destinations[0],
                       destinations=cfg.destinations[1:])
-    clean, errors, filter_errors = build_pipeline(spark, cfg)
+    channel = _channel(spark, cfg)
+    clean, errors, _ = _outputs(cfg, channel)
 
     streaming = cfg.source is not None and cfg.source.stream
     if streaming:
@@ -284,10 +300,29 @@ def run_pipeline(spark: SparkSession, cfg: PlaybookConfig,
             raise ValueError("streaming playbooks need a destination "
                              "and cannot dry-run")
         # validation already forced mode=skip / no errorFile / no halt;
-        # the DLQ (when configured) carries BOTH error channels
-        return _run_stream(spark, cfg, clean,
-                           _union_errors(errors, filter_errors))
+        # the DLQ (when configured) carries every error kind
+        return _run_stream(spark, cfg, clean, errors)
 
+    eh = cfg.errorHandling
+    if not ((ERROR_COL in channel.columns and (eh.mode == "halt" or eh.errorFile))
+            or cfg.quality is not None or cfg.destinations):
+        return _execute(spark, cfg, clean, errors, dry_run)
+    # more than one action: the first materializes the channel, the rest
+    # read its blocks instead of re-running scan → mappings; the result
+    # keeps the lazy frames, usable after the release
+    from etl_tool_spark.llm.graph import release_checkpoint
+
+    pinned = channel.localCheckpoint(eager=False)
+    try:
+        res = _execute(spark, cfg, *_outputs(cfg, pinned)[:2], dry_run)
+    finally:
+        release_checkpoint(pinned)
+    return replace(res, output=clean, errors=errors)
+
+
+def _execute(spark: SparkSession, cfg: PlaybookConfig, clean: DataFrame,
+             errors: DataFrame, dry_run: bool) -> PipelineResult:
+    """A batch run's actions: halt, error file, quality gate, load."""
     # Observations: the actions the pipeline runs anyway report the
     # stage counts the reference logs from its eager passes — no second
     # execution to count anything (observe() is metric piggybacking on
@@ -300,7 +335,6 @@ def run_pipeline(spark: SparkSession, cfg: PlaybookConfig,
     if mode == "halt":
         # processing errors halt; filter-eval errors only skip (app.go:156-161)
         halt_if_errors(errors)
-    errors = _union_errors(errors, filter_errors)
     if mode == "skip" and cfg.errorHandling.errorFile:
         err_obs = Observation()
         errors = errors.observe(err_obs, F.count(F.lit(1)).alias("rows_error"))

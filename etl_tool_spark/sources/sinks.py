@@ -158,9 +158,12 @@ def _morton_range_bounds(bounds: list[list[float]], k: int,
     never correctness — every partition still covers a contiguous
     morton range, so min/max pruning is unaffected). Returns the n-1
     boundary values, or None when the rank grid is too large to
-    enumerate (k > 2) and the caller should fall back to sampling."""
-    if k > 2 or n < 2:
-        return None if k > 2 else []
+    enumerate (k > 2) or a column has no boundaries (an empty frame or
+    an all-null column) and the caller should fall back to sampling."""
+    if k > 2 or not all(bounds):
+        return None
+    if n < 2:
+        return []
     import numpy as np
 
     def spread(i: int):
@@ -235,6 +238,9 @@ def _zorder(df: DataFrame, cols: list[str], n_partitions=None) -> DataFrame:
     blk = 16  # 16 blocks of 16 over the 255 boundaries
     out = df
     for i, (c, bs) in enumerate(zip(casted, bounds)):
+        if not bs:  # no non-null value: every row ranks 0, like a null
+            out = out.withColumn(f"_zb{i}", F.lit(0).cast("bigint"))
+            continue
         arr = F.array(*[F.lit(b) for b in bs])
         coarse = F.array(*[F.lit(bs[blk * (j + 1) - 1])
                            for j in range(len(bs) // blk)])

@@ -51,7 +51,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -184,21 +184,15 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
     out_rel = f"{DATA_DIR}/{attempt}"
     out_dir = f"{snapshot_dir}/{out_rel}"
 
-    from etl_tool_spark.llm.graph import _checkpoint_rdd
-
-    def _releaser(frame) -> Callable[[], None]:
-        def _release() -> None:
-            rdd = _checkpoint_rdd(frame)
-            if rdd is not None:  # release batch blocks; streams run forever
-                rdd.unpersist(False)
-        return _release
+    # release batch blocks explicitly: streams run forever
+    from etl_tool_spark.llm.graph import release_checkpoint
 
     if not versions:
         _reject_legacy_layout(spark, snapshot_dir)
         release = lambda: None  # noqa: E731
         if checkpoint_first:
             latest = latest.localCheckpoint(eager=True)
-            release = _releaser(latest)
+            release = partial(release_checkpoint, latest)
         upserts = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
 
         def write_first() -> None:
@@ -233,7 +227,7 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
     # so the write reads blocks, not the window plan.
     latest = latest.localCheckpoint(eager=False)
     upserts = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
-    release = _releaser(latest)
+    release = partial(release_checkpoint, latest)
 
     affected = sorted(str(r[0]) for r in
                       latest.select(BUCKET_COL).distinct().collect())

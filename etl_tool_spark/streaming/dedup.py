@@ -198,7 +198,8 @@ def _gate_survivors(batch_df: DataFrame, pairs: DataFrame,
                      "b", "left"))
     a_new = F.coalesce(F.col("_a_new"), F.lit(False))
     b_new = F.coalesce(F.col("_b_new"), F.lit(False))
-    # pairs always touch >=1 batch doc; a < b by id
+    # pairs always touch >=1 batch doc; a < b by id, or a == b for a
+    # batch doc re-sent under a stored id (dropped as in-batch)
     drop = (F.when(a_new & b_new, F.col("b"))       # in-batch: larger id
              .when(a_new & ~b_new, F.col("a"))      # partner stored
              .otherwise(F.col("b")))                # partner stored
@@ -228,10 +229,8 @@ def _gate(batch_df: DataFrame, batch_id: int, store_dir: str,
               .write.mode("append").parquet(out_dir))
     append(survivors, batch_id)
     C.commit(store_dir, batch_id)
-    from etl_tool_spark.llm.graph import _checkpoint_rdd
-    surv_rdd = _checkpoint_rdd(survivors)
-    if surv_rdd is not None:  # release batch blocks; streams run forever
-        surv_rdd.unpersist(False)
+    from etl_tool_spark.llm.graph import release_checkpoint
+    release_checkpoint(survivors)  # release batch blocks; streams run forever
     C.delete(f"{store_dir}/{_STAGING}")
 
 
@@ -322,9 +321,10 @@ def land_near_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
 
     Same crash contract as every gate (module docstring): a replayed
     batch re-lands (at-least-once, collapse on batch_id), never silently
-    drops, and its signatures enter the store exactly once — same-id
-    pairs are excluded by a < b, so a store copy could never flag its
-    own replay."""
+    drops, and its signatures enter the store exactly once — they become
+    visible with the batch marker, so a store copy never flags its own
+    replay. A document a LATER batch re-sends under a stored id pairs
+    with its stored copy as (id, id) and drops like any near-dup."""
     _gate(batch_df, batch_id, store_dir, out_dir, id_col,
           *_minhash_hooks(batch_df, store_dir, id_col, text_col,
                           minhash_kwargs, exact=False))

@@ -739,3 +739,133 @@ def test_cdc_source_reads_snapshot(spark, tmp_path):
     got1 = {r["id"]: r["payload"]
             for r in spark.read.parquet(str(tmp_path / "out1.pq")).collect()}
     assert got1 == {1: "a0", 2: "b0"}
+
+
+def _error_playbook(tmp_path, spark, non_list: bool) -> dict:
+    """A parquet source with every error kind: filter-eval (null amount),
+    mapping (mustToInt on a multi-item record), errorOnNonList (null
+    list under the condition gate), plus empty, null and multi-item
+    lists on clean records and an epoch no mapping may see."""
+    rows = [
+        (1, 10.0, "1", ["a", "b"], "list"),     # clean, two items
+        (2, 10.0, "2", [], "list"),             # clean, empty list
+        (3, 10.0, "3", None, "list"),           # null list: non-list error
+        (4, 10.0, "x", ["c", "d", "e"], "list"),  # mustToInt fails
+        (5, None, "1e300", ["f"], "list"),      # filter eval error
+        (6, 1.0, "6", ["g"], "list"),           # filtered out
+        (7, 10.0, "7", None, "skip"),           # gate closed: passthrough
+        (8, 10.0, "y", None, "list"),           # mapping error wins
+        (9, None, "z", None, "list"),           # filter error wins
+    ]
+    src = str(tmp_path / "src.pq")
+    spark.createDataFrame(
+        rows, "id long, amount double, qty string, tags array<string>, "
+              "kind string").write.parquet(src)
+    return {
+        "source": {"type": "parquet", "file": src},
+        "filter": "amount > 5",
+        "mappings": [
+            {"source": "id", "target": "id"},
+            {"source": "qty", "target": "qty", "transform": "mustToInt"},
+            # raises (long overflow) on the 1e300 of record 5, which
+            # failed the filter: the error channel must keep it unmapped
+            {"source": "qty", "target": "day", "transform": "epochToDate"},
+            {"source": "tags", "target": "tags"},
+            {"source": "kind", "target": "kind"},
+        ],
+        "flattening": {"sourceField": "tags", "targetField": "tag",
+                       "errorOnNonList": non_list,
+                       "conditionField": "kind", "conditionValue": "list"},
+        "errorHandling": {"mode": "skip",
+                          "errorFile": str(tmp_path / "errors")},
+        "destination": {"type": "parquet", "file": str(tmp_path / "out")},
+    }
+
+
+@pytest.mark.parametrize("non_list", [False, True])
+def test_error_file_one_row_per_source_record(spark, tmp_path, non_list):
+    """Errored records split off before flatten, as the reference drops
+    them in its mapping loop (processor.go:94-101) before flattening
+    (processor.go:110-122): the error file holds ONE row per errored
+    source record, with its original fields and first error, in the
+    reference's column order — checked against DuckDB over the source."""
+    import duckdb
+
+    cfg = load_config(_error_playbook(tmp_path, spark, non_list))
+    res = run_pipeline(spark, cfg)
+    nl = "TRUE" if non_list else "FALSE"
+    con = duckdb.connect()
+    con.execute(f"""
+        CREATE VIEW ch AS SELECT *, coalesce(
+            CASE WHEN amount > 5 IS NULL THEN 'filter' END,
+            CASE WHEN TRY_CAST(qty AS BIGINT) IS NULL THEN 'mapping' END,
+            CASE WHEN {nl} AND kind = 'list' AND tags IS NULL
+                 THEN 'non_list' END) AS err
+        FROM read_parquet('{tmp_path}/src.pq/*.parquet')
+        WHERE (amount > 5) IS NOT FALSE""")
+    want_err = dict(con.execute(
+        "SELECT id, err FROM ch WHERE err IS NOT NULL").fetchall())
+    want_out = sorted(con.execute("""
+        SELECT id, unnest(tags) FROM ch WHERE err IS NULL AND kind = 'list'
+        UNION ALL SELECT id, NULL FROM ch WHERE err IS NULL AND kind <> 'list'
+    """).fetchall(), key=str)
+    assert want_err == ({3: "non_list", 4: "mapping", 5: "filter",
+                         8: "mapping", 9: "filter"} if non_list else
+                        {4: "mapping", 5: "filter", 8: "mapping",
+                         9: "filter"})
+
+    messages = {
+        "filter": "filter eval error",
+        "mapping": "mapping rule 1 (target 'qty'): mustToInt",
+        "non_list": "flattening source field 'tags' not found or is nil",
+    }
+    errf = spark.read.option("header", True).csv(str(tmp_path / "errors"))
+    assert errf.columns == ["amount", "id", "kind", "qty", "tags",
+                            "etl_error_message"]
+    for rows in (errf.collect(), res.errors.collect()):
+        assert len(rows) == len(want_err)          # one per source record
+        for r in rows:
+            assert r["etl_error_message"].startswith(
+                messages[want_err[int(r["id"])]]), r
+    by_id = {int(r["id"]): r for r in errf.collect()}
+    assert by_id[4]["qty"] == "x" and by_id[4]["tags"] == "[c, d, e]"
+    assert by_id[5]["qty"] == "1e300" and by_id[5]["amount"] is None
+    assert res.metrics["rows_error"] == len(want_err)
+
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert sorted(((r["id"], r["tag"]) for r in out.collect()),
+                  key=str) == want_out
+
+
+def test_skip_run_scans_source_once(spark, tmp_path):
+    """A skip-mode run with an error file feeds the error file and the
+    load from one scan of its source (the error write and the load each
+    re-ran scan → filter → mappings before: 3 scans), within the
+    run's 4 jobs, and releases the blocks it materialized."""
+    import re
+
+    cfg = load_config(_error_playbook(tmp_path, spark, True))
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_executions(k):  # the UI store keeps only the latest ones
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        execs = store.executionsList(max(0, n - k), k)
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = max([e.executionId() for e in last_executions(1)], default=-1)
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("one-scan", "one-scan", False)
+    try:
+        res = run_pipeline(spark, cfg)
+    finally:
+        sc.setJobGroup(None, None, False)
+    plans = [e.physicalPlanDescription() for e in last_executions(50)
+             if e.executionId() > before]
+    scans = sum(len(re.findall(r"^\(\d+\) Scan parquet", p, re.M))
+                for p in plans)
+    assert scans == 1, plans
+    assert len(sc.statusTracker().getJobIdsForGroup("one-scan")) <= 4
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    assert len(res.output.collect()) == 3 and len(res.errors.collect()) == 5

@@ -470,6 +470,23 @@ def test_zorder_accepts_string_option(spark, tmp_path):
     assert back.count() == 100
 
 
+@pytest.mark.parametrize("cols", [["x"], ["x", "y"]])
+def test_zorder_empty_and_all_null(spark, tmp_path, cols):
+    """An empty frame and an all-null zorderBy column give approxQuantile
+    no boundaries: the write falls back to sampled ranges (every row
+    ranks 0 on such a column) instead of raising IndexError."""
+    empty = spark.range(0).selectExpr("id as x", "id as y")
+    out = str(tmp_path / "empty")
+    write_sink(empty, "parquet", out, {"zorderBy": cols, "sortPartitions": 4})
+    assert spark.read.parquet(out).count() == 0
+
+    nulls = spark.range(100).selectExpr("CAST(NULL AS BIGINT) as x", "id as y")
+    out = str(tmp_path / "nulls")
+    write_sink(nulls, "parquet", out, {"zorderBy": cols, "sortPartitions": 4})
+    back = spark.read.parquet(out)
+    assert back.count() == 100 and back.filter("x IS NOT NULL").count() == 0
+
+
 def test_parquet_merge_schema_evolution(spark, tmp_path):
     """options.mergeSchema: a source dir whose newer files added a
     column reads the union schema (older rows null) instead of whatever

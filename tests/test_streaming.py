@@ -650,6 +650,30 @@ def test_near_dedup_ingest_gate(spark, tmp_path):
     assert fold == got
 
 
+def test_near_gate_resent_ids_drop(spark, tmp_path):
+    """A batch that re-sends documents under ids the store already holds
+    (an at-least-once source) lands without error and without a second
+    copy. Keyed by id alone, the verify doubled those ids' rows: the
+    exact in-batch copy divided by zero, and without it the re-sent
+    documents landed twice."""
+    from etl_tool_spark.streaming.dedup import land_near_batch
+
+    words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+    docs = [(i, " ".join(words[5 * i:5 * i + 5] * 3) + f" doc{i}")
+            for i in range(4)]
+    docs[1] = (1, docs[0][1])        # an exact copy: drops in-batch
+    schema = "doc_id long, text string"
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    land_near_batch(spark.createDataFrame(docs, schema), 7, store, out)
+    land_near_batch(spark.createDataFrame(
+        docs + [(9, "a fresh document about something else entirely")],
+        schema), 8, store, out)
+    got = sorted((r["doc_id"], r["batch_id"])
+                 for r in spark.read.parquet(out).collect())
+    assert got == [(0, 7), (2, 7), (3, 7), (9, 8)]
+
+
 def test_semantic_ingest_gate(spark, tmp_path):
     """Streaming semantic (embedding-cosine) ingest gate: the landing
     zone equals the sequential batch fold, contains no cosine pair at
