@@ -98,10 +98,24 @@ def t_to_bool(col, dtype, params, ctx):
     return TransformResult(coerce_bool(col, dtype))
 
 
+# timestamp_seconds holds microseconds in a long: beyond Long.MAX / 1e6
+# seconds it raises 'long overflow' under ANSI mode
+_MAX_EPOCH_S = 9_223_372_036_854
+
+
+def _epoch_secs(col, dtype) -> Column:
+    """epoch seconds (loose-parsed, truncated); NULL for NaN, ±inf and
+    values no timestamp can hold (Spark orders NaN above +inf, so the
+    range test excludes all three)."""
+    d = coerce_double(col, dtype)
+    return F.when(d.between(-_MAX_EPOCH_S, _MAX_EPOCH_S),
+                  F.floor(d).cast("long"))
+
+
 def _epoch_date(col, dtype) -> Column:
-    """epoch seconds (loose-parsed, truncated) → 'yyyy-MM-dd' UTC string."""
-    secs = F.floor(coerce_double(col, dtype)).cast("long")
-    return F.date_format(F.timestamp_seconds(secs), "yyyy-MM-dd")
+    """epoch seconds → 'yyyy-MM-dd' UTC string."""
+    return F.date_format(F.timestamp_seconds(_epoch_secs(col, dtype)),
+                         "yyyy-MM-dd")
 
 
 def t_epoch_to_date(col, dtype, params, ctx):
@@ -152,7 +166,7 @@ def t_multi_date_convert(col, dtype, params, ctx):
 
 def t_calculate_age(col, dtype, params, ctx):
     # whole days between UTC date(epoch) and today; future ⇒ 0; fail ⇒ nil
-    secs = F.floor(coerce_double(col, dtype)).cast("long")
+    secs = _epoch_secs(col, dtype)
     days = F.datediff(F.current_date(), F.to_date(F.timestamp_seconds(secs)))
     return TransformResult(F.when(days.isNotNull(), F.greatest(F.lit(0), days)))
 

@@ -5,29 +5,39 @@ stays correct under a stream of upserts/deletes WITHOUT recomputing
 from the base table: each change batch contributes signed deltas —
 minus the OLD payload of every touched key, plus the NEW payload — and
 sums/counts are abelian, so folding the deltas into the MV is exact.
-Cost per batch:
+Cost per batch, when this call performs the merge:
 
   * base-table side: whatever ``merge_cdc_batch`` costs (bucketed
-    rewrite ∝ change volume — streaming/cdc.py);
-  * old/new payload lookups: the snapshot restricted to the batch's
-    keys by a semi-join (the store is bucketed on the key, so this
-    prunes to the touched buckets, ∝ batch);
+    rewrite ∝ change volume, one file per touched bucket —
+    streaming/cdc.py);
+  * old payloads: the pre-merge rows of the AFFECTED buckets only (the
+    frame the merge itself reads), semi-joined on the batch's keys;
+    the keys and the new payloads come from the merge's checkpointed
+    latest-per-key frame, so the raw batch is neither re-scanned nor
+    re-aggregated;
   * MV fold: one outer join on a frame whose size is the number of
     TOUCHED groups, rewritten into a GROUP-CARDINALITY-sized table.
+    Every MV version is read with the schema the fold writes, so no
+    read runs a schema-inference job.
+
+A warm refresh runs 10 Spark jobs. A replay of a batch whose merge
+already committed reads the pre- and post-batch versions in full
+(semi-joined on the batch's distinct keys): exact, but ∝ the snapshot.
 
 MIN/MAX are not delta-foldable (a delete can remove the extreme, and
 the second-best is not in the MV) — the textbook non-distributive IVM
 case. ``track_minmax=True`` handles it with the standard refinement:
 inserts fold for free (``least``/``greatest`` against the stored
 extreme); a group re-aggregates ONLY when a removed old value tied or
-beat its stored extreme (``lossy`` groups), and that recompute reads
-just those groups' rows back from the snapshot (a group-keyed
-semi-join — with a group-clustered layout this is a pruned scan; worst
-case it is ∝ the affected groups' row counts, never the table).
+beat its stored extreme (``lossy`` groups), from the post-merge state
+semi-joined on those groups. The snapshot is bucketed on the key, not
+the group, so that recompute scans the whole pre-merge version: the
+one cost of a ``track_minmax`` refresh that grows with the table.
 
-Nothing scales with the base-table size — that is the entire point of
-an incremental MV at 100 TB, where "just re-aggregate" is a full scan
-per refresh. The catalog's ``etl_incremental_mv_fold`` /
+Outside that recompute and the replay path nothing scales with the
+base-table size — that is the entire point of an incremental MV at
+100 TB, where "just re-aggregate" is a full scan per refresh. The
+catalog's ``etl_incremental_mv_fold`` /
 ``etl_incremental_mv_minmax_fold`` prove both folds exact against a
 DuckDB full recompute of the final state.
 
@@ -46,6 +56,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, LongType, StructField, StructType
 
 __all__ = ["update_agg_mv"]
 
@@ -79,24 +90,34 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
     directory is overwritten.
 
     Write overlap (guide §2.6): on the non-replay path the MV fold is
-    computed from the PRE-merge snapshot version plus the batch's
-    checkpointed surviving rows — never from the just-written snapshot
+    computed from the PRE-merge version's affected buckets plus the
+    batch's checkpointed rows — never from the just-written snapshot
     — so the snapshot data write and the MV version write are
     independent jobs and run concurrently; only the (driver-side,
     metadata-only) manifest commit and MV marker are ordered after
-    them. The equivalences that make this exact: post-merge touched
-    rows == the batch's upserts (every upsert key is a touched key,
-    and touched keys' old rows are all replaced), and the post-merge
-    snapshot == pre-merge rows anti-joined on the touched keys ∪
-    upserts (buckets are a pure function of the key)."""
+    them. The equivalences that make this exact (buckets are a pure
+    function of the key): pre-merge touched rows all lie in the
+    affected buckets, post-merge touched rows == the batch's upserts
+    (every upsert key is a touched key, and touched keys' old rows are
+    all replaced), and the post-merge snapshot == pre-merge rows
+    anti-joined on the touched keys ∪ upserts."""
     from etl_tool_spark import commit as C
     from etl_tool_spark.streaming.cdc import (_load_manifest, _prepare_merge,
                                               list_versions, read_snapshot)
 
+    mv_cols = ["mv_sum", "mv_n"] + (["mv_min", "mv_max"]
+                                    if track_minmax else [])
+
+    def mv_schema(group_type: DataType) -> StructType:
+        """What every MV version holds, so no read infers it."""
+        return StructType([StructField(group_col, group_type)]
+                          + [StructField(c, LongType()) for c in mv_cols])
+
     mv_path = f"{mv_dir}/v{batch_id}"
     marker = f"{mv_path}/_MV_COMMITTED"
     if C.exists(marker):  # replay of a fully-applied batch: no-op
-        return spark.read.parquet(mv_path)
+        return spark.read.schema(
+            mv_schema(changes.schema[group_col].dataType)).parquet(mv_path)
 
     def batch_version() -> int | None:
         for n in reversed(list_versions(spark, snapshot_dir)):
@@ -105,17 +126,14 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
                 return n
         return None
 
-    tk = changes.select(*keys).distinct()
-
-    def touched(snapshot: DataFrame) -> DataFrame:
-        return (snapshot.join(tk, keys, "semi")
-                .select(F.col(group_col).alias("_g"),
-                        F.col(value_col).cast("long").alias("_val")))
-
     def gv(df: DataFrame) -> DataFrame:
         return df.select(F.col(group_col).alias("_g"),
                          F.col(value_col).cast("long").alias("_val"))
 
+    def touched(snapshot: DataFrame, tk: DataFrame) -> DataFrame:
+        return gv(snapshot.join(tk, keys, "semi"))
+
+    empty = changes.limit(0)
     applied_at = batch_version()
     prep = None
     if applied_at is None:
@@ -124,16 +142,20 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
 
     if prep is not None:
         # fast path: this call performs the merge itself, so the MV
-        # delta derives from the pre-merge version + the checkpointed
-        # upserts — the snapshot write below overlaps the MV write
-        pre_version = prep["pre_version"]
-        old = (read_snapshot(spark, snapshot_dir, version=pre_version)
-               if pre_version is not None else changes.limit(0))
-        old_t = touched(old)
+        # delta derives from the pre-merge affected buckets + the
+        # checkpointed batch — the snapshot write below overlaps the
+        # MV write
+        pre_version, tk = prep["pre_version"], prep["touched"]
+        old_t = touched(prep["old"] if prep["old"] is not None else empty,
+                        tk)
         new_t = gv(prep["upserts"])
-        snap = (gv(old.join(tk, keys, "left_anti"))
-                .unionByName(gv(prep["upserts"])))
+
+        def snap() -> DataFrame:
+            old = (read_snapshot(spark, snapshot_dir, version=pre_version)
+                   if pre_version is not None else empty)
+            return gv(old.join(tk, keys, "left_anti")).unionByName(new_t)
     else:
+        tk = changes.select(*keys).distinct()
         if applied_at is None:
             # batch touched no buckets → no version committed → zero
             # delta: pin old and new to the SAME (current) version so
@@ -150,13 +172,15 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
                     f"version {applied_at - 1} (the pre-batch state) was "
                     "vacuumed; keep at least 2 versions while MV refreshes "
                     "can still be retried")
-        old_t = (touched(read_snapshot(spark, snapshot_dir,
-                                       version=pre_versions[-1]))
-                 if pre_versions else touched(changes.limit(0)))
+        old_t = touched(read_snapshot(spark, snapshot_dir,
+                                      version=pre_versions[-1])
+                        if pre_versions else empty, tk)
         full = (read_snapshot(spark, snapshot_dir, version=applied_at)
-                if applied_at is not None else changes.limit(0))
-        new_t = touched(full)
-        snap = gv(full)
+                if applied_at is not None else empty)
+        new_t = touched(full, tk)
+
+        def snap() -> DataFrame:
+            return gv(full)
 
     def signed(df: DataFrame, sign: int) -> DataFrame:
         return df.select("_g", (F.col("_val") * sign).alias("_v"),
@@ -173,14 +197,9 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
                      "_g", "full_outer"))
         delta = delta.join(ext, "_g", "left")
 
-    mv_cols = ["mv_sum", "mv_n"] + (["mv_min", "mv_max"]
-                                    if track_minmax else [])
-    if batch_id > 0:
-        prev = spark.read.parquet(f"{mv_dir}/v{batch_id - 1}")
-    else:  # typed empty MV derived from the delta frame (any group type)
-        prev = delta.limit(0).select(
-            F.col("_g").alias(group_col),
-            *[F.lit(0).cast("long").alias(c) for c in mv_cols])
+    schema = mv_schema(delta.schema["_g"].dataType)
+    prev = (spark.read.schema(schema).parquet(f"{mv_dir}/v{batch_id - 1}")
+            if batch_id > 0 else spark.createDataFrame([], schema))
 
     merged = (prev.withColumnRenamed(group_col, "_g")
               .join(delta, "_g", "full_outer")
@@ -198,7 +217,7 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
                   & ((F.col("_omin") <= F.col("mv_min"))
                      | (F.col("_omax") >= F.col("mv_max")))))
         merged = merged.withColumn("_lossy", F.coalesce(lossy, F.lit(False)))
-        redo = (snap.join(merged.filter("_lossy").select("_g").distinct(),
+        redo = (snap().join(merged.filter("_lossy").select("_g").distinct(),
                           "_g", "semi")
                 .groupBy("_g")
                 .agg(F.min("_val").alias("_rmin"),
@@ -239,4 +258,4 @@ def update_agg_mv(spark: SparkSession, snapshot_dir: str, mv_dir: str,
     # overlap can PRECEDE the manifest — short-circuiting on it could
     # skip a replay whose merge never committed (silent snapshot loss)
     C.publish(marker, "")
-    return spark.read.parquet(mv_path)
+    return spark.read.schema(schema).parquet(mv_path)

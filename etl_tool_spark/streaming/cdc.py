@@ -14,6 +14,19 @@ and writes ONLY those buckets anew. Untouched buckets are never read or
 written. At 100 TB, n_buckets scales to thousands and a batch touching
 k buckets costs k bucket rewrites regardless of snapshot size.
 
+**One file per touched bucket per version.** The merged frame is the
+old buckets' scan unioned with the batch, and a partitioned write makes
+one file per bucket per task. Left to the input's splits, that count
+feeds on itself: more files give more scan splits, which give more
+files (8-9 files per bucket after seven batches, many of a few KB).
+Both writes therefore go through a ``rebalance`` on the bucket: each
+bucket reaches the writer in one task, so a version holds one file per
+bucket it rewrote; AQE packs small buckets into shared tasks and
+splits a bucket larger than ``advisoryPartitionSizeInBytes`` into
+several files, so the layout stays sound at any bucket size. Every
+read passes the manifest's ``schema_ddl``, so none runs a
+schema-inference job.
+
 **Atomic commits via immutable versions** (the table-format commit
 protocol, miniaturized). Data files are IMMUTABLE — every merge writes
 its output buckets into a fresh ``data/<batch>-<attempt>/`` directory
@@ -119,6 +132,13 @@ def _written_buckets(spark: SparkSession, out_dir: str) -> list[str]:
                    for p in C.ls(f"{out_dir}/{BUCKET_COL}=*")), key=int)
 
 
+def _write_buckets(df: DataFrame, out_dir: str) -> None:
+    """The partitioned write, one file per bucket (see the module
+    docstring)."""
+    df.hint("rebalance", BUCKET_COL).write.partitionBy(BUCKET_COL) \
+        .parquet(out_dir)
+
+
 def read_snapshot(spark: SparkSession, snapshot_dir: str,
                   version: int | None = None) -> DataFrame:
     """The snapshot at ``version`` (default: current). Buckets resolve
@@ -137,7 +157,7 @@ def read_snapshot(spark: SparkSession, snapshot_dir: str,
     paths = _bucket_paths(snapshot_dir, manifest)
     if not paths:
         return spark.createDataFrame([], manifest["schema_ddl"])
-    return spark.read.parquet(*paths)
+    return spark.read.schema(manifest["schema_ddl"]).parquet(*paths)
 
 
 def _prepare_merge(batch: DataFrame, snapshot_dir: str,
@@ -158,6 +178,10 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
          "upserts": the batch's surviving rows (reads MATERIALIZED
                     checkpoint blocks — safe to consume from a
                     concurrent job),
+         "touched": the batch's distinct keys, deletes included (the
+                    same checkpointed frame),
+         "old":     the pre-merge rows of the affected buckets (None
+                    when no affected bucket has rows yet),
          "pre_version": the version preceding this merge (None on the
                     first merge)}.
 
@@ -196,7 +220,7 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
         upserts = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
 
         def write_first() -> None:
-            upserts.write.partitionBy(BUCKET_COL).parquet(out_dir)
+            _write_buckets(upserts, out_dir)
 
         def commit_first() -> None:
             written = _written_buckets(spark, out_dir)
@@ -209,7 +233,9 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
                 _require_same_batch(spark, snapshot_dir, 1, batch_id)
 
         return {"write": write_first, "commit": commit_first,
-                "release": release, "upserts": upserts, "pre_version": None}
+                "release": release, "upserts": upserts,
+                "touched": latest.select(*keys), "old": None,
+                "pre_version": None}
 
     cur_n = versions[-1]
     cur = _load_manifest(spark, snapshot_dir, cur_n)
@@ -219,7 +245,8 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
 
     # the latest-change frame has three consumers on this branch — the
     # affected-bucket collect, the merged write's upsert side, and the
-    # keep anti-join's key side — so without a checkpoint the batch's
+    # keep anti-join's key side (the MV refresh adds its delta's two
+    # sides) — so without a checkpoint the batch's
     # dedup window re-runs for each (guide §5: cut recompute, release
     # when done; streams call this per micro-batch forever, hence the
     # explicit unpersist before every exit). Lazy: the collect
@@ -236,17 +263,18 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
         return None
     old_paths = [f"{snapshot_dir}/{cur['buckets'][b]}/{BUCKET_COL}={b}"
                  for b in affected if b in cur["buckets"]]
-    keep = None
+    touched = latest.select(*keys)
+    old = keep = None
     if old_paths:
         # immutable inputs: these files are never deleted or rewritten
         # by this merge, so no checkpoint/copy is needed before writing
-        old = spark.read.parquet(*old_paths)
-        keep = old.join(latest.select(*keys), keys, "left_anti") \
+        old = spark.read.schema(cur["schema_ddl"]).parquet(*old_paths)
+        keep = old.join(touched, keys, "left_anti") \
                   .withColumn(BUCKET_COL, bucket)
     merged = keep.unionByName(upserts) if keep is not None else upserts
 
     def write() -> None:
-        merged.write.partitionBy(BUCKET_COL).parquet(out_dir)
+        _write_buckets(merged, out_dir)
 
     def commit() -> None:
         # the output partition dir names ARE the present-bucket set: one
@@ -263,7 +291,8 @@ def _prepare_merge(batch: DataFrame, snapshot_dir: str,
             _require_same_batch(spark, snapshot_dir, cur_n + 1, batch_id)
 
     return {"write": write, "commit": commit, "release": release,
-            "upserts": upserts, "pre_version": cur_n}
+            "upserts": upserts, "touched": touched, "old": old,
+            "pre_version": cur_n}
 
 
 def merge_cdc_batch(batch: DataFrame, snapshot_dir: str,

@@ -741,11 +741,21 @@ def test_cdc_source_reads_snapshot(spark, tmp_path):
     assert got1 == {1: "a0", 2: "b0"}
 
 
-def _error_playbook(tmp_path, spark, non_list: bool) -> dict:
+def _error_playbook(tmp_path, spark, monkeypatch, non_list: bool) -> dict:
     """A parquet source with every error kind: filter-eval (null amount),
     mapping (mustToInt on a multi-item record), errorOnNonList (null
     list under the condition gate), plus empty, null and multi-item
-    lists on clean records and an epoch no mapping may see."""
+    lists on clean records and a value no mapping may see."""
+    from pyspark.sql import functions as F
+
+    from etl_tool_spark.functions.registry import TRANSFORMS, TransformResult
+
+    def raise_on_1e300(col, dtype, params, ctx):
+        return TransformResult(F.when(
+            col == "1e300", F.raise_error(F.lit("mapped a filtered row")))
+            .otherwise(col))
+
+    monkeypatch.setitem(TRANSFORMS, "raiseon1e300", raise_on_1e300)
     rows = [
         (1, 10.0, "1", ["a", "b"], "list"),     # clean, two items
         (2, 10.0, "2", [], "list"),             # clean, empty list
@@ -765,11 +775,11 @@ def _error_playbook(tmp_path, spark, non_list: bool) -> dict:
         "source": {"type": "parquet", "file": src},
         "filter": "amount > 5",
         "mappings": [
+            # raises on the 1e300 of record 5, which failed the
+            # filter: the error channel must keep it unmapped
+            {"source": "qty", "target": "day", "transform": "raiseOn1e300"},
             {"source": "id", "target": "id"},
             {"source": "qty", "target": "qty", "transform": "mustToInt"},
-            # raises (long overflow) on the 1e300 of record 5, which
-            # failed the filter: the error channel must keep it unmapped
-            {"source": "qty", "target": "day", "transform": "epochToDate"},
             {"source": "tags", "target": "tags"},
             {"source": "kind", "target": "kind"},
         ],
@@ -783,7 +793,8 @@ def _error_playbook(tmp_path, spark, non_list: bool) -> dict:
 
 
 @pytest.mark.parametrize("non_list", [False, True])
-def test_error_file_one_row_per_source_record(spark, tmp_path, non_list):
+def test_error_file_one_row_per_source_record(spark, tmp_path, monkeypatch,
+                                              non_list):
     """Errored records split off before flatten, as the reference drops
     them in its mapping loop (processor.go:94-101) before flattening
     (processor.go:110-122): the error file holds ONE row per errored
@@ -791,7 +802,7 @@ def test_error_file_one_row_per_source_record(spark, tmp_path, non_list):
     reference's column order — checked against DuckDB over the source."""
     import duckdb
 
-    cfg = load_config(_error_playbook(tmp_path, spark, non_list))
+    cfg = load_config(_error_playbook(tmp_path, spark, monkeypatch, non_list))
     res = run_pipeline(spark, cfg)
     nl = "TRUE" if non_list else "FALSE"
     con = duckdb.connect()
@@ -816,7 +827,7 @@ def test_error_file_one_row_per_source_record(spark, tmp_path, non_list):
 
     messages = {
         "filter": "filter eval error",
-        "mapping": "mapping rule 1 (target 'qty'): mustToInt",
+        "mapping": "mapping rule 2 (target 'qty'): mustToInt",
         "non_list": "flattening source field 'tags' not found or is nil",
     }
     errf = spark.read.option("header", True).csv(str(tmp_path / "errors"))
@@ -837,14 +848,14 @@ def test_error_file_one_row_per_source_record(spark, tmp_path, non_list):
                   key=str) == want_out
 
 
-def test_skip_run_scans_source_once(spark, tmp_path):
+def test_skip_run_scans_source_once(spark, tmp_path, monkeypatch):
     """A skip-mode run with an error file feeds the error file and the
     load from one scan of its source (the error write and the load each
     re-ran scan → filter → mappings before: 3 scans), within the
     run's 4 jobs, and releases the blocks it materialized."""
     import re
 
-    cfg = load_config(_error_playbook(tmp_path, spark, True))
+    cfg = load_config(_error_playbook(tmp_path, spark, monkeypatch, True))
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -869,3 +880,28 @@ def test_skip_run_scans_source_once(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup("one-scan")) <= 4
     assert sc._jsc.getPersistentRDDs().size() == persisted
     assert len(res.output.collect()) == 3 and len(res.errors.collect()) == 5
+
+
+def test_epoch_transforms_out_of_range(spark, tmp_path):
+    """epochToDate and calculateAge on an epoch no timestamp can hold
+    (±1e300, NaN, inf) do not abort the run: epochToDate passes the
+    original value through (transform.go:148-153) and calculateAge
+    yields nil, while a normal epoch still converts."""
+    src, out = str(tmp_path / "src.pq"), str(tmp_path / "out")
+    vals = {1: "1e300", 2: "-1e300", 3: "NaN", 4: "inf", 5: "1700000000"}
+    spark.createDataFrame(list(vals.items()),
+                          "id long, ts string").write.parquet(src)
+    run_pipeline(spark, load_config({
+        "source": {"type": "parquet", "file": src},
+        "mappings": [
+            {"source": "id", "target": "id"},
+            {"source": "ts", "target": "day", "transform": "epochToDate"},
+            {"source": "ts", "target": "age", "transform": "calculateAge"},
+        ],
+        "destination": {"type": "parquet", "file": out},
+    }))
+    got = {r["id"]: (r["day"], r["age"])
+           for r in spark.read.parquet(out).collect()}
+    assert {i: got[i] for i in range(1, 5)} == {
+        i: (vals[i], None) for i in range(1, 5)}
+    assert got[5][0] == "2023-11-14" and got[5][1] > 1000
