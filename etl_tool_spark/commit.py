@@ -1,8 +1,10 @@
 """One commit protocol for every persistent store, on the Hadoop FileSystem.
 
-The ingest-gate stores, the minhash and embedding update stores, the
-CDC snapshot, the incremental MV and store compaction all reach storage
-through this module, so they run on any filesystem Hadoop serves (plain
+Every persistent store reaches storage through this module: the five
+ingest gates' stores and markers, the minhash and embedding update
+stores, the exact and paragraph fingerprint stores, the IVF and PQ
+index appends, the CDC snapshot, the incremental MV and store
+compaction, so they run on any filesystem Hadoop serves (plain
 paths, ``file://``, ``hdfs://``, ``s3a://`` where the connector is on
 the classpath). A scheme Hadoop cannot serve fails on the first call,
 before anything is written.

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_tool_spark import commit as C
 from etl_tool_spark.llm.text import fingerprint, hash64, tokens
 
 __all__ = ["exact_dedup", "incremental_exact_dedup", "shingles",
@@ -70,7 +71,16 @@ def incremental_exact_dedup(new_df: DataFrame, store_dir: str,
     The old-side read pins to the store's current part files, exactly as
     ``incremental_minhash_pairs`` does (snapshot isolation stand-in).
     Returns the surviving new rows (original columns)."""
-    spark = new_df.sparkSession
+    survivors = _exact_survivors(new_df, store_dir, text_col, id_col)
+    if update_store:
+        _remember(survivors.select("_fp"), store_dir)
+    return survivors.drop("_fp")
+
+
+def _exact_survivors(new_df: DataFrame, store_dir: str, text_col: str,
+                     id_col: str) -> DataFrame:
+    """(_fp, *new_df columns) of each fingerprint's lowest-id row in the
+    batch, for the fingerprints the store has not seen."""
     fp = fingerprint(F.col(text_col)).alias("_fp")
     with_fp = new_df.select(fp, "*")
 
@@ -78,19 +88,27 @@ def incremental_exact_dedup(new_df: DataFrame, store_dir: str,
     keep_w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
     batch_first = (with_fp.withColumn("_rk", F.row_number().over(keep_w))
                           .filter(F.col("_rk") == 1).drop("_rk"))
+    seen = _seen(new_df.sparkSession, store_dir, "_fp")
+    return (batch_first if seen is None
+            else batch_first.join(seen, "_fp", "left_anti"))
 
-    from etl_tool_spark import commit as C
 
+def _seen(spark, store_dir: str, col: str) -> DataFrame | None:
+    """Open a fingerprint store (a flat table of one string column
+    ``col``, finishing any published append) and read it pinned to its
+    current part files; None while it is empty."""
     C.recover(store_dir)
-    part_files = C.ls(f"{store_dir}/*.parquet")
-    if part_files:
-        seen = spark.read.parquet(*part_files)
-        survivors = batch_first.join(seen, "_fp", "left_anti")
-    else:
-        survivors = batch_first
-    if update_store:
-        survivors.select("_fp").write.mode("append").parquet(store_dir)
-    return survivors.drop("_fp")
+    files = C.ls(f"{store_dir}/*.parquet")
+    return (spark.read.schema(f"{col} string").parquet(*files) if files
+            else None)
+
+
+def _remember(fps: DataFrame, store_dir: str) -> None:
+    """Append ``fps`` to a fingerprint store as one commit: none of the
+    batch is visible until its manifest is published, and all of it is
+    after the next ``_seen``."""
+    fps.write.parquet(C.begin(store_dir, "append"))
+    C.commit(store_dir, "append", keep=False)
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -439,7 +457,8 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
             # without staging each consumer recomputes the shingle+md5
             # pipeline
             hs_frame.write.mode("overwrite").parquet(staging_dir)
-            hs_frame = df.sparkSession.read.parquet(staging_dir)
+            hs_frame = (df.sparkSession.read.schema(hs_frame.schema)
+                        .parquet(staging_dir))
         elif persist:
             hs_frame = hs_frame.persist()
 
@@ -889,9 +908,6 @@ def incremental_paragraph_dedup(new_df: DataFrame, store_dir: str,
     part files, survivor-only appends."""
     import re
 
-    from etl_tool_spark import commit as C
-
-    spark = new_df.sparkSession
     pat = re.escape(sep)
     paras = new_df.select(
         F.col(id_col).alias("_id"),
@@ -904,10 +920,8 @@ def incremental_paragraph_dedup(new_df: DataFrame, store_dir: str,
     marked = (paras.join(keeper, "_pfp")
                    .withColumn("_first",
                                F.struct("_id", "_pos") == F.col("_k")))
-    C.recover(store_dir)
-    part_files = C.ls(f"{store_dir}/*.parquet")
-    if part_files:
-        seen = spark.read.parquet(*part_files)
+    seen = _seen(new_df.sparkSession, store_dir, "_pfp")
+    if seen is not None:
         marked = (marked.join(seen.withColumn("_seen", F.lit(True)),
                               "_pfp", "left")
                         .withColumn("_keep", F.col("_first")
@@ -916,8 +930,7 @@ def incremental_paragraph_dedup(new_df: DataFrame, store_dir: str,
     else:
         marked = marked.withColumn("_keep", F.col("_first"))
     if update_store:
-        (marked.filter(F.col("_keep")).select("_pfp")
-               .write.mode("append").parquet(store_dir))
+        _remember(marked.filter(F.col("_keep")).select("_pfp"), store_dir)
     return (marked.groupBy("_id")
             .agg(F.array_join(
                      F.transform(

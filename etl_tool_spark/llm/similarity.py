@@ -428,6 +428,11 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                   .filter(F.col("rank") <= k))
 
 
+# the fixed schemas of the IVF centroid and PQ codebook tables
+_CENTROIDS = "cell int, centroid array<double>"
+_CODEBOOKS = "sub int, cent int, vec array<double>"
+
+
 def ivf_build_index(corpus: DataFrame, index_dir: str, nlist: int = 16,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding") -> list[list[float]]:
@@ -451,7 +456,7 @@ def ivf_build_index(corpus: DataFrame, index_dir: str, nlist: int = 16,
     spark = corpus.sparkSession
     (spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>")
+        _CENTROIDS)
         .coalesce(1).write.mode("overwrite").parquet(f"{base}/centroids"))
     # repartition ON the partition column first: without it every task
     # opens a writer per cell it holds (tasks × nlist files); with it,
@@ -462,6 +467,12 @@ def ivf_build_index(corpus: DataFrame, index_dir: str, nlist: int = 16,
         .write.mode("overwrite").partitionBy("cell")
         .parquet(f"{base}/vectors"))
     return centroids
+
+
+def _ivf_read_centroids(spark, base: str) -> list[list[float]]:
+    rows = (spark.read.schema(_CENTROIDS).parquet(f"{base}/centroids")
+                 .orderBy("cell").collect())
+    return [list(r["centroid"]) for r in rows]
 
 
 def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 5,
@@ -478,9 +489,7 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 5,
     from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
-    cent_rows = spark.read.parquet(f"{base}/centroids") \
-                     .orderBy("cell").collect()
-    centroids = [list(r["centroid"]) for r in cent_rows]
+    centroids = _ivf_read_centroids(spark, base)
     c = (spark.read.parquet(f"{base}/vectors")
               .select(F.col(id_col), F.col(vec_col).alias("_cvec"),
                       F.col("_cnorm"), F.col("cell")))
@@ -517,19 +526,19 @@ def ivf_append_index(new_df: DataFrame, index_dir: str,
     quantizer drifts as the corpus grows, so monitor ivf_cell_stats and
     rebuild via ivf_build_index when cell imbalance degrades recall —
     appends never mutate existing files, so a rebuild can run alongside
-    reads and swap in atomically."""
+    reads and swap in atomically. Each append is one commit
+    (etl_tool_spark.commit): a crash leaves none of the batch visible
+    or, once its manifest is published, all of it at the next open."""
     from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
-    spark = new_df.sparkSession
-    cent_rows = spark.read.parquet(f"{base}/centroids") \
-                     .orderBy("cell").collect()
-    centroids = [list(r["centroid"]) for r in cent_rows]
+    centroids = _ivf_read_centroids(new_df.sparkSession, base)
+    stage = C.begin(base, "append")
     (ivf_assign(new_df, centroids, vec_col=vec_col, cluster_col="cell")
         .withColumn("_cnorm", norm(F.col(vec_col)))
         .repartition(F.col("cell"))  # one file per touched cell, not per task×cell
-        .write.mode("append").partitionBy("cell")
-        .parquet(f"{base}/vectors"))
+        .write.partitionBy("cell").parquet(f"{stage}/vectors"))
+    C.commit(base, "append", keep=False)
 
 
 def ivf_cell_stats(spark, index_dir: str) -> DataFrame:
@@ -645,7 +654,7 @@ def incremental_embedding_pairs(new_df: DataFrame, store_dir: str,
             fused, _st.shard_array(F.col("_bkts"), n_shards), n_shards)
         observed.write.mode("overwrite").parquet(staging_dir)
         staged_probe = resolve()
-        staged = spark.read.parquet(staging_dir)
+        staged = spark.read.schema(fused.schema).parquet(staging_dir)
         vf_new = staged.select(id_col, vec_col, "_norm")
         banded_new = staged.select(id_col,
                                    F.explode("_bkts").alias("_bkt"))
@@ -1168,7 +1177,7 @@ def pq_build_index(corpus: DataFrame, index_dir: str,
     (spark.createDataFrame(
         [(s, c, vec) for s, cb in enumerate(books)
          for c, vec in enumerate(cb)],
-        "sub int, cent int, vec array<double>")
+        _CODEBOOKS)
         .coalesce(1).write.mode("overwrite").parquet(f"{base}/codebooks"))
     (pq_encode(corpus.select(id_col, vec_col), books,
                vec_col=vec_col, code_col="code")
@@ -1178,7 +1187,8 @@ def pq_build_index(corpus: DataFrame, index_dir: str,
 
 
 def _pq_read_codebooks(spark, index_dir: str) -> list[list[list[float]]]:
-    rows = (spark.read.parquet(f"{index_dir.rstrip('/')}/codebooks")
+    rows = (spark.read.schema(_CODEBOOKS)
+                 .parquet(f"{index_dir.rstrip('/')}/codebooks")
                  .orderBy("sub", "cent").collect())
     books: list[list[list[float]]] = []
     for r in rows:
@@ -1221,15 +1231,16 @@ def pq_append_index(new_df: DataFrame, index_dir: str,
     rows immediately. Same maintenance contract as ivf_append_index:
     the quantizer drifts as the corpus distribution shifts, so rebuild
     via pq_build_index when shortlist recall degrades; appends never
-    mutate existing files."""
+    mutate existing files and each one commits whole."""
     from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
     books = _pq_read_codebooks(new_df.sparkSession, base)
+    stage = C.begin(base, "append")
     (pq_encode(new_df.select(id_col, vec_col), books,
                vec_col=vec_col, code_col="code")
-        .select(id_col, "code")
-        .write.mode("append").parquet(f"{base}/codes"))
+        .select(id_col, "code").write.parquet(f"{stage}/codes"))
+    C.commit(base, "append", keep=False)
 
 
 def semdedup(df: DataFrame, threshold: float = 0.45, nlist: int = 16,

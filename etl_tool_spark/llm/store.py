@@ -38,8 +38,9 @@ stores only. A bands table holding data without the file was written by
 an earlier layout and is refused; there is no in-place reshard — to
 change n, rebuild the store.
 
-**Every append is a commit** (etl_tool_spark.commit): a store's tables
-are written into one stage, published together and promoted, so
+**Every append is a commit** (etl_tool_spark.commit), here and in the
+fingerprint stores and IVF/PQ index appends: a store's tables are
+written into one stage, published together and promoted, so
 ``open_store`` — one listing of pending stages — is all a reader needs
 to see every committed batch and none of a crashed one.
 """
@@ -174,19 +175,22 @@ def append_and_pin(table: DataFrame, store_dir: str, table_name: str,
     stage = C.begin(store_dir, "append")
     # a flat write leaves at least one (schema-only) part file
     table.write.parquet(f"{stage}/{table_name}")
-    banded = band(spark.read.parquet(f"{stage}/{table_name}"))
+    # every re-read passes the schema just written: an unschema'd read
+    # runs a schema-inference job
+    reader = spark.read.schema(table.schema)
+    banded = band(reader.parquet(f"{stage}/{table_name}"))
     resolve = _write_bands(banded, f"{stage}/bands", key_cols, n,
                            probe=True)
     files = C.commit(store_dir, "append", keep=False)
     new_band = [f for f in files if f.startswith(f"{bands_dir}/")]
-    table = spark.read.parquet(*[
+    table = reader.parquet(*[
         f for f in files if f.startswith(f"{store_dir}/{table_name}/")])
     # a partitioned write of an EMPTY frame creates no shard dirs at
-    # all (unlike a flat write's schema-only part file) — pin the
-    # schema, not a schema-less read
+    # all (unlike a flat write's schema-only part file)
     if not new_band:
         return table, spark.createDataFrame([], banded.schema), ([], 0)
-    return table, spark.read.parquet(*new_band), resolve()
+    return (table, spark.read.schema(banded.schema).parquet(*new_band),
+            resolve())
 
 
 def read_pinned(spark: SparkSession, bands_dir: str,

@@ -18,9 +18,10 @@ Two write modes:
 from __future__ import annotations
 
 import json as _json
+import math
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_tool_spark.operators.errors import ERROR_COL, ORIG_COL, POS_COL, SEQ_COL
@@ -187,6 +188,24 @@ def _morton_range_bounds(bounds: list[list[float]], k: int,
     return [int(cells[min(i, len(cells) - 1)]) for i in idx]
 
 
+def _count_le(values: list, v: Column) -> Column:
+    """#{x in values: x <= v} for SORTED ``values`` (duplicates allowed)
+    as an int Column; 0 for a null ``v``. A two-level block search over
+    blocks of ceil(√n): count the block ends <= v, slice the one block
+    that count points at, and count within it — exact, since the coarse
+    count m proves the first m blocks <= v and everything past block m's
+    end > v. O(√n) array comparisons per row instead of n."""
+    if not values:
+        return F.lit(0)
+    blk = math.isqrt(len(values) - 1) + 1
+    arr = F.array(*[F.lit(x) for x in values])
+    ends = F.array(*[F.lit(values[e])
+                     for e in range(blk - 1, len(values), blk)])
+    m = F.size(F.filter(ends, lambda x: x <= v))
+    return m * blk + F.size(F.filter(F.slice(arr, m * blk + 1, blk),
+                                     lambda x: x <= v))
+
+
 def _zorder(df: DataFrame, cols: list[str], n_partitions=None) -> DataFrame:
     """Multi-dimensional clustering (Delta OPTIMIZE ZORDER analogue):
     map each numeric column to a 256-bucket quantile rank, interleave
@@ -222,35 +241,16 @@ def _zorder(df: DataFrame, cols: list[str], n_partitions=None) -> DataFrame:
     # morton expression reads it 2^Z_BITS times, and CollapseProject
     # keeps a non-cheap expression with multiple references in its own
     # project, so the rank scan runs ONCE per row per column instead of
-    # once per extracted bit.
-    #
-    # The rank itself is a TWO-LEVEL block search instead of one linear
-    # 255-comparison filter: count the coarse boundaries (every 16th)
-    # <= v, slice the 16-entry block that count points at, and count
-    # within it — cnt(v) = #{i: bs[i] <= v} exactly (bs sorted, so the
-    # coarse count m proves the first 16m entries <= v and everything
-    # past block m's end > v, duplicates included). ~32 interpreted
-    # array comparisons per row per column instead of 255, and this
-    # expression is the per-row cost of BOTH data passes below —
-    # repartitionByRange's range sampling and the shuffle itself
-    # (guide §1.2 per-task work; measured 1.25 s/pass → 0.2 s/pass on
-    # the 100k-row bench table).
-    blk = 16  # 16 blocks of 16 over the 255 boundaries
+    # once per extracted bit. The rank is _count_le's block search:
+    # ~32 array comparisons per row per column instead of 255, and the
+    # per-row cost of BOTH data passes below — the range bucket and the
+    # shuffle itself (guide §1.2 per-task work; measured 1.25 s/pass →
+    # 0.2 s/pass on the 100k-row bench table).
     out = df
     for i, (c, bs) in enumerate(zip(casted, bounds)):
-        if not bs:  # no non-null value: every row ranks 0, like a null
-            out = out.withColumn(f"_zb{i}", F.lit(0).cast("bigint"))
-            continue
-        arr = F.array(*[F.lit(b) for b in bs])
-        coarse = F.array(*[F.lit(bs[blk * (j + 1) - 1])
-                           for j in range(len(bs) // blk)])
-        m = F.size(F.filter(coarse, lambda b: b <= c))
-        cnt = (m * blk + F.size(F.filter(F.slice(arr, m * blk + 1, blk),
-                                         lambda b: b <= c)))
-        # bucket = number of boundaries <= value (0..256); null -> 0
-        out = out.withColumn(f"_zb{i}",
-                             F.when(c.isNull(), F.lit(0)).otherwise(cnt)
-                             .cast("bigint"))
+        # bucket = number of boundaries <= value (0..256); a null, or a
+        # column with no non-null value, ranks 0
+        out = out.withColumn(f"_zb{i}", _count_le(bs, c).cast("bigint"))
     morton = F.lit(0).cast("bigint")
     for i in range(k):
         bucket = F.col(f"_zb{i}")
@@ -282,12 +282,7 @@ def _zorder(df: DataFrame, cols: list[str], n_partitions=None) -> DataFrame:
         out = out.repartitionByRange(n, "_zorder")
     else:
         tokens = _partition_tokens(n)
-        if mb:
-            mb_arr = F.array(*[F.lit(b).cast("bigint") for b in mb])
-            zpart = F.size(F.filter(mb_arr,
-                                    lambda b: b <= F.col("_zorder")))
-        else:
-            zpart = F.lit(0)
+        zpart = _count_le(mb, F.col("_zorder"))
         tok = F.element_at(F.array(*[F.lit(t) for t in tokens]), zpart + 1)
         out = (out.withColumn("_ztok", tok)
                   .repartition(n, F.col("_ztok")).drop("_ztok"))

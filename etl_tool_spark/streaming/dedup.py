@@ -1,22 +1,29 @@
 """Ingest gates and near-dup streams over persistent dedup stores.
 
-The near-dup, clean and semantic gates land a micro-batch through one
-skeleton, ``_gate``, and differ only in three hooks:
+Every gate — exact, near-dup, clean, semantic and token-budget — lands a
+micro-batch through one skeleton, ``_gate``, and differs only in its
+landed columns and three hooks:
 
-  stage()          writes the batch derivation once, under
-                   ``<store>/gate-staging``, and returns the frame to
-                   gate (file-backed when the family stages here);
-  pairs(gated)     that frame's near-dup pairs (a < b) against the store;
+  stage()          the frame to gate: the exact gate's unseen
+                   fingerprints, the budget gate's admitted documents,
+                   or (near, clean) the batch derivation written once
+                   under ``<store>/gate-staging`` and read back;
+  pairs(gated)     that frame's near-dup pairs (a < b) against the store,
+                   for the keep-earliest drop policy; None for a family
+                   with no pair stage (exact, budget);
   append(survivors, batch_id)
                    writes the survivors' keys for every store table into
-                   the batch's stage (``store.stage_appends``).
+                   the batch's stage (``store.stage_appends``; the exact
+                   gate's ``_fp`` table); None for a family with no store
+                   table (budget, whose store holds only markers).
 
 The skeleton owns everything else, in this order: store recovery and
 the ``_applied/<batch_id>`` check (a replay of a fully-applied batch is
-a no-op), the keep-earliest drop policy (``_gate_survivors``) under a
-lazy ``localCheckpoint``, the landing of the survivors in ``out_dir``
-BEFORE ``append``, the commit, then the release of the checkpoint
-blocks and of the staging directory.
+a no-op), the drop policy (``_gate_survivors``), a lazy
+``localCheckpoint`` of the survivors when ``append`` reads them a second
+time, the landing of the survivors in ``out_dir`` BEFORE ``append``, the
+commit, then the release of the checkpoint blocks and of the staging
+directory.
 
 Crash contract. Publishing ``_applied/<batch_id>`` (etl_tool_spark.commit)
 is both the batch marker and the manifest of the batch's stage, so all
@@ -29,10 +36,6 @@ of a batch's store tables become visible at once or not at all:
 * after the publish (mid-promote included), the next store open
   finishes the promote and the replay is a no-op.
 
-The exact gate (``land_batch``) and the token-budget gate
-(``land_budget_batch``) have no pair stage; they keep the same marker
-and write order by hand.
-
 Every ``*_stream`` function runs its per-batch function through
 ``events.stream_foreach_batch`` (foreachBatch + checkpoint, availableNow
 trigger). The pair-REPORT stream (``near_dedup_stream``) is plain
@@ -44,11 +47,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from etl_tool_spark import commit as C
-from etl_tool_spark.llm.dedup import (incremental_exact_dedup,
-                                      incremental_minhash_pairs)
-from etl_tool_spark.llm.text import fingerprint
+from etl_tool_spark.llm.dedup import _exact_survivors, incremental_minhash_pairs
 from etl_tool_spark.streaming.events import stream_foreach_batch
 
 __all__ = ["near_dedup_stream", "exact_dedup_stream",
@@ -81,16 +83,13 @@ def land_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     the replay drop the batch silently. The fingerprints are staged and
     published with the batch marker (module docstring), so a replay of
     a fully-applied batch is a no-op."""
-    if _applied(store_dir, batch_id):
-        return
-    fresh = incremental_exact_dedup(batch_df, store_dir,
-                                    id_col=id_col, text_col=text_col,
-                                    update_store=False)
-    (fresh.withColumn("batch_id", F.lit(batch_id))
-          .write.mode("append").parquet(out_dir))
-    (fresh.select(fingerprint(F.col(text_col)).alias("_fp"))
-          .write.parquet(C.begin(store_dir, batch_id)))
-    C.commit(store_dir, batch_id)
+    def append(survivors: DataFrame, batch_id: int) -> None:
+        survivors.select("_fp").write.parquet(C.begin(store_dir, batch_id))
+
+    _gate(batch_id, store_dir, out_dir, id_col, batch_df.columns,
+          stage=lambda: _exact_survivors(batch_df, store_dir, text_col,
+                                         id_col),
+          append=append)
 
 
 def _quality_filter(docs: DataFrame, text_col: str,
@@ -207,30 +206,37 @@ def _gate_survivors(batch_df: DataFrame, pairs: DataFrame,
     return batch_df.join(drops, id_col, "left_anti")
 
 
-def _gate(batch_df: DataFrame, batch_id: int, store_dir: str,
-          out_dir: str, id_col: str, stage: Callable[[], DataFrame],
-          pairs: Callable[[DataFrame], DataFrame],
-          append: Callable[[DataFrame, int], None]) -> None:
+def _gate(batch_id: int, store_dir: str, out_dir: str, id_col: str,
+          land_cols: list[str], stage: Callable[[], DataFrame],
+          pairs: Callable[[DataFrame], DataFrame] | None = None,
+          append: Callable[[DataFrame, int], None] | None = None) -> None:
     """Land one batch through a family's hooks (module docstring). The
-    landing keeps ``batch_df``'s columns; hook columns of the gated
-    frame (staged hashes, band keys) are dropped from it."""
+    landing keeps ``land_cols`` of the survivors; the other columns of
+    the gated frame (staged hashes, band keys, fingerprints) feed only
+    ``append``."""
+    from etl_tool_spark.llm.graph import release_checkpoint
+
     if _applied(store_dir, batch_id):
         return
     gated = stage()
-    # lazy checkpoint: the landing write materializes the gate join once
-    # and the store append reads the SAME batch-sized blocks — never a
-    # recompute, and never a re-scan of the whole (ever-growing) out_dir
-    # to recover ids this batch computed
-    survivors = _gate_survivors(gated, pairs(gated), id_col) \
-        .localCheckpoint(eager=False)
-    (survivors.drop(*[c for c in survivors.columns
-                      if c not in batch_df.columns])
-              .withColumn("batch_id", F.lit(batch_id))
-              .write.mode("append").parquet(out_dir))
-    append(survivors, batch_id)
-    C.commit(store_dir, batch_id)
-    from etl_tool_spark.llm.graph import release_checkpoint
-    release_checkpoint(survivors)  # release batch blocks; streams run forever
+    survivors = (gated if pairs is None
+                 else _gate_survivors(gated, pairs(gated), id_col))
+    if append is not None:
+        # lazy checkpoint: the landing write materializes the gate once
+        # and the store append reads the SAME batch-sized blocks — never
+        # a recompute, and never a re-scan of the whole (ever-growing)
+        # out_dir to recover ids this batch computed
+        survivors = survivors.localCheckpoint(eager=False)
+    try:
+        (survivors.select(*land_cols)
+                  .withColumn("batch_id", F.lit(batch_id))
+                  .write.mode("append").parquet(out_dir))
+        if append is not None:
+            append(survivors, batch_id)
+        C.commit(store_dir, batch_id)
+    finally:
+        if append is not None:
+            release_checkpoint(survivors)  # streams run forever
     C.delete(f"{store_dir}/{_STAGING}")
 
 
@@ -268,23 +274,22 @@ def _minhash_hooks(batch_df: DataFrame, store_dir: str, id_col: str,
     def stage() -> DataFrame:
         nonlocal probe
         n = _check_store_layout(store_dir)
-        src = (incremental_exact_dedup(batch_df, fp_dir, id_col=id_col,
-                                       text_col=text_col, update_store=False)
+        # the clean gate's src carries the fingerprint as _fp
+        src = (_exact_survivors(batch_df, fp_dir, text_col, id_col)
                if exact else batch_df)
-        fused = src.withColumn("_hs", shingle_hashes(F.col(text_col),
-                                                     shingle_n))
-        if exact:
-            fused = fused.withColumn("_fp", fingerprint(F.col(text_col)))
-        fused = (fused.withColumn("_sig", minhash_from_hashes_vec(
-                          F.col("_hs"), num_hashes))
-                      .withColumn("_bands", _band_bucket_array(
-                          F.col("_sig"), num_hashes, bands))
-                      .drop("_sig"))
+        fused = (src.withColumn("_hs", shingle_hashes(F.col(text_col),
+                                                      shingle_n))
+                    .withColumn("_sig", minhash_from_hashes_vec(
+                        F.col("_hs"), num_hashes))
+                    .withColumn("_bands", _band_bucket_array(
+                        F.col("_sig"), num_hashes, bands))
+                    .drop("_sig"))
         observed, resolve = _store.fused_probe_observation(
             fused, _store.shard_array(F.col("_bands"), n, with_index=True), n)
         observed.write.mode("overwrite").parquet(staging)
         probe = resolve()
-        return batch_df.sparkSession.read.parquet(staging)
+        return batch_df.sparkSession.read.schema(fused.schema) \
+            .parquet(staging)
 
     def pairs(staged: DataFrame) -> DataFrame:
         return incremental_minhash_pairs(
@@ -325,7 +330,7 @@ def land_near_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     visible with the batch marker, so a store copy never flags its own
     replay. A document a LATER batch re-sends under a stored id pairs
     with its stored copy as (id, id) and drops like any near-dup."""
-    _gate(batch_df, batch_id, store_dir, out_dir, id_col,
+    _gate(batch_id, store_dir, out_dir, id_col, batch_df.columns,
           *_minhash_hooks(batch_df, store_dir, id_col, text_col,
                           minhash_kwargs, exact=False))
 
@@ -357,9 +362,14 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     the store (llm/similarity.py incremental store). Same crash
     contract as land_near_batch."""
     from etl_tool_spark.llm import store as _store
-    from etl_tool_spark.llm.similarity import incremental_embedding_pairs
+    from etl_tool_spark.llm.similarity import (_norm_frame,
+                                               incremental_embedding_pairs)
 
     staging = f"{store_dir}/{_STAGING}"
+    # the schema of the staged (id, vector, _norm, _bkts) table
+    staged_schema = StructType(
+        _norm_frame(batch_df, id_col, vec_col).schema.fields
+        + [StructField("_bkts", ArrayType(StringType()))])
 
     def pairs(gated: DataFrame) -> DataFrame:
         # norms + sign projections + band keys stage in ONE fused write
@@ -372,7 +382,8 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
 
     def append(survivors: DataFrame, batch_id: int) -> None:
         landed_ids = survivors.select(id_col).distinct()
-        staged = batch_df.sparkSession.read.parquet(staging)
+        staged = batch_df.sparkSession.read.schema(staged_schema) \
+            .parquet(staging)
         _store.stage_appends(
             store_dir, batch_id,
             {"vec": staged.select(id_col, vec_col, "_norm")
@@ -381,7 +392,7 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
                   .join(landed_ids, id_col),
             ["_bkt"])
 
-    _gate(batch_df, batch_id, store_dir, out_dir, id_col,
+    _gate(batch_id, store_dir, out_dir, id_col, batch_df.columns,
           stage=lambda: batch_df, pairs=pairs, append=append)
 
 
@@ -423,7 +434,7 @@ def land_clean_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     ``store_dir/bands`` minhash tables, ``store_dir/_applied`` batch
     markers; a batch's fp/, sig/ and bands/ rows commit together with
     its marker (module docstring)."""
-    _gate(batch_df, batch_id, store_dir, out_dir, id_col,
+    _gate(batch_id, store_dir, out_dir, id_col, batch_df.columns,
           *_minhash_hooks(batch_df, store_dir, id_col, text_col,
                           minhash_kwargs, exact=True))
 
@@ -467,37 +478,42 @@ def land_budget_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     itself is a pure function of the batch content, so at-least-once
     replays of an unmarked batch land the same rows (collapse on
     batch_id)."""
+    from etl_tool_spark.llm.graph import release_checkpoint
     from etl_tool_spark.llm.text import quality_features, token_count, tokens
     from etl_tool_spark.operators.globalorder import budget_select
 
     if (token_quota is None) == (quota_frac is None):
         raise ValueError("pass exactly one of token_quota / quota_frac")
-    if _applied(store_dir, batch_id):
-        return
-    base = batch_df.select("*", tokens(F.col(text_col)).alias("_toks"))
-    feats = quality_features(F.col(text_col), toks=F.col("_toks"))
-    scored = base.select("*", feats["quality_score"].alias("_q"),
-                         token_count(F.col(text_col)).alias("_nt")) \
-                 .drop("_toks")
-    # the scored frame feeds the quota total, the band summary, and the
-    # offset join-back — a lazy checkpoint runs the tokenize+quality
-    # pass once instead of once per reference
-    scored = scored.localCheckpoint(eager=False)
-    if quota_frac is not None:
-        total = scored.agg(F.sum("_nt").alias("_total"))
-        scored = scored.crossJoin(F.broadcast(total))
-        budget = F.col("_total") * quota_frac
-    else:
-        budget = F.lit(token_quota)
-    sel = budget_select(scored, band="_q",
-                        intra_order=[F.col(id_col).asc()],
-                        weight="_nt", budget=budget, cum_out="_cum")
-    (sel.drop("_cum", "_total")
-        .withColumnRenamed("_q", "quality_score")
-        .withColumnRenamed("_nt", "n_tokens")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("append").parquet(out_dir))
-    C.commit(store_dir, batch_id)
+    scored = None
+
+    def stage() -> DataFrame:
+        nonlocal scored
+        base = batch_df.select("*", tokens(F.col(text_col)).alias("_toks"))
+        feats = quality_features(F.col(text_col), toks=F.col("_toks"))
+        # the scored frame feeds the quota total, the band summary, and
+        # the offset join-back — a lazy checkpoint runs the
+        # tokenize+quality pass once instead of once per reference
+        scored = (base.select("*",
+                              feats["quality_score"].alias("quality_score"),
+                              token_count(F.col(text_col)).alias("n_tokens"))
+                      .drop("_toks").localCheckpoint(eager=False))
+        if quota_frac is None:
+            ranked, budget = scored, F.lit(token_quota)
+        else:
+            ranked = scored.crossJoin(F.broadcast(
+                scored.agg(F.sum("n_tokens").alias("_total"))))
+            budget = F.col("_total") * quota_frac
+        return budget_select(ranked, band="quality_score",
+                             intra_order=[F.col(id_col).asc()],
+                             weight="n_tokens", budget=budget,
+                             cum_out="_cum")
+
+    try:
+        _gate(batch_id, store_dir, out_dir, id_col,
+              batch_df.columns + ["quality_score", "n_tokens"], stage)
+    finally:
+        if scored is not None:
+            release_checkpoint(scored)
 
 
 def budget_ingest_stream(docs: DataFrame, store_dir: str, out_dir: str,

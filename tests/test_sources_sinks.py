@@ -415,6 +415,43 @@ def test_zorder_explicit_partitioner(spark, tmp_path):
     assert len(jobs) <= 4, f"z-order write ran {len(jobs)} jobs (sampling back?)"
 
 
+@pytest.mark.parametrize("n", [0, 1, 255, 1023])
+def test_count_le_matches_searchsorted(spark, n):
+    """_count_le, the z-order rank and partition-id search, equals
+    numpy.searchsorted(side="right") on a sorted list with duplicates,
+    for probes at, between and outside its values; a null counts 0."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from etl_tool_spark.sources.sinks import _count_le
+
+    rng = np.random.default_rng(n)
+    values = sorted(float(v) for v in rng.integers(0, n // 3 + 1, n))
+    probes = sorted({p for v in set(values) for p in (v - 0.5, v, v + 0.5)}
+                    | {-1e9, 1e9})
+    df = spark.createDataFrame([(p,) for p in probes] + [(None,)],
+                               "v double")
+    got = {r.v: r.c for r in
+           df.select("v", _count_le(values, F.col("v")).alias("c")).collect()}
+    want = np.searchsorted(np.asarray(values), probes, side="right")
+    assert [got[p] for p in probes] == want.tolist()
+    assert got[None] == 0
+
+
+def test_zorder_write_1024_partitions(spark, tmp_path):
+    """A zorderBy write with sortPartitions 1024 (each row's partition
+    id searches 1023 morton bounds) keeps every row and spreads them
+    over most of the partitions."""
+    import glob
+
+    rows = [(x, (x * 37) % 64) for x in range(4096)]
+    out = str(tmp_path / "z1024")
+    write_sink(spark.createDataFrame(rows, "x long, y long"), "parquet", out,
+               {"zorderBy": ["x", "y"], "sortPartitions": 1024})
+    assert sorted(map(tuple, spark.read.parquet(out).collect())) == rows
+    assert len(glob.glob(out + "/part-*")) > 512
+
+
 def test_zorder_sortby_exclusive(spark, tmp_path):
     df = spark.createDataFrame([(1, 2)], "x long, y long")
     with pytest.raises(SinkError):

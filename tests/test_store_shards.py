@@ -460,3 +460,104 @@ def test_fused_probe_matches_exploded_probe(spark, tmp_path):
         32)
     observed3.write.mode("overwrite").parquet(str(tmp_path / "fused3"))
     assert resolve3() == ([], 0)
+
+
+class _Crash(Exception):
+    """A crash injected at one write boundary of a store append."""
+
+
+def _crash_append_at(monkeypatch, point):
+    """Make the next store append crash at ``point`` by patching the
+    parquet writer or the commit module: ``stage`` right after the
+    stage write, ``publish`` after the manifest's publish and before
+    the promote, ``promote`` after the promote's first file move."""
+    from pyspark.sql import DataFrameWriter
+
+    from etl_tool_spark import commit as C
+
+    if point == "stage":
+        write = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **k):
+            write(self, path, *a, **k)
+            if "/_stage/" in path:
+                raise _Crash(point)
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    elif point == "publish":
+        def promote(manifest):
+            raise _Crash(point)
+        monkeypatch.setattr(C, "promote", promote)
+    else:
+        move = C._move
+
+        def move_once(*a):
+            move(*a)
+            raise _Crash(point)
+        monkeypatch.setattr(C, "_move", move_once)
+
+
+def _store_append(spark, kind):
+    """(setup, append, table) of one store append that commits through
+    etl_tool_spark.commit: ``setup(root)`` writes the store's first
+    batch, ``append(root)`` its second, and the batch lands in the
+    ``table`` directory under ``root``."""
+    from etl_tool_spark.llm import similarity as S
+
+    if kind in ("exact", "paragraph"):
+        fn = (D.incremental_exact_dedup if kind == "exact"
+              else D.incremental_paragraph_dedup)
+        b1 = spark.createDataFrame([(1, "aaa\nbbb"), (2, "bbb")],
+                                   "doc_id long, text string")
+        b2 = spark.createDataFrame(
+            [(3, "ccc\naaa"), (4, "bbb"), (5, "ddd\neee")],
+            "doc_id long, text string")
+        return lambda r: fn(b1, r), lambda r: fn(b2, r), ""
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
+         for i in range(40)], "vec_id long, embedding array<double>")
+    old, new = vecs.filter(F.col("vec_id") < 24), vecs.filter(
+        F.col("vec_id") >= 24)
+    if kind == "ivf":
+        return (lambda r: S.ivf_build_index(old, r, nlist=4),
+                lambda r: S.ivf_append_index(new, r), "vectors")
+    return (lambda r: S.pq_build_index(old, r, m=4, ksub=8),
+            lambda r: S.pq_append_index(new, r), "codes")
+
+
+@pytest.mark.parametrize("point", ["stage", "publish", "promote"])
+@pytest.mark.parametrize("kind", ["exact", "paragraph", "ivf", "pq"])
+def test_store_append_crash_is_all_or_nothing(spark, tmp_path, monkeypatch,
+                                              kind, point):
+    """An update-store or index append that crashes at a write boundary
+    shows, at the next open, none of its batch (before the publish) or
+    all of it exactly once (after the publish, mid-promote included) —
+    never part of it. A replay of a fingerprint-store append after any
+    crash, and of any append crashed before the publish, leaves the
+    store equal to a clean run."""
+    from etl_tool_spark import commit as C
+
+    setup, append, table = _store_append(spark, kind)
+
+    def rows(root):
+        C.recover(root)  # what the next open of the store does
+        return sorted(map(str, spark.read.parquet(
+            os.path.join(root, table)).collect()))
+
+    clean = str(tmp_path / "clean")
+    setup(clean)
+    before = rows(clean)
+    append(clean)
+    after = rows(clean)
+    assert len(after) > len(before) and len(set(after)) == len(after)
+
+    root = str(tmp_path / "store")
+    setup(root)
+    with monkeypatch.context() as m:
+        _crash_append_at(m, point)
+        with pytest.raises(_Crash):
+            append(root)
+    assert rows(root) == (before if point == "stage" else after)
+    if kind in ("exact", "paragraph") or point == "stage":
+        append(root)                            # the replay
+        assert rows(root) == after
+    assert not C.ls(os.path.join(root, "_stage", "*"))

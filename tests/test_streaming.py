@@ -1001,6 +1001,32 @@ def test_budget_ingest_stream_matches_fold(spark, tmp_path):
     landed.unpersist(); fold.unpersist(); docs.unpersist()
 
 
+@pytest.mark.parametrize("gate", ["budget_frac", "budget_quota", "exact"])
+def test_gate_batches_release_checkpoints(spark, tmp_path, gate):
+    """Gate batches leave no persisted RDD behind: the budget gate's
+    scored frame and the exact gate's survivors are released after each
+    batch, not when JVM garbage collection gets to them — a stream runs
+    forever."""
+    from etl_tool_spark.streaming import dedup as G
+
+    land = {
+        "budget_frac": lambda b, i, s, o: G.land_budget_batch(
+            b, i, s, o, quota_frac=0.5),
+        "budget_quota": lambda b, i, s, o: G.land_budget_batch(
+            b, i, s, o, token_quota=500),
+        "exact": G.land_batch,
+    }[gate]
+    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+                 .limit(90).select("doc_id", "text"))
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    for i in range(3):
+        land(docs.filter(F.col("doc_id") % 3 == i), i,
+             str(tmp_path / "store"), str(tmp_path / "landed"))
+    assert spark.read.parquet(str(tmp_path / "landed")).count() > 0
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
 def test_incremental_mv_deltas_match_recompute(spark, tmp_path):
     """operators/mv.py:update_agg_mv across three batches with the hard
     cases: a key UPDATED into a different group (mass must migrate), a
