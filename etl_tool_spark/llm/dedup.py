@@ -104,9 +104,7 @@ def _seen(spark, store_dir: str, col: str) -> DataFrame | None:
 
 
 def _remember(fps: DataFrame, store_dir: str) -> None:
-    """Append ``fps`` to a fingerprint store as one commit: none of the
-    batch is visible until its manifest is published, and all of it is
-    after the next ``_seen``."""
+    """Append ``fps`` to a fingerprint store as one commit."""
     fps.write.parquet(C.begin(store_dir, "append"))
     C.commit(store_dir, "append", keep=False)
 
@@ -873,6 +871,13 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     marked = (paras.join(keeper, "_para")
                    .withColumn("_keep",
                                F.struct("_id", "_pos") == F.col("_k")))
+    return _restitch(marked, id_col, text_col, sep)
+
+
+def _restitch(marked: DataFrame, id_col: str, text_col: str,
+              sep: str) -> DataFrame:
+    """Rebuild each document from its ``_keep`` paragraphs in position
+    order, with its kept and dropped paragraph counts."""
     return (marked.groupBy("_id")
             .agg(F.array_join(
                      F.transform(
@@ -931,16 +936,4 @@ def incremental_paragraph_dedup(new_df: DataFrame, store_dir: str,
         marked = marked.withColumn("_keep", F.col("_first"))
     if update_store:
         _remember(marked.filter(F.col("_keep")).select("_pfp"), store_dir)
-    return (marked.groupBy("_id")
-            .agg(F.array_join(
-                     F.transform(
-                         F.array_sort(F.collect_list(
-                             F.when(F.col("_keep"),
-                                    F.struct("_pos", "_para")))),
-                         lambda x: x["_para"]),
-                     sep).alias(text_col),
-                 F.sum(F.when(F.col("_keep"), 1).otherwise(0))
-                  .alias("n_kept"),
-                 F.sum(F.when(~F.col("_keep"), 1).otherwise(0))
-                  .alias("n_dropped"))
-            .withColumnRenamed("_id", id_col))
+    return _restitch(marked, id_col, text_col, sep)

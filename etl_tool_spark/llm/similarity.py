@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_tool_spark import commit as C
 from etl_tool_spark.llm.text import hash64
 from etl_tool_spark.operators.skew import verify_spread
 
@@ -486,7 +487,6 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 5,
     partitions via dynamic partition pruning."""
     from pyspark.sql import Window
 
-    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
     centroids = _ivf_read_centroids(spark, base)
@@ -526,10 +526,8 @@ def ivf_append_index(new_df: DataFrame, index_dir: str,
     quantizer drifts as the corpus grows, so monitor ivf_cell_stats and
     rebuild via ivf_build_index when cell imbalance degrades recall —
     appends never mutate existing files, so a rebuild can run alongside
-    reads and swap in atomically. Each append is one commit
-    (etl_tool_spark.commit): a crash leaves none of the batch visible
-    or, once its manifest is published, all of it at the next open."""
-    from etl_tool_spark import commit as C
+    reads and swap in atomically. Each append commits whole
+    (etl_tool_spark.commit)."""
     base = index_dir.rstrip("/")
     C.recover(base)
     centroids = _ivf_read_centroids(new_df.sparkSession, base)
@@ -546,7 +544,6 @@ def ivf_cell_stats(spark, index_dir: str) -> DataFrame:
     trigger (a cell holding a large corpus fraction means probes scan
     too much; many near-empty cells mean wasted nlist). Reads only
     partition metadata + counts; one aggregate over the index."""
-    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
     return (spark.read.parquet(f"{base}/vectors")
@@ -1210,7 +1207,6 @@ def pq_search(spark, index_dir: str, corpus: DataFrame, queries: DataFrame,
     shortlist rows for the exact re-rank."""
     from pyspark.sql import Window
 
-    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
     books = _pq_read_codebooks(spark, base)
@@ -1232,7 +1228,6 @@ def pq_append_index(new_df: DataFrame, index_dir: str,
     the quantizer drifts as the corpus distribution shifts, so rebuild
     via pq_build_index when shortlist recall degrades; appends never
     mutate existing files and each one commits whole."""
-    from etl_tool_spark import commit as C
     base = index_dir.rstrip("/")
     C.recover(base)
     books = _pq_read_codebooks(new_df.sparkSession, base)

@@ -175,8 +175,7 @@ def append_and_pin(table: DataFrame, store_dir: str, table_name: str,
     stage = C.begin(store_dir, "append")
     # a flat write leaves at least one (schema-only) part file
     table.write.parquet(f"{stage}/{table_name}")
-    # every re-read passes the schema just written: an unschema'd read
-    # runs a schema-inference job
+    # schema'd re-reads: an unschema'd read runs an inference job
     reader = spark.read.schema(table.schema)
     banded = band(reader.parquet(f"{stage}/{table_name}"))
     resolve = _write_bands(banded, f"{stage}/bands", key_cols, n,

@@ -4,17 +4,13 @@ Every gate — exact, near-dup, clean, semantic and token-budget — lands a
 micro-batch through one skeleton, ``_gate``, and differs only in its
 landed columns and three hooks:
 
-  stage()          the frame to gate: the exact gate's unseen
-                   fingerprints, the budget gate's admitted documents,
-                   or (near, clean) the batch derivation written once
-                   under ``<store>/gate-staging`` and read back;
-  pairs(gated)     that frame's near-dup pairs (a < b) against the store,
-                   for the keep-earliest drop policy; None for a family
-                   with no pair stage (exact, budget);
+  stage()          the frame to gate (near, clean: written once under
+                   ``<store>/gate-staging`` and read back);
+  pairs(gated)     its near-dup pairs (a < b) against the store; None
+                   for a family with no pair stage (exact, budget);
   append(survivors, batch_id)
                    writes the survivors' keys for every store table into
-                   the batch's stage (``store.stage_appends``; the exact
-                   gate's ``_fp`` table); None for a family with no store
+                   the batch's stage; None for a family with no store
                    table (budget, whose store holds only markers).
 
 The skeleton owns everything else, in this order: store recovery and
@@ -47,7 +43,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from etl_tool_spark import commit as C
 from etl_tool_spark.llm.dedup import _exact_survivors, incremental_minhash_pairs
@@ -63,26 +58,14 @@ __all__ = ["near_dedup_stream", "exact_dedup_stream",
 _STAGING = "gate-staging"
 
 
-def _applied(store_dir: str, batch_id: int) -> bool:
-    """Open the store (finishing any published stage) and check the
-    batch's marker: one listing of pending stages plus one stat call,
-    never a scan of the growing store or of all markers. A bare empty
-    marker file written by earlier code reads as applied too."""
-    C.recover(store_dir)
-    return C.exists(C.marker(store_dir, batch_id))
-
-
 def land_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
                out_dir: str, id_col: str = "doc_id",
                text_col: str = "text") -> None:
-    """Dedup one batch against the fingerprint store and land the
-    survivors — out_dir FIRST, store second. The only intermediate
-    state a crash can leave is landed-but-not-remembered, which a
-    replay turns into a duplicate landing (at-least-once); the reverse
-    order's intermediate state (remembered-but-not-landed) would make
-    the replay drop the batch silently. The fingerprints are staged and
-    published with the batch marker (module docstring), so a replay of
-    a fully-applied batch is a no-op."""
+    """Exact ingest gate for one batch: land each fingerprint's
+    lowest-id row unless the fingerprint store has seen it, then stage
+    the landed fingerprints with the batch marker (module docstring).
+    Landing first means a crash can duplicate a landing, never drop one:
+    the reverse order would find the fingerprints stored on replay."""
     def append(survivors: DataFrame, batch_id: int) -> None:
         survivors.select("_fp").write.parquet(C.begin(store_dir, batch_id))
 
@@ -136,16 +119,8 @@ def exact_dedup_stream(docs: DataFrame, store_dir: str, out_dir: str,
     """Streaming exact dedup-on-ingest: each micro-batch keeps only
     documents whose normalized text was never seen (across ALL prior
     batches, via the persistent fingerprint store) and appends the
-    survivors to ``out_dir`` — the always-deduped landing zone. Same
-    at-least-once/foreachBatch semantics as near_dedup_stream.
-
-    Write ORDER is the crash-safety contract: survivors land in
-    ``out_dir`` BEFORE their fingerprints reach the store (see
-    land_batch). A crash in the window between the two writes makes the
-    replayed batch re-land the same rows (duplicates, keyed by batch_id
-    for consumers to collapse) — at-least-once. The reverse order would
-    find every fingerprint already stored on replay and silently drop
-    the whole batch: data loss, not duplication."""
+    survivors to ``out_dir`` — the always-deduped landing zone, under
+    the gates' crash contract (module docstring)."""
     return stream_foreach_batch(
         docs, lambda b, i: land_batch(b, i, store_dir, out_dir,
                                       id_col=id_col, text_col=text_col),
@@ -216,7 +191,10 @@ def _gate(batch_id: int, store_dir: str, out_dir: str, id_col: str,
     ``append``."""
     from etl_tool_spark.llm.graph import release_checkpoint
 
-    if _applied(store_dir, batch_id):
+    # open the store (finishing a published stage); a batch with a
+    # marker (a bare empty file included) is applied: the replay no-ops
+    C.recover(store_dir)
+    if C.exists(C.marker(store_dir, batch_id)):
         return
     gated = stage()
     survivors = (gated if pairs is None
@@ -366,10 +344,9 @@ def land_semantic_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
                                                incremental_embedding_pairs)
 
     staging = f"{store_dir}/{_STAGING}"
-    # the schema of the staged (id, vector, _norm, _bkts) table
-    staged_schema = StructType(
-        _norm_frame(batch_df, id_col, vec_col).schema.fields
-        + [StructField("_bkts", ArrayType(StringType()))])
+    staged_schema = (_norm_frame(batch_df, id_col, vec_col)
+                     .withColumn("_bkts", F.lit(None).cast("array<string>"))
+                     .schema)
 
     def pairs(gated: DataFrame) -> DataFrame:
         # norms + sign projections + band keys stage in ONE fused write
@@ -490,9 +467,8 @@ def land_budget_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
         nonlocal scored
         base = batch_df.select("*", tokens(F.col(text_col)).alias("_toks"))
         feats = quality_features(F.col(text_col), toks=F.col("_toks"))
-        # the scored frame feeds the quota total, the band summary, and
-        # the offset join-back — a lazy checkpoint runs the
-        # tokenize+quality pass once instead of once per reference
+        # feeds the quota total, the band summary and the offset
+        # join-back: checkpointed, the tokenize+quality pass runs once
         scored = (base.select("*",
                               feats["quality_score"].alias("quality_score"),
                               token_count(F.col(text_col)).alias("n_tokens"))
@@ -541,11 +517,9 @@ def crawl_ingest_stream(archives: DataFrame, store_dir: str, out_dir: str,
     language-routed, and passed through the exact dedup-on-ingest gate
     — survivors land in ``out_dir`` with (id, target_uri, lang, text),
     fingerprints in the persistent store, so a page crawled twice in
-    ANY later batch never lands twice. Composition of the archive
-    walker with land_batch's crash-safety contract: out_dir before
-    store, batch markers make replays no-ops, at-least-once in the
-    crash window (see land_batch). This is the Common Crawl ingest
-    loop as one availableNow stream."""
+    ANY later batch never lands twice, under the gates' crash contract
+    (module docstring). This is the Common Crawl ingest loop as one
+    availableNow stream."""
     from etl_tool_spark.llm.prep import html_to_text
     from etl_tool_spark.llm.text import language_id, tokens
     from etl_tool_spark.llm.warc import warc_records
